@@ -2,10 +2,11 @@
 """Benchmark harness: times every declared query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 COMPACT JSON line: {"metric", "value", "unit", "sf", "n_queries",
-"queries"} where "queries" holds only the 5 slowest (driver-parseable —
-round 1's full 148-entry map exceeded the driver's capture, BENCH_r01.json
-came back parsed:null). The full per-query map is always written to
-BENCH_DETAIL.json.
+"queries"} where "queries" holds the largest slowest-first prefix of the
+per-query map that keeps the line under $BENCH_LINE_BUDGET characters
+(default 1800; round 1's full 148-entry map overflowed the reader's line
+capture, BENCH_r01.json came back parsed:null). The full per-query map is always
+written to BENCH_DETAIL.json.
 
 Protocol (BASELINE.md): one shared SparkSession (JVM startup excluded),
 1 warm-up + N timed runs per query, per-query seconds = min of timed runs

@@ -108,8 +108,6 @@ def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
     )
     if not os.path.exists(dst):
         try:
-            import shutil
-
             os.makedirs(mdir, exist_ok=True)
             tbl = pq.read_table(src)
             tmp = f"{dst}.tmp{os.getpid()}"
@@ -125,11 +123,7 @@ def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
             for stale in glob.glob(os.path.join(mdir, f"{name}-*.parquet")):
                 if stale != dst:
                     try:
-                        if os.path.isdir(stale):
-                            # a directory mirror left by commit a1d5948
-                            shutil.rmtree(stale, ignore_errors=True)
-                        else:
-                            os.remove(stale)
+                        os.remove(stale)
                     except OSError:
                         pass
         except Exception:  # pragma: no cover - mirror is an optimization only

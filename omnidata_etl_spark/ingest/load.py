@@ -3,7 +3,16 @@
 Mirrors the reference's save flow (SURVEY.md §3.2): column selection
 (backend/index.js:167,:223), type mapping (:167-171), smart-id injection
 (:174-182), exists-check → error (:153-160), transactional batched insert
-(:186-236,:249-273).
+(:186-236,:249-273). Empty→NULL and the user casts are one projection.
+
+Surrogate key size rule: an input whose plan-time size is at most
+`ONE_TASK_MAX_BYTES` (8 MB) is read, sorted and numbered in ONE task —
+one Spark job. A larger input takes the two-phase distributed row_number
+(range shuffle into `default_parallelism()` tasks, parallel local sorts,
+broadcast per-partition offsets): more jobs, but the scan, parse, casts
+and sort run in parallel. The bound is a constant set from a measured
+crossover, not a session conf. Both paths give the same dense 1..N ids
+for a unique ordering key.
 
 Atomicity: Spark has no cross-partition transaction (SURVEY.md §7.3 #3), so
 the sink stages the whole write into a hidden directory and atomically
@@ -20,10 +29,10 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.ingest.types import map_user_type
+from omnidata_etl_spark.ingest.readers import empty_to_null
 
 
 class TableExistsError(RuntimeError):
@@ -35,22 +44,49 @@ def sanitize_identifier(name: str) -> str:
     return re.sub(r"[^a-zA-Z0-9_]", "", name or "").lower()
 
 
-def normalize_empty_to_null(df: DataFrame) -> DataFrame:
-    """Empty string → NULL on typed load (R10: the save path's behavior)."""
-    from pyspark.sql import types as T
-
-    return df.select(
-        *[
-            F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c)
-            if isinstance(field.dataType, T.StringType)
-            else F.col(c)
-            for c, field in zip(df.columns, df.schema.fields)
-        ]
-    )
-
-
 def has_id_column(df: DataFrame) -> bool:
     return any(c.lower() == "id" for c in df.columns)
+
+
+# Largest plan-time input size (optimized-plan `sizeInBytes` of the keyed
+# frame) that add_surrogate_key sorts in one task. Measured with typed CSV
+# loads on a 4-core host, each path forced, medians of 3: the two-phase
+# path costs ~1.0 s even at 3 MB (its job floor), while one task takes
+# ~0.5 s at 3 MB, ~1.1 s at 12.5 MB and breaks even with the parallel path
+# at 25-37 MB. Up to 8 MB one task beats that floor, which is job
+# scheduling, not data work, so more cores should not lower it (not
+# measured). The bound deliberately ignores session conf: the AQE advisory
+# size changes when catalog reads resize it.
+ONE_TASK_MAX_BYTES = 8 << 20
+
+
+def _fits_one_task(df: DataFrame) -> bool:
+    """Plan-time size of `df` at most ONE_TASK_MAX_BYTES. Below it, one
+    task's scan + sort costs less than the two-phase path's extra jobs. The
+    two-phase path itself is parallel (explicit `default_parallelism()`
+    range partitions, which AQE does not coalesce), so this trades its
+    parallelism for fewer jobs."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return int(str(size)) <= ONE_TASK_MAX_BYTES
+
+
+def _guarded_id(pos: str, as_long: bool) -> Column:
+    """`id` from the 1-based LONG position expression `pos`.
+
+    Arithmetic stays in LONG; the default int cast is guarded with an
+    explicit, actionable error: a >2^31-row load must not wrap (or die in
+    an opaque ANSI overflow) — SERIAL parity caps at INT_MAX by design, and
+    bigger loads opt into BIGSERIAL via as_long (r5 ADVICE on the
+    silent-wrap hazard)."""
+    if as_long:
+        return F.expr(pos).alias("id")
+    return F.expr(
+        f"CASE WHEN {pos} > 2147483647 THEN "
+        "raise_error('surrogate_key: row number exceeds INT_MAX "
+        "(SERIAL parity); use BIGSERIAL semantics upstream for "
+        ">2.1B-row loads') "
+        f"ELSE cast({pos} AS INT) END"
+    ).alias("id")
 
 
 def add_surrogate_key(
@@ -61,32 +97,55 @@ def add_surrogate_key(
     """Inject a dense 1..N `id` iff no case-insensitive `id` exists (R12,
     reference `backend/index.js:174-182` — `id SERIAL` when absent).
 
-    Two-phase distributed row_number, NOT a global `Window.orderBy` (that
-    form moves every row to one partition — the single-node sort is the
-    100 TB anti-pattern WindowExec itself warns about):
+    The path depends on the input's plan-time size (optimized-plan
+    `sizeInBytes`) against `ONE_TASK_MAX_BYTES` (see its comment):
 
-    1. range-partition on the ordering key (global order ACROSS partitions
-       is preserved; partition i's keys all sort before partition i+1's),
-    2. `row_number` within each partition (parallel local sorts),
-    3. add per-partition row-count offsets — one row per partition,
-       broadcast.
+    * **At most ONE_TASK_MAX_BYTES** — the input sorts in ONE task:
+      `coalesce(1)` → local sort → `monotonically_increasing_id() + 1`.
+      `coalesce(1)` has no shuffle, so the upstream scan, parse and casts
+      run in that task too. One job; no range-sampling job, exchange,
+      cache, offsets Window or broadcast join (each Spark job costs
+      ~30-100 ms locally, and the two-phase path below runs eight of them
+      for a 10k-row CSV). This gives up the two-phase path's parallelism
+      for fewer jobs, which pays only while the input is small.
+    * **Larger inputs** take the two-phase distributed row_number, NOT a
+      global `Window.orderBy` (that form moves every row to one partition —
+      the single-node sort is the 100 TB anti-pattern WindowExec itself
+      warns about):
 
-    For a unique ordering key the result is identical to the global window
-    regardless of where the range boundaries fall (a row's number is its
-    position in the total order). Ties that straddle a boundary get an
-    arbitrary-but-dense assignment — the same nondeterminism any ORDER BY
-    with ties has. Defaults to ordering by all columns, stable for
-    deduplicated loads. `id` stays int for reference `SERIAL` parity; past
-    INT_MAX the projection raises an explicit error (never wraps) — a
-    >2.1B-row load opts into BIGSERIAL semantics (long ids) upstream.
-    `as_long=True` IS that BIGSERIAL opt-in: long ids, no INT_MAX guard
-    (for consumers whose row space legitimately exceeds 2.1B, e.g.
-    etl_global_shuffle positions at corpus scale).
+      1. range-partition on the ordering key (global order ACROSS
+         partitions is preserved; partition i's keys all sort before
+         partition i+1's),
+      2. `row_number` within each partition (parallel local sorts),
+      3. add per-partition row-count offsets — one row per partition,
+         broadcast.
+
+    For a unique ordering key both paths give the global window's result (a
+    row's number is its position in the total order), regardless of where
+    range boundaries fall. Ties get an arbitrary-but-dense assignment — the
+    same nondeterminism any ORDER BY with ties has. Defaults to ordering by
+    all columns, stable for deduplicated loads. `id` stays int for
+    reference `SERIAL` parity; past INT_MAX the projection raises an
+    explicit error (never wraps) — a >2.1B-row load opts into BIGSERIAL
+    semantics (long ids) upstream. `as_long=True` IS that BIGSERIAL opt-in:
+    long ids, no INT_MAX guard (for consumers whose row space legitimately
+    exceeds 2.1B, e.g. etl_global_shuffle positions at corpus scale).
     """
     if has_id_column(df):
         return df
     order_cols = order_by or df.columns
     ocols = [F.col(c) for c in order_cols]
+    if _fits_one_task(df):
+        # One partition: monotonically_increasing_id() is the consecutive-
+        # from-0 record number over the sorted stream (partition id 0 in
+        # the upper bits).
+        return (
+            df.coalesce(1)
+            .sortWithinPartitions(*ocols)
+            .withColumn("_sk_rn", F.monotonically_increasing_id() + 1)
+            .withColumn("id", _guarded_id("_sk_rn", as_long))
+            .drop("_sk_rn")
+        )
     from omnidata_etl_spark.session import default_parallelism
 
     # Local row number WITHOUT a Window: a Window.partitionBy(pid) would
@@ -132,42 +191,13 @@ def add_surrogate_key(
         )
         .select("_sk_pid", "_sk_off")
     )
-    id_expr = (
-        (F.col("_sk_rn") + F.col("_sk_off")).alias("id")
-        if as_long
-        else F.expr(
-            "CASE WHEN _sk_rn + _sk_off > 2147483647 THEN "
-            "raise_error('surrogate_key: row number exceeds INT_MAX "
-            "(SERIAL parity); use BIGSERIAL semantics upstream for "
-            ">2.1B-row loads') "
-            "ELSE cast(_sk_rn + _sk_off AS INT) END"
-        ).alias("id")
-    )
     out = (
         numbered.join(F.broadcast(offsets), "_sk_pid")
-        # id arithmetic stays in LONG; the default int cast is guarded with
-        # an explicit, actionable error: a >2^31-row load must not wrap (or
-        # die in an opaque ANSI overflow) — SERIAL parity caps at INT_MAX
-        # by design, and bigger loads opt into BIGSERIAL via as_long
-        # (r5 ADVICE on the silent-wrap hazard).
-        .withColumn("id", id_expr)
+        .withColumn("id", _guarded_id("_sk_rn + _sk_off", as_long))
         .drop("_sk_pid", "_sk_rn", "_sk_off")
     )
     out._sk_cache = numbered  # handle for load()'s post-write unpersist
     return out
-
-
-def apply_types(df: DataFrame, types: dict[str, str] | None) -> DataFrame:
-    """ANSI (strict) casts from user-declared SQL type strings (R7)."""
-    if not types:
-        return df
-    cols = []
-    for c in df.columns:
-        if c in types:
-            cols.append(F.col(c).cast(map_user_type(types[c])).alias(c))
-        else:
-            cols.append(F.col(c))
-    return df.select(*cols)
 
 
 def load(
@@ -194,9 +224,7 @@ def load(
     if os.path.exists(target) and mode == "error":
         raise TableExistsError(f"table {name!r} already exists")
 
-    out = df.select(*columns) if columns else df
-    out = normalize_empty_to_null(out)
-    out = apply_types(out, types)
+    out = empty_to_null(df.select(*columns) if columns else df, types)
     if surrogate_key:
         out = add_surrogate_key(out, order_by)
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omnidata_etl_spark.ingest.types import map_user_type
 from omnidata_etl_spark.session import ensure_tuned
 
 
@@ -65,16 +66,22 @@ def _first_line(path: str) -> str:
     return ""
 
 
-def _empty_to_null(df: DataFrame) -> DataFrame:
-    """Empty-string → NULL normalization (R10)."""
-    return df.select(
-        *[
-            F.when(F.col(c) == "", None).otherwise(F.col(c)).alias(c)
-            if isinstance(f.dataType, T.StringType)
-            else F.col(c)
-            for c, f in zip(df.columns, df.schema.fields)
-        ]
-    )
+def empty_to_null(
+    df: DataFrame, types: dict[str, str] | None = None
+) -> DataFrame:
+    """Empty-string → NULL normalization (R10), with the typed load's ANSI
+    (strict) casts from user-declared SQL type strings (R7) fused into the
+    same projection — one `select`, so one analysis pass per load."""
+    types = types or {}
+    cols = []
+    for c, f in zip(df.columns, df.schema.fields):
+        col = F.col(c)
+        if isinstance(f.dataType, T.StringType):
+            col = F.when(col == "", None).otherwise(col)
+        if c in types:
+            col = col.cast(map_user_type(types[c]))
+        cols.append(col.alias(c))
+    return df.select(*cols)
 
 
 def read_delimited(
@@ -93,7 +100,7 @@ def read_delimited(
         .option("mode", "PERMISSIVE")  # short rows → nulls, like the save path
         .csv(path)
     )
-    return _empty_to_null(df)
+    return empty_to_null(df)
 
 
 def read_markdown(spark: SparkSession, path: str) -> DataFrame:
@@ -117,7 +124,7 @@ def read_markdown(spark: SparkSession, path: str) -> DataFrame:
         F.trim(F.element_at(parts, i + 1)).alias(h)
         for i, h in enumerate(headers)
     ]
-    return _empty_to_null(body.select(*cols))
+    return empty_to_null(body.select(*cols))
 
 
 def read_json(spark: SparkSession, path: str) -> DataFrame:
@@ -165,7 +172,7 @@ def _rows_to_df(spark: SparkSession, rows: list) -> DataFrame:
     )
     body = [tuple(r[: len(headers)]) + (None,) * (len(headers) - len(r))
             for r in rows[1:]]
-    return _empty_to_null(spark.createDataFrame(body, schema))
+    return empty_to_null(spark.createDataFrame(body, schema))
 
 
 def read_excel(spark: SparkSession, path: str) -> DataFrame:

@@ -932,10 +932,10 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = o.groupBy("o_custkey").agg(
         (F.sum(dec2("o_totalprice")) * 100).cast("long").alias("xc")
     )
-    # same two-phase rank layout as add_surrogate_key (range partition +
-    # local sort; monotonically_increasing_id's low 33 bits ARE the local
-    # row number over the sorted stream and its nondeterministic tag stops
-    # Catalyst reordering it below the sort)
+    # same rank layout as add_surrogate_key's large-input path (range
+    # partition + local sort; monotonically_increasing_id's low 33 bits ARE
+    # the local row number over the sorted stream and its nondeterministic
+    # tag stops Catalyst reordering it below the sort)
     numbered = (
         rev.repartitionByRange(default_parallelism(), "xc", "o_custkey")
         .sortWithinPartitions("xc", "o_custkey")

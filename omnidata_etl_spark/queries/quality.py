@@ -711,6 +711,16 @@ def etl_sample_quality_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source")
 
 
+def global_shuffle_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """etl_global_shuffle's sort input: `doc_id` plus its seeded hash
+    `skey = md5('seed42:' || doc_id)`."""
+    docs = table(spark, sf_dir, "documents").select("doc_id")
+    return docs.withColumn(
+        "skey",
+        F.md5(F.concat(F.lit("seed42:"), F.col("doc_id").cast("string"))),
+    )
+
+
 @query(
     "etl_global_shuffle",
     oracle="""
@@ -730,34 +740,32 @@ def etl_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The 100 TB shape: shuffling by sorting on a seeded hash, NOT by
     collecting or sampling — `md5(seed || doc_id)` is the permutation,
-    and the global position comes from ingest.load's two-phase
-    distributed row_number (range-partition on the hash → parallel local
-    sorts → broadcast per-partition offsets; load.py:add_surrogate_key),
-    never a single-partition global Window. `as_long=True` is the
-    BIGSERIAL opt-in — corpus row counts exceed INT_MAX. doc_id is the
-    tiebreak so the permutation is total and the oracle differential is
-    exact (md5 hex parity between Spark and DuckDB is itself part of the
-    check).
+    and the global position comes from ingest.load's surrogate key
+    (load.py:add_surrogate_key). Its size rule picks the path: a keyed
+    frame whose plan-time size is at most `load.ONE_TASK_MAX_BYTES`
+    (8 MB) sorts in one task — the test corpora up to sf0.1 do — and
+    anything larger takes the two-phase distributed row_number
+    (range-partition on the hash → parallel local sorts → broadcast
+    per-partition offsets), never a single-partition
+    global Window. `as_long=True` is the BIGSERIAL opt-in — corpus row
+    counts exceed INT_MAX. doc_id is the tiebreak so the permutation is
+    total and the oracle differential is exact (md5 hex parity between
+    Spark and DuckDB is itself part of the check).
 
-    add_surrogate_key persists its ranged frame for the two-consumer
-    build; repeated builds in one long-lived session would accrete one
-    persisted O(corpus) frame each (the r9 ADVICE #3 leak class), so the
-    whole result rides session_df_memo — one shared frame per
-    (sf_dir, parquet-fingerprint)."""
+    On the large path add_surrogate_key persists its ranged frame for the
+    two-consumer build; repeated builds in one long-lived session would
+    accrete one persisted O(corpus) frame each (the r9 ADVICE #3 leak
+    class), so the whole result rides session_df_memo — one shared frame
+    per (sf_dir, parquet-fingerprint)."""
     from omnidata_etl_spark.ingest.load import add_surrogate_key
     from omnidata_etl_spark.queries._util import session_df_memo
     from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
 
     def build():
-        docs = table(spark, sf_dir, "documents").select("doc_id")
-        keyed = docs.withColumn(
-            "skey",
-            F.md5(
-                F.concat(F.lit("seed42:"), F.col("doc_id").cast("string"))
-            ),
-        )
         return add_surrogate_key(
-            keyed, order_by=["skey", "doc_id"], as_long=True
+            global_shuffle_keys(spark, sf_dir),
+            order_by=["skey", "doc_id"],
+            as_long=True,
         ).withColumnRenamed("id", "pos")
 
     key = (

@@ -723,9 +723,11 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pos = 1-based index of this row's cell in the probe list (NULL →
     # unprobed cell, filtered before any distance work — BOTH the ADC
-    # lookups and the exact fold run only on probed rows). The 3-column
-    # scored frame is repartitioned so its exchange is shared by the two
-    # TakeOrdered consumers (single-encode form, docstring).
+    # lookups and the exact fold run only on probed rows). The broadcast
+    # consumer duplicates this subtree (no ReusedExchange, docstring), so
+    # the repartition runs once per branch: it fans each branch's probed
+    # rows out for the distance work and TakeOrdered, not to share one
+    # exchange.
     scored = (
         coded.withColumn(
             "pos", F.expr(f"array_position({probe_sql}, cc[0])")
@@ -841,7 +843,11 @@ def ann_ivf_served_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cell count in both forms — the extra session-default partitions
         # were always empty tasks paying schedule+commit overhead (r12
         # A/B: 1.39→1.05 and 0.98→0.75 s). A production index passes its
-        # nlist here for the same reason.
+        # nlist here for the same reason. Caveat: hashing K cells into K
+        # partitions collides, leaving ~1/e of the partitions empty and
+        # stacking several cells on some tasks, so effective parallelism
+        # is below IVF_CLUSTERS (output is unaffected: still one file per
+        # cell).
         .repartition(IVF_CLUSTERS, "cid")
         .write.mode("overwrite")
         .partitionBy("cid")

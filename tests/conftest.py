@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 
@@ -21,3 +22,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture
+def two_phase_key(monkeypatch):
+    """Send every add_surrogate_key call in the test through the two-phase
+    range path: the test inputs all fit ONE_TASK_MAX_BYTES."""
+    load_mod = importlib.import_module("omnidata_etl_spark.ingest.load")
+    monkeypatch.setattr(load_mod, "ONE_TASK_MAX_BYTES", -1)

@@ -126,6 +126,51 @@ def test_surrogate_key_injection(spark):
     assert [c for c in got2.columns if c.lower() == "id"] == ["ID"]
 
 
+def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
+    """An input of at most ONE_TASK_MAX_BYTES sorts in ONE task: no
+    exchange and no cache in its plan. A negative bound forces the same
+    fixture through the two-phase range path; both must give the same
+    (row, id) set with dense ids 1..N and keep the INT_MAX guard, for the
+    default order (all columns, which is also file order here) and for a
+    `full_name` order that differs from file order."""
+    import importlib
+
+    load_mod = importlib.import_module("omnidata_etl_spark.ingest.load")
+    df = read_any(spark, fixture_path("people_noid.csv"))
+
+    def keyed(order_by):
+        out = load_mod.add_surrogate_key(df, order_by)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        try:
+            rows = {
+                (tuple(r[c] for c in df.columns), r["id"])
+                for r in out.collect()
+            }
+        finally:
+            cache = getattr(out, "_sk_cache", None)
+            if cache is not None:
+                cache.unpersist()
+        return plan, rows
+
+    orders = (None, ["full_name"])
+    small = [keyed(o) for o in orders]
+    monkeypatch.setattr(load_mod, "ONE_TASK_MAX_BYTES", -1)
+    large = [keyed(o) for o in orders]
+
+    for (small_plan, small_rows), (large_plan, large_rows) in zip(small, large):
+        assert "rangepartitioning" in large_plan.lower()  # the large path ran
+        assert small_rows == large_rows
+        ids = sorted(i for _, i in small_rows)
+        assert ids == list(range(1, N_PEOPLE + 1))
+        for plan in (small_plan, large_plan):
+            assert "raise_error" in plan
+        assert "Exchange" not in small_plan
+        assert "InMemoryRelation" not in small_plan
+    by_name = sorted(small[1][1], key=lambda t: t[1])
+    names = [row[df.columns.index("full_name")] for row, _ in by_name]
+    assert names == sorted(names)
+
+
 def test_errorifexists(spark):
     wh = tempfile.mkdtemp(prefix="omnidata_wh_")
     df = read_any(spark, fixture_path("people_comma.csv"))

@@ -282,16 +282,25 @@ def test_etl_global_shuffle_is_dense_permutation(spark, sf_dir):
     ), "hash order degenerated to doc_id order"
 
 
-def test_etl_global_shuffle_plan_scale_shape(spark, sf_dir):
-    """The global position comes from the two-phase range-partitioned
-    row_number: the plan must carry a RANGE partitioning exchange, and the
-    only Window sits over the per-partition offsets frame (partition-count
-    rows), never over the full corpus (the single-partition global-sort
-    anti-pattern)."""
-    from omnidata_etl_spark.registry import all_specs
+def test_etl_global_shuffle_plan_scale_shape(spark, sf_dir, two_phase_key):
+    """Above ONE_TASK_MAX_BYTES the global position comes from the
+    two-phase range-partitioned row_number: the plan must carry a RANGE
+    partitioning exchange, and the only Window sits over the per-partition
+    offsets frame (partition-count rows), never over the full corpus (the
+    single-partition global-sort anti-pattern). The test corpus is under
+    the bound, so the two_phase_key fixture forces the large path;
+    add_surrogate_key is called on the op's own sort input because
+    etl_global_shuffle's result is memoized per session."""
+    from omnidata_etl_spark.ingest.load import add_surrogate_key
+    from omnidata_etl_spark.queries.quality import global_shuffle_keys
 
-    df = all_specs()["etl_global_shuffle"].fn(spark, sf_dir)
+    df = add_surrogate_key(
+        global_shuffle_keys(spark, sf_dir),
+        order_by=["skey", "doc_id"],
+        as_long=True,
+    )
     plan = df._jdf.queryExecution().executedPlan().toString()
+    df._sk_cache.unpersist()
     assert "rangepartitioning" in plan.lower()
     # the Window's child aggregates to one row per partition id
     assert "_sk_pid" in plan
@@ -407,10 +416,13 @@ def test_time_to_convert_oracle_degenerate_n1(tmp_path, spark):
     assert orc == (1, 100.0, 100.0), orc
 
 
-def test_gini_bounds_and_rank_path(spark, sf_dir):
+def test_gini_bounds_and_rank_path(spark, sf_dir, two_phase_key):
     """Gini must land in (0,1) on the skewed revenue distribution, and the
     distributed-rank identity must hold: sum of ranks == n(n+1)/2 (a rank
-    collision or gap from the two-phase offsets would break it)."""
+    collision or gap from the two-phase offsets would break it). The
+    grouped frame is under ONE_TASK_MAX_BYTES, so the two_phase_key fixture
+    forces add_surrogate_key's two-phase path on this multi-partition
+    aggregate input."""
     from pyspark.sql import functions as F
 
     from omnidata_etl_spark.ingest.load import add_surrogate_key
@@ -425,9 +437,13 @@ def test_gini_bounds_and_rank_path(spark, sf_dir):
         (F.sum(dec2("o_totalprice")) * 100).cast("long").alias("xc")
     )
     ranked = add_surrogate_key(rev, order_by=["xc", "o_custkey"], as_long=True)
-    agg = ranked.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
-    ).collect()[0]
+    try:
+        assert "_sk_pid" in ranked._jdf.queryExecution().optimizedPlan().toString()
+        agg = ranked.agg(
+            F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
+        ).collect()[0]
+    finally:
+        ranked._sk_cache.unpersist()
     assert agg["s"] == agg["n"] * (agg["n"] + 1) // 2
 
 
