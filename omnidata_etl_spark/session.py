@@ -84,6 +84,9 @@ _RUNTIME_CONF = {
 }
 
 
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -133,6 +136,14 @@ def get_session(app_name: str = "omnidata-etl-spark") -> SparkSession:
     structural allow-list (tests/test_plans.py). Set
     ``OMNIDATA_KEEP_WINDOW_WARN=1`` to keep the stock warning for your
     own queries.
+
+    Python workers run under the engine daemon
+    (``spark.python.daemon.module`` = :mod:`omnidata_etl_spark.pydaemon`),
+    which stops every task from re-reading the unchanged ``pyspark.zip``
+    (~65 ms per task on Python 3.11), and find the engine through
+    ``spark.executorEnv.PYTHONPATH`` from any cwd. Both are static conf, so
+    only sessions built here get them; a driver-provided session keeps the
+    stock daemon.
     """
     cpus = default_parallelism()
     builder = (
@@ -172,6 +183,19 @@ def get_session(app_name: str = "omnidata-etl-spark") -> SparkSession:
         # single-node exception, not the design point.
         .config("spark.shuffle.compress", "false")
         .config("spark.shuffle.spill.compress", "false")
+        # Engine Python daemon (static conf, LOCAL factory only, like the
+        # shuffle keys: a driver-provided session keeps the stock daemon).
+        # Every Python task calls importlib.invalidate_caches(), and on
+        # Python 3.11 each of the worker's 14-16 zipimporters over the
+        # 3.5 MB pyspark.zip re-parses the whole archive: ~65 ms per task,
+        # 0.35 s wall / 1.15 CPU-s for an identity mapInArrow over 5000
+        # rows in 4 tasks (4-core host). pydaemon re-reads an archive only
+        # when it changed (0.17-0.19 s / 0.44-0.47 CPU-s). The cost is per
+        # task, so it grows with fan-out.
+        .config("spark.python.daemon.module", "omnidata_etl_spark.pydaemon")
+        # Workers import the daemon and the engine's UDF modules by name:
+        # put the package on their path, whatever the JVM's cwd.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         # saveAsTable target (bucketed tables for co-located joins);
         # keep the managed warehouse out of the repo tree
         .config(
