@@ -20,8 +20,8 @@ raise likewise from the magic-byte dispatch, so swapping in pillow later
 touches only `decode_image`/`decode_audio`.
 
 Everything here is a pure bytes→numpy (or back) function: the Spark side
-calls them inside Arrow-batched `mapInPandas` ops (queries/multimodal.py),
-never per-row through py4j.
+calls them from per-row functions that `queries._util.map_rows` runs over
+Arrow batches (queries/multimodal.py), never per-row through py4j.
 """
 
 from __future__ import annotations

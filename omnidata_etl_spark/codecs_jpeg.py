@@ -30,8 +30,9 @@ both encoders emit IDENTICAL quantized coefficients for the same
 pixels, so the two decodes must match byte-for-byte
 (tests/test_codecs_jpeg.py).
 
-Like every codec here: pure bytes→numpy functions, called from
-Arrow-batched mapInPandas ops (queries/multimodal.py), never per-row py4j.
+Like every codec here: pure bytes→numpy functions, called from per-row
+functions that `queries._util.map_rows` runs over Arrow batches
+(queries/multimodal.py), never per-row py4j.
 """
 
 from __future__ import annotations

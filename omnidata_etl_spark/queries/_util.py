@@ -18,6 +18,8 @@ throughout:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -97,6 +99,48 @@ def spread(df: DataFrame) -> DataFrame:
     if splits >= target:
         return df
     return df.repartition(target)
+
+
+def map_rows(df: DataFrame, fn, schema) -> DataFrame:
+    """Run a per-row Python function over ``df`` through ``mapInArrow``.
+
+    ``fn`` takes one input row's values in ``df.columns`` order and yields
+    output tuples in ``schema`` order — zero, one or many per input row.
+    ``schema`` (DDL string or StructType) is parsed once, on the driver,
+    and is the only place the output types are declared: the Arrow schema
+    the batches are built to is derived from it. The batch loop is
+    :func:`rows_to_batches`."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    return df.mapInArrow(
+        functools.partial(
+            rows_to_batches, fn=fn, schema=to_arrow_schema(schema)
+        ),
+        schema,
+    )
+
+
+def rows_to_batches(batches, fn, schema):
+    """The worker side of :func:`map_rows`: per input Arrow batch, feed each
+    row's values to ``fn`` and transpose the tuples it yields into one
+    output batch typed by the Arrow ``schema`` (an empty input batch gives
+    an empty output batch of the same types)."""
+    import pyarrow as pa
+
+    for b in batches:
+        rows = [
+            out
+            for row in zip(*(c.to_pylist() for c in b.columns))
+            for out in fn(*row)
+        ]
+        cols = list(zip(*rows)) if rows else [()] * len(schema)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+            schema=schema,
+        )
 
 
 def dec2(col: str | Column) -> Column:

@@ -2,13 +2,13 @@
 
 The engine's multimodal model (north-star): an asset is a row with a
 ``binary`` payload column plus typed metadata columns; decode / feature
-extraction / resize / frame-sampling run as Arrow-batched functions over
-``mapInArrow`` (r12 — formerly mapInPandas; the per-batch pandas
-conversion was pure overhead for these per-row codec loops) so the
-payload bytes never round-trip through Python row-at-a-time serde. Decode is REAL for the formats a bare container can
-express — PPM/BMP images (numpy), PNG (stdlib zlib + numpy unfilter),
-GIF incl. multi-frame animations (pure-Python LZW, r7/r8), JPEG both
-baseline and progressive (clean-room ITU-T T.81 Huffman+IDCT, r10 — see
+extraction / resize / frame-sampling are plain per-row functions that
+``_util.map_rows`` runs over Arrow batches, so payload bytes cross the
+Python boundary in columnar batches, never through row-at-a-time
+pickling. Decode is REAL for the formats a bare container can express —
+PPM/BMP images (numpy), PNG (stdlib zlib + numpy unfilter), GIF incl.
+multi-frame animations (pure-Python LZW, r7/r8), JPEG both baseline and
+progressive (clean-room ITU-T T.81 Huffman+IDCT, r10 — see
 omnidata_etl_spark/codecs_jpeg.py), WAV/PCM16 audio (stdlib ``wave``) — see
 omnidata_etl_spark/codecs.py; WebP/MP3/MP4 genuinely need an external
 library (documented out of scope there) and raise NotImplementedError from
@@ -20,22 +20,21 @@ the same magic-byte dispatch until one exists here. The Spark-side plumbing
 from __future__ import annotations
 
 import functools
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import spread
+from omnidata_etl_spark.queries._util import map_rows, spread
 from omnidata_etl_spark.session import ensure_tuned
 
-# Real codecs for the container-expressible formats: PPM/BMP/PNG/GIF images
-# decode to numpy with zero dependencies (PNG via stdlib zlib + a numpy
-# unfilter, GIF via pure-Python LZW), WAV/PCM16 via stdlib `wave`; JPEG
-# still raises NotImplementedError from the same magic-byte dispatch
-# (out of scope without a library). Re-exported here so the multimodal
-# surface is one import for callers.
+# Real codecs for the container-expressible formats: PPM/BMP/PNG/GIF/JPEG
+# images decode to numpy with zero dependencies (PNG via stdlib zlib + a
+# numpy unfilter, GIF via pure-Python LZW, JPEG via codecs_jpeg's T.81
+# decoder), WAV/PCM16 via stdlib `wave`; WebP raises NotImplementedError
+# from the same magic-byte dispatch (out of scope without a library).
+# Re-exported here so the multimodal surface is one import for callers.
 from omnidata_etl_spark.codecs import (
     decode_audio,
     decode_image,
@@ -107,7 +106,7 @@ def sample_frames(
     raw bytes, vs more pure-Python LZW encode passes per asset for GIF
     output (measured r8: the GIF-output form benched 0.83 s at sf0.1,
     PPM halves the codec passes). MP4/WebM genuinely need ffmpeg/pyav
-    (not in this container, out of scope like JPEG): any non-GIF payload
+    (not in this container, out of scope like WebP): any non-GIF payload
     keeps the deterministic byte-slice stub (``every_ms`` has no meaning
     there — the stub has no time base) so the explode-style plumbing
     stays testable for those types too."""
@@ -161,36 +160,17 @@ def fake_features(payload: bytes, dim: int = 4) -> list[float]:
 
 
 def extract_features(assets: DataFrame) -> DataFrame:
-    """mapInArrow feature extraction: Arrow-batched, per-partition, no
-    driver involvement — the hot-path shape for real decoders. r12: the
-    ops in this module take/emit pyarrow RecordBatches directly instead
-    of mapInPandas frames — the per-batch Arrow→pandas→Arrow conversion
-    (Series construction, object boxing of every binary cell) was pure
-    overhead for these per-row codec loops, ~0.1-0.3 s per query at
-    sf0.1 (guide §4.1: control how efficiently columns cross; the
-    values crossing are identical, only the container changes)."""
-    import pyarrow as pa
+    """Per-asset feature extraction as a row function under ``map_rows``:
+    Arrow-batched, per-partition, no driver involvement — the hot-path
+    shape for real decoders."""
 
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            payloads = b.column("payload").to_pylist()
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("asset_id"),
-                    b.column("media_type"),
-                    pa.array(
-                        [len(p) if p is not None else 0 for p in payloads],
-                        type=pa.int64(),
-                    ),
-                    pa.array(
-                        [fake_features(p) for p in payloads],
-                        type=pa.list_(pa.float64()),
-                    ),
-                ],
-                names=["asset_id", "media_type", "n_bytes", "feature"],
-            )
+    def row(asset_id, media_type, payload):
+        n_bytes = len(payload) if payload is not None else 0
+        yield asset_id, media_type, n_bytes, fake_features(payload)
 
-    return assets.mapInArrow(op, schema=FEATURE_SCHEMA)
+    return map_rows(
+        assets.select("asset_id", "media_type", "payload"), row, FEATURE_SCHEMA
+    )
 
 
 @query(
@@ -240,12 +220,12 @@ def _synth_animation_payload(
     return encode_gif_animation(frames, delay_cs=10)
 
 
-@query("multimodal_frame_sample", tags=("multimodal", "codec", "pandas-udf"))
+@query("multimodal_frame_sample", tags=("multimodal", "codec", "arrow-map"))
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL frame sampling (r8 — upgraded from the byte-slice stub):
     each video-typed document gets a synthesized multi-frame animated GIF
     (3-6 frames at 100 ms GCE delay, every frame distinct), and the
-    mapInArrow op explodes it into per-frame rows (asset_id, frame_idx,
+    row function explodes it into per-frame rows (asset_id, frame_idx,
     frame binary) through the delay-aware decoder → TIME-BASED sampling at
     every_ms=100 (one frame per 100 ms of animation time, ≤4 — r9: the
     sampler honors the GIF's own graphic-control delays, see
@@ -256,69 +236,31 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     the query's own output. MP4/WebM stay honestly out of scope
     (ffmpeg-class decoders, like JPEG — see codecs.py); the sampler keeps
     the deterministic stub for those media types."""
-    import numpy as np
 
-    import pyarrow as pa
+    def row(doc_id, text):
+        payload = _synth_animation_payload(doc_id, text)
+        n_src = 3 + doc_id % 4
+        for i, frame in enumerate(sample_frames(payload, every_ms=100)):
+            ok = decode_image(frame).shape[:2] == (9, 12)
+            yield doc_id, i, frame, ok, n_src
 
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from omnidata_etl_spark.codecs import decode_image
-
-        for b in batches:
-            out = {
-                "asset_id": [],
-                "frame_idx": [],
-                "frame": [],
-                "frame_ok": [],
-                "src_frames": [],
-            }
-            for aid, did, text in zip(
-                b.column("asset_id").to_pylist(),
-                b.column("doc_id").to_pylist(),
-                b.column("text").to_pylist(),
-            ):
-                payload = _synth_animation_payload(int(did), text)
-                n_src = 3 + int(did) % 4
-                for i, frame in enumerate(
-                    sample_frames(payload, every_ms=100)
-                ):
-                    img = decode_image(frame)
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(frame)
-                    out["frame_ok"].append(img.shape[:2] == (9, 12))
-                    out["src_frames"].append(n_src)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["asset_id"], type=pa.int64()),
-                    pa.array(out["frame_idx"], type=pa.int32()),
-                    pa.array(out["frame"], type=pa.binary()),
-                    pa.array(out["frame_ok"], type=pa.bool_()),
-                    pa.array(out["src_frames"], type=pa.int32()),
-                ],
-                names=list(out),
-            )
-
-    frame_schema = T.StructType(
-        [
-            T.StructField("asset_id", T.LongType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-            T.StructField("frame_ok", T.BooleanType(), False),
-            T.StructField("src_frames", T.IntegerType(), False),
-        ]
-    )
     # video assets = assets_from_documents' doc_id % 3 == 2 stripe, taken
-    # straight off documents (the animation payload is synthesized from
-    # doc text inside the op, like decode_stats' _synth_image_payload)
+    # straight off documents (asset_id = doc_id; the animation payload is
+    # synthesized from doc text in the row function, like decode_stats'
+    # _synth_image_payload)
     videos = (
         table(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .where(F.col("doc_id") % 3 == 2)
-        .withColumn("asset_id", F.col("doc_id"))
     )
     # spread(): per-asset LZW decode/encode CPU must use all cores (the
     # decode_stats single-partition lesson, commit de9d858)
-    frames = spread(videos).mapInArrow(op, schema=frame_schema)
+    frames = map_rows(
+        spread(videos),
+        row,
+        "asset_id long not null, frame_idx int not null, frame binary, "
+        "frame_ok boolean not null, src_frames int not null",
+    )
     return frames.groupBy("asset_id").agg(
         F.count("*").alias("n_frames"),
         F.sum(F.octet_length("frame")).alias("frame_bytes"),
@@ -327,18 +269,18 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("multimodal_feature_extract", tags=("multimodal", "pandas-udf"))
+@query("multimodal_feature_extract", tags=("multimodal", "arrow-map"))
 def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full multimodal pipeline on the stand-in corpus: build assets →
     Arrow-batched feature extraction → per-media-type stats. Rows-only
-    (Pandas-UDF path; feature fn is the deterministic stub).
+    (map_rows path; the feature fn is the deterministic stub).
 
     Self-evidencing (r9, VERDICT r8 #6): ``feature_matches_bytes`` is true
     only if feature[0] == n_bytes on EVERY asset in the group — the two
     values travel different paths (n_bytes is computed Spark-side from the
     payload column, feature[0] inside the Arrow batch by fake_features),
     so the flag recomputes the row↔feature ALIGNMENT invariant in-output
-    and a batch-misalignment bug in the mapInArrow plumbing (the failure
+    and a batch-misalignment bug in the map_rows plumbing (the failure
     mode that silently shuffles features across rows) flips it false."""
     docs = table(spark, sf_dir, "documents")
     feats = extract_features(assets_from_documents(docs))
@@ -363,6 +305,17 @@ def multimodal_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: float rounding); 4 leaves margin while still damning any real decoder
 #: defect (a broken IDCT/Huffman path lands hundreds off).
 _JPEG_TOL = 4
+
+
+def _jpeg_close(img, src) -> bool:
+    """A lossy decode's proof: same shape as the source pixels and within
+    _JPEG_TOL of them everywhere."""
+    import numpy as np
+
+    return bool(
+        img.shape == src.shape
+        and np.abs(img.astype(int) - src.astype(int)).max() <= _JPEG_TOL
+    )
 
 
 def _synth_pixels(doc_id: int, text: str, w: int = 16, h: int = 12):
@@ -420,7 +373,7 @@ def _synth_image_payload(doc_id: int, text: str, w: int = 16, h: int = 12) -> by
     return enc(pix)
 
 
-@query("multimodal_image_decode_stats", tags=("multimodal", "codec", "pandas-udf"))
+@query("multimodal_image_decode_stats", tags=("multimodal", "codec", "arrow-map"))
 def multimodal_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode over the corpus: synthesize a PPM/BMP/PNG/GIF/
     baseline-JPEG/interlaced-PNG/interlaced-GIF/progressive-JPEG asset
@@ -449,53 +402,16 @@ def multimodal_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
         None,  # progressive JPEG: same lossy bound
     )
 
-    import pyarrow as pa
+    def row(doc_id, text, source):
+        payload = _synth_image_payload(doc_id, text)
+        img = decode_image(payload)
+        enc = encoders[doc_id % 8]
+        if enc is None:  # JPEG: lossy — bound vs source pixels
+            ok = _jpeg_close(img, _synth_pixels(doc_id, text))
+        else:
+            ok = enc(img) == payload
+        yield source, float(np.mean(img)), img.shape[1], img.shape[0], ok
 
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            out = {
-                "brightness": [],
-                "width": [],
-                "height": [],
-                "roundtrip_ok": [],
-            }
-            for did, text in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                payload = _synth_image_payload(int(did), text)
-                img = decode_image(payload)
-                out["brightness"].append(float(np.mean(img)))
-                out["height"].append(img.shape[0])
-                out["width"].append(img.shape[1])
-                enc = encoders[int(did) % 8]
-                if enc is None:  # JPEG: lossy — bound vs source pixels
-                    src = _synth_pixels(int(did), text)
-                    ok = bool(
-                        img.shape == src.shape
-                        and np.abs(
-                            img.astype(int) - src.astype(int)
-                        ).max() <= _JPEG_TOL
-                    )
-                else:
-                    ok = enc(img) == payload
-                out["roundtrip_ok"].append(ok)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("source"),
-                    pa.array(out["brightness"], type=pa.float64()),
-                    pa.array(out["width"], type=pa.int32()),
-                    pa.array(out["height"], type=pa.int32()),
-                    pa.array(out["roundtrip_ok"], type=pa.bool_()),
-                ],
-                names=[
-                    "source", "brightness", "width", "height", "roundtrip_ok"
-                ],
-            )
-
-    schema = (
-        "source string, brightness double, width int, height int, "
-        "roundtrip_ok boolean"
-    )
     # spread(): the single-file documents scan yields ONE input partition,
     # so without it the per-asset codec CPU (the real decode work) runs on
     # one core of 32 — r7 caught decode_stats at 1.78 s wall with ~1.5 s
@@ -504,7 +420,12 @@ def multimodal_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     docs = spread(
         table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
-    decoded = docs.mapInArrow(op, schema=schema)
+    decoded = map_rows(
+        docs,
+        row,
+        "source string, brightness double, width int, height int, "
+        "roundtrip_ok boolean",
+    )
     return (
         decoded.groupBy("source")
         .agg(
@@ -518,7 +439,7 @@ def multimodal_image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query("multimodal_image_resize", tags=("multimodal", "codec", "pandas-udf"))
+@query("multimodal_image_resize", tags=("multimodal", "codec", "arrow-map"))
 def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL resize pipeline: decode each synthetic PPM asset, bilinear-
     resample to 8×6, re-encode, and verify the output dimensions by
@@ -527,50 +448,27 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reported as ``avg_abs_brightness_shift``, bounded ~0.5/255)."""
     import numpy as np
 
-    import pyarrow as pa
+    def row(doc_id, text, source):
+        before = decode_image(_synth_image_payload(doc_id, text))
+        # resample from the already-decoded pixels (r11: the fused
+        # resize_image(payload) re-ran the full entropy decode —
+        # identical bytes, one decode saved per asset)
+        resized = resample_pixels(before, 8, 6, method="bilinear")
+        after = decode_image(resized)
+        shift = abs(float(np.mean(after)) - float(np.mean(before)))
+        yield source, len(resized), after.shape == (6, 8, 3), shift
 
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            out = {
-                "out_bytes": [],
-                "dims_ok": [],
-                "brightness_shift": [],
-            }
-            for did, text in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                payload = _synth_image_payload(int(did), text)
-                before = decode_image(payload)
-                # resample from the already-decoded pixels (r11: the fused
-                # resize_image(payload) re-ran the full entropy decode —
-                # identical bytes, one decode saved per asset)
-                resized = resample_pixels(before, 8, 6, method="bilinear")
-                after = decode_image(resized)
-                out["out_bytes"].append(len(resized))
-                out["dims_ok"].append(after.shape == (6, 8, 3))
-                out["brightness_shift"].append(
-                    abs(float(np.mean(after)) - float(np.mean(before)))
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("source"),
-                    pa.array(out["out_bytes"], type=pa.int64()),
-                    pa.array(out["dims_ok"], type=pa.bool_()),
-                    pa.array(out["brightness_shift"], type=pa.float64()),
-                ],
-                names=["source", "out_bytes", "dims_ok", "brightness_shift"],
-            )
-
-    schema = (
-        "source string, out_bytes long, dims_ok boolean, "
-        "brightness_shift double"
-    )
     # spread(): same single-partition-scan hazard as decode_stats — the
     # bilinear resample + double decode is per-asset Python CPU.
     docs = spread(
         table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
-    resized = docs.mapInArrow(op, schema=schema)
+    resized = map_rows(
+        docs,
+        row,
+        "source string, out_bytes long, dims_ok boolean, "
+        "brightness_shift double",
+    )
     return (
         resized.groupBy("source")
         .agg(
@@ -585,7 +483,7 @@ def multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("multimodal_audio_stats", tags=("multimodal", "codec", "pandas-udf"))
+@query("multimodal_audio_stats", tags=("multimodal", "codec", "arrow-map"))
 def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode: synthesize a WAV/PCM16 asset per document (text
     bytes as a centered int16 waveform), decode with the stdlib codec, and
@@ -596,54 +494,25 @@ def multimodal_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     RATE = 8000
 
-    import pyarrow as pa
+    def row(doc_id, text, source):
+        raw = (text or "").encode("utf-8") or bytes([doc_id % 256])
+        wavef = (np.frombuffer(raw, dtype=np.uint8).astype(np.int16) - 128) * 256
+        st = waveform_stats(encode_wav(wavef, rate=RATE))
+        n = st["n_samples"]
+        zcr = st["zero_crossings"] / n if n else 0.0
+        yield source, st["duration_ms"], st["rms"], zcr, n == len(wavef)
 
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            out = {
-                "duration_ms": [],
-                "rms": [],
-                "zcr": [],
-                "decode_ok": [],
-            }
-            for did, text in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                raw = (text or "").encode("utf-8") or bytes([int(did) % 256])
-                wavef = (
-                    np.frombuffer(raw, dtype=np.uint8).astype(np.int16) - 128
-                ) * 256
-                payload = encode_wav(wavef, rate=RATE)
-                st = waveform_stats(payload)
-                out["duration_ms"].append(st["duration_ms"])
-                out["rms"].append(st["rms"])
-                out["zcr"].append(
-                    st["zero_crossings"] / st["n_samples"]
-                    if st["n_samples"]
-                    else 0.0
-                )
-                out["decode_ok"].append(st["n_samples"] == len(wavef))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column("source"),
-                    pa.array(out["duration_ms"], type=pa.int64()),
-                    pa.array(out["rms"], type=pa.float64()),
-                    pa.array(out["zcr"], type=pa.float64()),
-                    pa.array(out["decode_ok"], type=pa.bool_()),
-                ],
-                names=["source", "duration_ms", "rms", "zcr", "decode_ok"],
-            )
-
-    schema = (
-        "source string, duration_ms long, rms double, zcr double, "
-        "decode_ok boolean"
-    )
     # spread(): same single-partition-scan hazard — WAV encode+decode per
     # asset is Python CPU.
     docs = spread(
         table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     )
-    stats = docs.mapInArrow(op, schema=schema)
+    stats = map_rows(
+        docs,
+        row,
+        "source string, duration_ms long, rms double, zcr double, "
+        "decode_ok boolean",
+    )
     return (
         stats.groupBy("source")
         .agg(
@@ -739,7 +608,7 @@ def _scale_arrow(tbl):
     mm = pc.min_max(v).as_py()
     vmin, vmax = mm["min"], mm["max"]
     if vmax == vmin:
-        scaled = pa.array([0.5] * len(tbl), type=pa.float64())
+        scaled = pa.repeat(0.5, len(tbl))
     else:
         scaled = pc.divide(pc.subtract(v, vmin), vmax - vmin)
     return pa.table({"event_id": tbl.column("event_id"), "scaled": scaled})
@@ -820,54 +689,25 @@ def ingest_binary_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f.write(enc(img))
         open(done, "w").close()
 
-    import pyarrow as pa
+    enc_by_ext = dict(encoders)
 
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            rows = {"path": [], "n_bytes": [], "width": [], "height": [],
-                    "decode_ok": []}
-            enc_by_ext = dict(encoders)
-            for path, content in zip(
-                b.column("path").to_pylist(), b.column("content").to_pylist()
-            ):
-                name = os.path.basename(path)
-                asset_i = int(name.split("_")[1])
-                dims, ext = name.rsplit("_", 1)[1].split(".")
-                want_w, want_h = map(int, dims.split("x"))
-                img = decode_image(bytes(content))
-                if ext == "jpg":
-                    # lossy: re-derive the rng(i) source pixels and bound
-                    # the decode error instead of byte-comparing
-                    src = np.random.default_rng(asset_i).integers(
-                        0, 256, size=(want_h, want_w, 3), dtype=np.uint8
-                    )
-                    ok = bool(
-                        img.shape == src.shape
-                        and np.abs(
-                            img.astype(int) - src.astype(int)
-                        ).max() <= _JPEG_TOL
-                    )
-                else:
-                    ok = enc_by_ext[ext](img) == bytes(content)
-                rows["path"].append(name)
-                rows["n_bytes"].append(len(content))
-                rows["width"].append(img.shape[1])
-                rows["height"].append(img.shape[0])
-                rows["decode_ok"].append(
-                    img.shape[1] == want_w
-                    and img.shape[0] == want_h
-                    and ok
-                )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(rows["path"], type=pa.string()),
-                    pa.array(rows["n_bytes"], type=pa.int64()),
-                    pa.array(rows["width"], type=pa.int32()),
-                    pa.array(rows["height"], type=pa.int32()),
-                    pa.array(rows["decode_ok"], type=pa.bool_()),
-                ],
-                names=list(rows),
+    def row(path, content):
+        name = os.path.basename(path)
+        asset_i = int(name.split("_")[1])
+        dims, ext = name.rsplit("_", 1)[1].split(".")
+        want_w, want_h = map(int, dims.split("x"))
+        img = decode_image(content)
+        if ext == "jpg":
+            # lossy: re-derive the rng(i) source pixels and bound the
+            # decode error instead of byte-comparing
+            src = np.random.default_rng(asset_i).integers(
+                0, 256, size=(want_h, want_w, 3), dtype=np.uint8
             )
+            ok = _jpeg_close(img, src)
+        else:
+            ok = enc_by_ext[ext](img) == content
+        h, w = img.shape[:2]
+        yield name, len(content), w, h, (w, h) == (want_w, want_h) and ok
 
     ensure_tuned(spark)
     files = (
@@ -876,8 +716,10 @@ def ingest_binary_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(root)
         .select("path", "content")
     )
-    decoded = files.mapInArrow(
-        op, schema="path string, n_bytes long, width int, height int, decode_ok boolean"
+    decoded = map_rows(
+        files,
+        row,
+        "path string, n_bytes long, width int, height int, decode_ok boolean",
     )
     return decoded.agg(
         F.count("*").alias("n_assets"),
@@ -917,7 +759,7 @@ def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id < 20 a cross-format twin is planted (same source pixels,
     re-encoded PPM vs BMP — both lossless, so the decoded pixels and
     hence the 64-bit dHash are bit-identical). Hashing runs in one
-    mapInArrow pass (decode + dHash per asset, spread() for core
+    map_rows pass (decode + dHash per asset, spread() for core
     parallelism); dedup is then a plain groupBy on the 64-bit hash —
     the 100 TB shape: 8 bytes shuffle per asset, never pixels, exactly
     like dedup_hash shuffles digests instead of documents.
@@ -927,49 +769,22 @@ def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash are format-invariant) and ``n_dup_groups`` counts hash buckets
     holding ≥2 assets (≥20 by construction). Rows-only: the hash depends
     on the real codec stack, which no SQL oracle can reproduce."""
-    import numpy as np  # noqa: F401  (dhash64 uses it)
-
     from omnidata_etl_spark.codecs import encode_bmp
 
-    import pyarrow as pa
-
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids, variants, hashes = [], [], []
-            for did, text in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                did = int(did)
-                img = decode_image(_synth_image_payload(did, text))
-                doc_ids.append(did)
-                variants.append("orig")
-                hashes.append(dhash64(img))
-                if did < 20:
-                    # cross-format twin: identical pixels, different
-                    # container (PPM if the original mix slot was BMP,
-                    # else BMP) — decoded pixels identical for the twin
-                    # because BOTH containers are lossless; the ORIGINAL
-                    # may be lossy (JPEG slots), so the twin re-encodes
-                    # the original's DECODED pixels, not the source grid
-                    payload = (
-                        encode_ppm(img) if did % 8 == 1 else encode_bmp(img)
-                    )
-                    doc_ids.append(did)
-                    variants.append("twin")
-                    hashes.append(dhash64(decode_image(payload)))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, type=pa.int64()),
-                    pa.array(variants, type=pa.string()),
-                    pa.array(hashes, type=pa.int64()),
-                ],
-                names=["doc_id", "variant", "phash"],
-            )
+    def row(doc_id, text):
+        img = decode_image(_synth_image_payload(doc_id, text))
+        yield doc_id, "orig", dhash64(img)
+        if doc_id < 20:
+            # cross-format twin: identical pixels, different container
+            # (PPM if the original mix slot was BMP, else BMP) — decoded
+            # pixels identical for the twin because BOTH containers are
+            # lossless; the ORIGINAL may be lossy (JPEG slots), so the twin
+            # re-encodes the original's DECODED pixels, not the source grid
+            twin = encode_ppm(img) if doc_id % 8 == 1 else encode_bmp(img)
+            yield doc_id, "twin", dhash64(decode_image(twin))
 
     docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    hashed = docs.mapInArrow(
-        op, schema="doc_id long, variant string, phash long"
-    )
+    hashed = map_rows(docs, row, "doc_id long, variant string, phash long")
     # two independent consumers below (hash-bucket stats + per-doc twin
     # pivot) would each re-run the decode pass; pin the tiny post-decode
     # frame (3 scalars per asset) so pixels are decoded exactly once
@@ -1040,7 +855,7 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples are fingerprinted (real codec in the loop). For doc_id < 20
     a half-volume twin is planted: decoded samples × 0.5, re-quantized,
     re-encoded, re-decoded — different payload bytes, same landmarks.
-    One mapInArrow pass emits (doc_id, variant, landmark) rows;
+    One map_rows pass emits (doc_id, variant, landmark) rows;
     matching is relational from there — the scale shape shuffles
     4-byte landmark hashes, never waveforms (same argument as
     dedup_hash/image_phash).
@@ -1054,47 +869,20 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL oracle reproduces."""
     import numpy as np
 
-    from omnidata_etl_spark.codecs import decode_audio
-
-    import pyarrow as pa
-
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            doc_ids, variants, lms = [], [], []
-
-            def emit(did: int, variant: str, samples) -> None:
-                for lm in audio_landmarks(samples):
-                    doc_ids.append(did)
-                    variants.append(variant)
-                    lms.append(lm)
-
-            for did, text in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                did = int(did)
-                raw = (text or "").encode("utf-8") or bytes([did % 256])
-                t = np.arange(256)
-                tones = []
-                for k in range(8):
-                    bin_k = 5 + (raw[k % len(raw)] % 50)
-                    tones.append(
-                        np.sin(2 * np.pi * bin_k * t / 256.0) * 0.8 * 32767
-                    )
-                wavef = np.concatenate(tones).astype(np.int16)
-                dec, _rate = decode_audio(encode_wav(wavef, rate=8000))
-                emit(did, "orig", dec)
-                if did < 20:
-                    half = (dec.astype(np.float64) * 0.5).astype(np.int16)
-                    dec2_, _ = decode_audio(encode_wav(half, rate=8000))
-                    emit(did, "twin", dec2_)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, type=pa.int64()),
-                    pa.array(variants, type=pa.string()),
-                    pa.array(lms, type=pa.int64()),
-                ],
-                names=["doc_id", "variant", "landmark"],
-            )
+    def row(doc_id, text):
+        raw = (text or "").encode("utf-8") or bytes([doc_id % 256])
+        t = np.arange(256)
+        bins = [5 + raw[k % len(raw)] % 50 for k in range(8)]
+        tones = [np.sin(2 * np.pi * b * t / 256.0) * 0.8 * 32767 for b in bins]
+        wavef = np.concatenate(tones).astype(np.int16)
+        dec, _rate = decode_audio(encode_wav(wavef, rate=8000))
+        for lm in audio_landmarks(dec):
+            yield doc_id, "orig", lm
+        if doc_id < 20:
+            half = (dec.astype(np.float64) * 0.5).astype(np.int16)
+            twin, _ = decode_audio(encode_wav(half, rate=8000))
+            for lm in audio_landmarks(twin):
+                yield doc_id, "twin", lm
 
     docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
 
@@ -1107,8 +895,8 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         # housekeeping (bench passes) cannot evict them — persist-backed
         # memos re-ran the whole FFT pass per bench pass (2.06 s benched
         # vs 1.10 s measured, r10)
-        df = docs.mapInArrow(
-            op, schema="doc_id long, variant string, landmark long"
+        df = map_rows(
+            docs, row, "doc_id long, variant string, landmark long"
         ).localCheckpoint(eager=True)
         df._omnidata_checkpointed = True
         return df
@@ -1205,7 +993,7 @@ def multimodal_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     so 1.5× splits with margin; an all-uniform grid degenerates to
     median 0 and still flags only the true cut).
 
-    mapInArrow decodes and scores per asset (Arrow batches, spread()
+    A map_rows pass decodes and scores per asset (spread()
     for core parallelism — decode CPU is the real work); the summary is
     one groupBy. Self-evidence: ``cut_detect_rate`` must be 1.0 —
     exactly ONE cut per asset and exactly at transition 3; a wrong
@@ -1213,45 +1001,25 @@ def multimodal_video_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only: the detection rides the codec stack no SQL reproduces."""
     import numpy as np
 
-    from omnidata_etl_spark.codecs import (
-        decode_gif_frames_with_delays,
-        encode_gif_animation,
-    )
+    from omnidata_etl_spark.codecs import decode_gif_frames_with_delays
 
     CUT_AT = 3
-    payload = _synth_scenecut_payload
 
-    import pyarrow as pa
-
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            ok, n_cuts = [], []
-            for did, text in zip(
-                b.column("doc_id").to_pylist(), b.column("text").to_pylist()
-            ):
-                did = int(did)
-                dec, _ = decode_gif_frames_with_delays(payload(did, text))
-                diffs = np.array(
-                    [
-                        np.abs(
-                            dec[i].astype(int) - dec[i - 1].astype(int)
-                        ).mean()
-                        for i in range(1, len(dec))
-                    ]
-                )
-                cuts = np.nonzero(diffs > 1.5 * np.median(diffs))[0] + 1
-                n_cuts.append(len(cuts))
-                ok.append(len(cuts) == 1 and int(cuts[0]) == CUT_AT)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ok, type=pa.bool_()),
-                    pa.array(n_cuts, type=pa.int32()),
-                ],
-                names=["ok", "n_cuts"],
-            )
+    def row(doc_id, text):
+        dec, _ = decode_gif_frames_with_delays(
+            _synth_scenecut_payload(doc_id, text)
+        )
+        diffs = np.array(
+            [
+                np.abs(dec[i].astype(int) - dec[i - 1].astype(int)).mean()
+                for i in range(1, len(dec))
+            ]
+        )
+        cuts = np.nonzero(diffs > 1.5 * np.median(diffs))[0] + 1
+        yield len(cuts) == 1 and int(cuts[0]) == CUT_AT, len(cuts)
 
     docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
-    scored = docs.mapInArrow(op, schema="ok boolean, n_cuts int")
+    scored = map_rows(docs, row, "ok boolean, n_cuts int")
     return scored.agg(
         F.count(F.lit(1)).alias("n_assets"),
         F.sum(F.col("ok").cast("int")).alias("n_detected"),

@@ -1,11 +1,16 @@
-"""Multimodal plumbing tests: the Arrow-batched mapInPandas pipeline works on
-binary payloads with the declared schemas; real decode is a marked stub."""
+"""Multimodal plumbing tests: the per-row codec functions run through
+``_util.map_rows`` over Arrow batches with the declared schemas; decoders
+that need an external library (WebP) are marked stubs."""
 
 from __future__ import annotations
+
+import re
+from pathlib import Path
 
 import pytest
 
 from omnidata_etl_spark.catalog import table
+from omnidata_etl_spark.queries import _util, multimodal
 from omnidata_etl_spark.queries.multimodal import (
     FEATURE_SCHEMA,
     assets_from_documents,
@@ -207,3 +212,134 @@ def test_video_scene_cut_all_detected(spark, sf_dir):
     )
     assert row.cut_detect_rate == 1.0
     assert row.max_cuts_per_asset == 1
+
+
+# -- map_rows: the one per-row Arrow map helper --------------------------------
+
+
+def _out_schema():
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(
+        T.StructType(
+            [
+                T.StructField("id", T.LongType(), False),
+                T.StructField("vec", T.ArrayType(T.DoubleType())),
+                T.StructField("blob", T.BinaryType()),
+                T.StructField("k", T.IntegerType()),
+            ]
+        )
+    )
+
+
+def _fan(id_, blob):
+    """0, 1 or 3 output rows per input row; a NULL blob after the first."""
+    for k in range((0, 1, 3)[id_ % 3]):
+        yield id_, [float(id_), k / 2], blob if k == 0 else None, k
+
+
+def _expected(ids, blobs):
+    return [out for row in zip(ids, blobs) for out in _fan(*row)]
+
+
+@pytest.mark.parametrize(
+    "cuts",
+    [
+        [],  # one batch
+        [0, 0, 1, 1, 8, 8, 13, 20, 20],  # 0-row batches at both ends and inside
+        [3, 4, 5, 11, 19],  # last batch non-empty, one row long
+    ],
+)
+def test_rows_to_batches_is_batch_invariant(cuts):
+    """The worker loop of map_rows, driven without Spark: the same 20 rows
+    as one batch and as many (0-row batches included) give the same typed
+    rows, one output batch per input batch."""
+    import pyarrow as pa
+
+    schema = _out_schema()
+    ids = list(range(20))
+    blobs = [bytes([i]) * i for i in ids]
+    whole = pa.RecordBatch.from_pydict(
+        {"id": pa.array(ids, pa.int64()), "blob": pa.array(blobs, pa.binary())}
+    )
+    bounds = [0, *cuts, len(ids)]
+    batches = [whole.slice(a, b - a) for a, b in zip(bounds, bounds[1:])]
+    out = list(_util.rows_to_batches(iter(batches), _fan, schema))
+    assert len(out) == len(batches)
+    for b_in, b_out in zip(batches, out):
+        assert b_out.schema == schema
+        if b_in.num_rows == 0:
+            assert b_out.num_rows == 0
+    got = pa.Table.from_batches(out, schema=schema)
+    assert [tuple(r.values()) for r in got.to_pylist()] == _expected(ids, blobs)
+    assert got.schema.field("id").nullable is False
+    assert got.column("vec").type == pa.list_(pa.float64())
+    assert got.column("blob").type == pa.binary()
+    assert got.column("k").type == pa.int32()
+
+
+def test_map_rows_empty_frame_keeps_declared_schema(spark):
+    from pyspark.sql.types import _parse_datatype_string
+
+    ddl = "id long not null, vec array<double>, blob binary, k int"
+    empty = spark.range(0).selectExpr("id", "cast(string(id) as binary) AS blob")
+    out = _util.map_rows(empty, _fan, ddl)
+    assert out.collect() == []
+    assert out.schema == _parse_datatype_string(ddl)
+
+
+#: the multimodal queries whose per-row work runs through map_rows
+_MAP_ROWS_OPS = (
+    "multimodal_feature_extract",
+    "multimodal_frame_sample",
+    "multimodal_image_decode_stats",
+    "multimodal_image_resize",
+    "multimodal_audio_stats",
+    "ingest_binary_assets",
+    "multimodal_image_phash",
+    "multimodal_audio_fingerprint",
+    "multimodal_video_scene_cut",
+)
+
+_ARROW_MAP = re.compile(r"\b(?:Python)?MapInArrow\b")
+
+
+def _python_maps(df) -> tuple[int, int]:
+    # the physical plan before AQE: once a frame has run, the adaptive plan
+    # prints each node twice (final and initial plan)
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    return len(_ARROW_MAP.findall(plan)), plan.count("MapInPandas")
+
+
+@pytest.mark.parametrize("name", _MAP_ROWS_OPS)
+def test_multimodal_op_plans_one_arrow_map(spark, sf_dir, monkeypatch, name):
+    """Each op builds exactly one map_rows frame, which plans one Arrow map
+    node and no MapInPandas; the query's own plan adds no other Python map
+    (the checkpointed ops hold none: their map ran at build time)."""
+    from omnidata_etl_spark.registry import all_specs
+
+    built = []
+
+    def recording(df, fn, schema):
+        built.append(_util.map_rows(df, fn, schema))
+        return built[-1]
+
+    monkeypatch.setattr(multimodal, "map_rows", recording)
+    # build the audio landmark frame afresh instead of taking the memo's
+    monkeypatch.setattr(_util, "session_df_memo", lambda s, k, build: build())
+    df = all_specs()[name].fn(spark, sf_dir)
+    assert len(built) == 1
+    assert _python_maps(built[0]) == (1, 0)
+    arrow, pandas = _python_maps(df)
+    assert arrow <= 1 and pandas == 0
+
+
+def test_map_in_arrow_called_only_from_util():
+    """Query modules reach mapInArrow through map_rows only: a site that
+    hand-rolls its own batch loop again shows up here."""
+    queries = Path(_util.__file__).parent
+    callers = sorted(
+        p.name for p in queries.glob("*.py") if "mapInArrow(" in p.read_text()
+    )
+    assert callers == ["_util.py"]

@@ -378,6 +378,38 @@ def test_events_ewma_streams_across_arrow_batches(spark, sf_dir):
     assert tiny == full
 
 
+def test_packer_state_carries_across_arrow_batches(spark, sf_dir):
+    """The packer's open bin (bin_id, used) carries across Arrow batches:
+    7-row batches split every partition's documents over several batches,
+    and the packing must equal the default single-batch run."""
+    from pyspark.sql import functions as F
+
+    from omnidata_etl_spark.queries.quality import pack_documents
+
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", F.size(F.split("text", " ")).alias("n_tokens")
+    )
+
+    def packs():
+        return {
+            (r["doc_id"], r["pack_id"], r["n_tokens"])
+            for r in pack_documents(docs).collect()
+        }
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "7")
+        tiny = packs()
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    full = packs()
+    assert tiny == full
+
+
 def test_time_to_convert_oracle_degenerate_n1(tmp_path, spark):
     """r10 ADVICE: with exactly ONE converted user the oracle's median
     upper-element term indexes past the array (a[2] is NULL); without

@@ -103,3 +103,21 @@ def test_workers_import_engine_from_any_cwd(sf_dir, tmp_path):
     assert "CWD_OK" in proc.stdout, (
         f"stdout:\n{proc.stdout}\nstderr:\n{proc.stderr[-3000:]}"
     )
+
+
+
+def test_default_driver_memory_fits_the_host(spark):
+    """Without OMNIDATA_DRIVER_MEM the local heap is at most two fifths of
+    MemTotal (1g floor, 16g cap), so a test run cannot outgrow a small
+    host; the override still wins."""
+    from omnidata_etl_spark.session import default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    got = default_driver_memory()
+    assert got.endswith("g")
+    gib = int(got[:-1])
+    assert 1 <= gib <= 16
+    assert gib << 20 <= max(kib * 2 // 5, 1 << 20)
+    want = os.environ.get("OMNIDATA_DRIVER_MEM") or got
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == want
