@@ -15,7 +15,11 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from omnidata_etl_spark.session import default_parallelism, ensure_tuned
+from omnidata_etl_spark.session import (
+    default_parallelism,
+    ensure_tuned,
+    session_handles,
+)
 
 TABLES = (
     "region",
@@ -217,16 +221,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_tuned(spark)
     _size_shuffle_partitions(spark, sf_dir)
-    # DataFrame *handles* (logical plans, not data) cached on the session
-    # object itself, so the cache's lifetime IS the session's. (A
-    # module-global WeakKeyDictionary cannot work here: each cached
-    # DataFrame strongly references its session via df._session, pinning
-    # the weak key forever; and an id()-keyed dict could alias a recycled
-    # address to a dead session's plans.)
-    per_session = getattr(spark, "_omnidata_handle_cache", None)
-    if per_session is None:
-        per_session = {}
-        spark._omnidata_handle_cache = per_session
+    per_session = session_handles(spark)
     key = (sf_dir, name)
     cached = per_session.get(key)
     if cached is not None:

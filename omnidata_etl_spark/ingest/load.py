@@ -220,6 +220,8 @@ def load(
     name = sanitize_identifier(table_name)
     if not name:
         raise ValueError("table name sanitized to empty string")
+    if not df.columns:  # an empty file: no header line, no JSON object
+        raise ValueError(f"table {name!r}: the input has no columns")
     target = os.path.join(warehouse, name)
     if os.path.exists(target) and mode == "error":
         raise TableExistsError(f"table {name!r} already exists")

@@ -2,8 +2,12 @@
 
 Reference: 10-row preview with limit pushed into every source (Excel
 `sheetRows:10` backend/index.js:96, text stop-after-11-lines :102-103,
-Access `SELECT TOP 10` :72,:92). Spark's CollectLimit + source limit
-pushdown give the same never-parse-the-whole-file behavior declaratively.
+Access `SELECT TOP 10` :72,:92). Here the row fetch is Spark's CollectLimit
+over the scan, so the rows stop after the first n. The schema is resolved
+by `read_any` on a file's first read in the session: for CSV that is a
+one-row header job, but JSON and XML inference scan the whole file. A later
+`read_any` of the same unchanged file (the load that follows a preview)
+reuses that resolved frame.
 """
 
 from __future__ import annotations

@@ -13,9 +13,16 @@ Reference behavior re-expressed declaratively (SURVEY.md §2A R1-R3, R8, R10):
     stringified at the boundary like the reference's insert path
     (backend/index.js:258).
 
-Everything is a declarative `spark.read` so limit/column pruning push into
-the scan (preview never parses the whole file — Catalyst's CollectLimit is
-the reference's stop-after-11-lines, SURVEY.md §4).
+Everything except Excel is a declarative `spark.read`, so limit/column
+pruning push into the scan (Catalyst's CollectLimit is the reference's
+stop-after-11-lines, SURVEY.md §4).
+
+The schema is resolved when the frame is built, not when it runs: CSV runs
+a one-row header job, JSON and XML run a schema-inference job that scans the
+WHOLE file, markdown reads the header line on the driver, avro reads the
+container header on the driver and parquet reads the footers. `read_any`
+does this once per unchanged regular file per session (see its docstring),
+so a preview followed by a read and a load resolves the file once.
 """
 
 from __future__ import annotations
@@ -27,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omnidata_etl_spark.ingest.types import map_user_type
-from omnidata_etl_spark.session import ensure_tuned
+from omnidata_etl_spark.session import ensure_tuned, session_handles
 
 
 def sniff_delimiter(first_line: str) -> str:
@@ -241,19 +248,50 @@ _EXT_READERS = {
 }
 
 
+def _read(spark: SparkSession, path: str, ext: str) -> DataFrame:
+    if ext == ".parquet":
+        return spark.read.parquet(path)
+    return _EXT_READERS.get(ext, read_delimited)(spark, path)
+
+
 def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
     """Extension-dispatch scan — the engine's `upload` verb (reference
     dispatch at backend/index.js:88-97; Access/OLE DB generalized to
-    "any JDBC source" per SURVEY.md §7.2, see `read_jdbc`)."""
+    "any JDBC source" per SURVEY.md §7.2, see `read_jdbc`).
+
+    A regular local file resolves once per session: the frame is memoized
+    in `session_handles` per `(ext, realpath)` with the file's identity
+    `(st_ino, st_mtime_ns, st_size)`, and a later call on an unchanged
+    file returns the same handle, so `preview` → `read_any` → `load` runs
+    the CSV header job or the JSON inference scan once. A changed identity
+    rebuilds and replaces the entry (one entry per path, kept for the
+    session's life). The handle is a lazy file scan: rows are read fresh at
+    every execution; only the resolved schema, the sniffed delimiter and
+    the file listing are reused, and the identity check keeps those
+    current. Directories, globs and non-local paths resolve on every call,
+    and so do Excel workbooks, whose frames hold the rows parsed on the
+    driver.
+    """
+    ensure_tuned(spark)
     if fmt:
         ext = "." + fmt.lstrip(".")
     else:
         ext = os.path.splitext(strip_codec_suffix(path))[1].lower()
-    if ext == ".parquet":
-        ensure_tuned(spark)
-        return spark.read.parquet(path)
-    reader = _EXT_READERS.get(ext, read_delimited)
-    return reader(spark, path)
+    real = os.path.realpath(path)
+    if ext in (".xlsx", ".xls") or not os.path.isfile(real):
+        return _read(spark, path, ext)
+    # stat BEFORE resolving: a write racing the resolve then leaves an
+    # entry whose identity is already stale, so the next call rebuilds
+    st = os.stat(real)
+    ident = (st.st_ino, st.st_mtime_ns, st.st_size)
+    handles = session_handles(spark)
+    key = ("read_any", ext, real)
+    hit = handles.get(key)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    df = _read(spark, path, ext)
+    handles[key] = (ident, df)
+    return df
 
 
 def read_jdbc(

@@ -106,6 +106,22 @@ def default_driver_memory() -> str:
     return f"{max(1, min(16, kib * 2 // 5 >> 20))}g"
 
 
+def session_handles(spark: SparkSession) -> dict:
+    """The session's DataFrame-handle dict (logical plans, not data), shared
+    by `catalog.table` and `ingest.readers.read_any`.
+
+    It lives on the session object itself, so its lifetime IS the session's.
+    (A module-global WeakKeyDictionary cannot work here: each cached
+    DataFrame strongly references its session via df._session, pinning the
+    weak key forever; and an id()-keyed dict could alias a recycled address
+    to a dead session's plans.)"""
+    handles = getattr(spark, "_omnidata_handle_cache", None)
+    if handles is None:
+        handles = {}
+        spark._omnidata_handle_cache = handles
+    return handles
+
+
 def ensure_tuned(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable engine conf to an externally-created session.
 

@@ -251,6 +251,50 @@ def test_read_avro_df_directory_parallel(spark, tmp_path):
     assert "MapInPandas" in plan
 
 
+def test_read_avro_df_batch_invariant(spark, tmp_path):
+    """The decode's mapInPandas input is one row per file: with every file
+    of a directory in one partition, 7-row Arrow batches split the files
+    over several batches, and the decoded rows must equal the default
+    single-batch run."""
+    from omnidata_etl_spark.ingest.avro import read_avro_df
+
+    d = tmp_path / "batches"
+    d.mkdir()
+    for k in range(30):  # 30 files of 3 records, 2-record blocks
+        write_avro(
+            str(d / f"part-{k:02d}.avro"),
+            SCHEMA_ALL,
+            [_rec(3 * k + j) for j in range(3)],
+            records_per_block=2,
+        )
+    confs = {  # pack all 30 files into one scan partition
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = {k: spark.conf.get(k, None) for k in [*confs, batch]}
+
+    def rows():
+        df = read_avro_df(spark, str(d))
+        assert df.rdd.getNumPartitions() == 1
+        return sorted(df.collect(), key=lambda r: r["i"])
+
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        full = rows()
+        spark.conf.set(batch, "7")
+        tiny = rows()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert len(full) == 90
+    assert tiny == full
+
+
 def test_read_any_dispatches_avro(spark, tmp_path):
     from omnidata_etl_spark.ingest.readers import read_any
 

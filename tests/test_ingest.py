@@ -261,3 +261,173 @@ def test_schema_evolution_merge(spark, sf_dir):
     assert row["evolution_ok"] is True
     assert row["n_columns"] == 4
     assert row["n_backfilled"] * 2 == row["n_rows"]
+
+
+def _write(path, text: str) -> None:
+    with open(path, "w", encoding="utf-8") as f:
+        f.write(text)
+
+
+def _schema_jobs(spark, group: str) -> int:
+    """Schema-resolution jobs run under `group`: the CSV header job and the
+    JSON inference scan are the stages named `csv at` / `json at` (the
+    preview rows are `collect at`, the load's write `parquet at`)."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.monotonic() + 10
+    while True:  # the status store fills from the async listener bus;
+        # the load's write is the group's last job, so wait for it
+        names = [
+            tracker.getStageInfo(s).name
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+            if tracker.getStageInfo(s) is not None
+        ]
+        if any(n.startswith("parquet at") for n in names):
+            break
+        assert time.monotonic() < deadline, names
+        time.sleep(0.05)
+    return sum(n.startswith(("csv at", "json at")) for n in names)
+
+
+@pytest.mark.parametrize(
+    "name, text",
+    [
+        ("fresh.csv", "a,b,amount\n" + "".join(f"{i},x{i},{i}.5\n" for i in range(40))),
+        ("fresh.jsonl", "".join(f'{{"a": {i}, "amount": "{i}.5"}}\n' for i in range(40))),
+    ],
+)
+def test_preview_read_load_resolves_schema_once(spark, tmp_path, name, text):
+    """preview → read_any → load of a file seen for the first time resolves
+    its schema in ONE job: the read after the preview returns the memoized
+    handle instead of re-running the CSV header job / JSON inference scan
+    (two schema jobs without the memo)."""
+    path = str(tmp_path / name)
+    _write(path, text)
+    sc = spark.sparkContext
+    group = f"schema-once-{name}-{tmp_path.name}"
+    sc.setJobGroup(group, "preview, read, load")
+    try:
+        pv = preview(spark, path, n=5)
+        df = read_any(spark, path)
+        load(df, "fresh", warehouse=str(tmp_path / "wh"),
+             types={"amount": "DECIMAL(10,1)"})
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(pv["preview"]) == 5 and "amount" in pv["headers"]
+    assert _schema_jobs(spark, group) == 1
+    assert read_any(spark, path) is df
+
+
+def test_read_any_memo_sees_a_rewritten_file(spark, tmp_path):
+    """Each part of the file identity (inode, mtime, size) invalidates the
+    memo on its own: a rewritten file's new header is seen."""
+    import os
+
+    path = str(tmp_path / "t.csv")
+    _write(path, "a,b\n1,2\n")
+    first = read_any(spark, path)
+    assert first.columns == ["a", "b"]
+    assert read_any(spark, path) is first
+
+    # new inode (atomic replace), same size, mtime pinned to the old one
+    st = os.stat(path)
+    _write(path + ".tmp", "c,d\n3,4\n")
+    os.utime(path + ".tmp", ns=(st.st_atime_ns, st.st_mtime_ns))
+    os.replace(path + ".tmp", path)
+    assert os.stat(path).st_size == st.st_size
+    assert read_any(spark, path).columns == ["c", "d"]
+
+    # same inode, same size, new mtime
+    st = os.stat(path)
+    _write(path, "e,f\n5,6\n")
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert os.stat(path).st_ino == st.st_ino
+    assert read_any(spark, path).columns == ["e", "f"]
+
+    # same inode, same mtime, new size
+    st = os.stat(path)
+    _write(path, "g,h,i\n7,8,9\n")
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))
+    got = read_any(spark, path)
+    assert got.columns == ["g", "h", "i"]
+    assert [tuple(r) for r in got.collect()] == [("7", "8", "9")]
+
+
+def test_read_any_rebuilds_directories_and_excel(spark, tmp_path):
+    """Only regular files with a lazy-scan reader are memoized: a directory
+    (its file set can change) and an Excel workbook (its frame holds rows
+    parsed on the driver) resolve on every call."""
+    from omnidata_etl_spark.ingest.fixtures import _ROWS
+    from omnidata_etl_spark.ingest.xlsx import write_xlsx
+
+    d = str(tmp_path / "dir")
+    spark.range(3).write.parquet(d)
+    assert read_any(spark, d, fmt="parquet") is not read_any(spark, d, fmt="parquet")
+    xlsx = str(tmp_path / "people.xlsx")
+    write_xlsx(xlsx, list(PEOPLE_HEADERS), list(_ROWS))
+    assert read_any(spark, xlsx) is not read_any(spark, xlsx)
+
+
+def test_read_any_memo_equals_unmemoized_read(spark, tmp_path):
+    """The memoized handle gives the same schema and rows as a fresh
+    resolve, for every memoized reader."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from omnidata_etl_spark.ingest.avro import write_avro
+    from omnidata_etl_spark.ingest.readers import _read
+    from tests.oracle_util import canonical
+
+    avro = str(tmp_path / "people.avro")
+    write_avro(
+        avro,
+        {"type": "record", "name": "r", "fields": [
+            {"name": "a", "type": "long"}, {"name": "s", "type": "string"}]},
+        [{"a": i, "s": f"s{i}"} for i in range(9)],
+        records_per_block=2,
+    )
+    parquet = str(tmp_path / "people.parquet")
+    pq.write_table(pa.table({"a": list(range(9)), "s": list("abcdefghi")}), parquet)
+    paths = [
+        fixture_path("people_comma.csv"),
+        fixture_path("people_tab.tsv"),
+        fixture_path("people_pipe.md"),
+        fixture_path("people.jsonl"),
+        fixture_path("people.xml"),
+        avro,
+        parquet,
+    ]
+    for path in paths:
+        memo = read_any(spark, path)
+        assert read_any(spark, path) is memo
+        ext = "." + path.rsplit(".", 1)[1]
+        fresh = _read(spark, path, ext)
+        assert memo.schema == fresh.schema, path
+        assert canonical(memo.toPandas()) == canonical(fresh.toPandas()), path
+
+
+@pytest.mark.parametrize(
+    "name, text, want",
+    [
+        ("empty.csv", "", None),
+        ("empty.jsonl", "", None),
+        ("header_only.csv", "a,b,c\n", ["a", "b", "c", "id"]),
+    ],
+)
+def test_load_zero_column_input_raises_named_error(spark, tmp_path, name, text, want):
+    """An empty file has no columns: preview shows no headers and load
+    names the table instead of failing inside the surrogate key's sort. A
+    header-only CSV has columns and loads zero rows."""
+    path = str(tmp_path / name)
+    _write(path, text)
+    wh = str(tmp_path / "wh")
+    if want is None:
+        assert preview(spark, path)["headers"] == []
+        with pytest.raises(ValueError, match="'empty_t'.*no columns"):
+            load(read_any(spark, path), "empty_t", warehouse=wh)
+        return
+    got = spark.read.parquet(load(read_any(spark, path), "header_only", warehouse=wh))
+    assert got.columns == want
+    assert got.count() == 0

@@ -653,7 +653,12 @@ def test_mode_deterministic_windowgrouplimit(spark, sf_dir):
     df = _SPECS["agg_mode_deterministic"].fn(spark, sf_dir)
     df.collect()
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("WindowGroupLimit") >= 2
+    # toString() prints "== Final Plan ==" then "== Initial Plan ==": count
+    # in the plan that ran only, or each node counts twice
+    final = plan.split("== Initial Plan ==")[0].splitlines()
+    limits = [l.rstrip() for l in final if "WindowGroupLimit" in l]
+    assert len(limits) == 2, plan
+    assert limits[0].endswith(", Final") and limits[1].endswith(", Partial"), plan
 
 
 def test_range_bucketed_join_never_cartesian(spark, sf_dir):

@@ -394,3 +394,31 @@ def test_power_iteration_three_legs(spark, sf_dir):
     # spike is 100x the corpus energy: the eigenvalue must be dominated
     # by the planted mass (within a few % — the corpus adds its share)
     assert row.n_vectors > 32
+
+
+def test_power_iteration_batch_invariant(spark, sf_dir):
+    """Each GEMV pass reduces per Arrow batch and sums the partials on the
+    driver: 7-row batches split every partition's rows over several
+    batches (more than 56 rows over at most 8 partitions), and the result
+    must equal the default run up to float summation order (1e-9)."""
+    import pytest
+
+    fn = all_specs()["embedding_power_iteration"].fn
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "7")
+        tiny = fn(spark, sf_dir).collect()[0]
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    full = fn(spark, sf_dir).collect()[0]
+    assert full.n_vectors > 56
+    for name in ("n_vectors", "dim", "converged_ok", "residual_ok",
+                 "planted_recovery_ok"):
+        assert tiny[name] == full[name], name
+    assert tiny.eigenvalue == pytest.approx(full.eigenvalue, rel=1e-9)
+    for name in ("converge_cos", "residual_ratio", "planted_recovery_cos"):
+        assert tiny[name] == pytest.approx(full[name], rel=0, abs=1e-9), name
