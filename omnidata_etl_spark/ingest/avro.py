@@ -484,29 +484,18 @@ def read_avro_df(spark, path: str):
     contents ride binaryFile and decode on executors via mapInPandas, one
     pandas batch per OCF block (executor memory bounded by block size).
     Directory layouts parallelize per file — the standard Avro shape."""
-    import glob as _glob
-    import os
-
+    from omnidata_etl_spark.ingest.readers import first_visible_file
     from omnidata_etl_spark.session import ensure_tuned
 
     ensure_tuned(spark)
-    if os.path.isdir(path):
-        first = sorted(
-            p
-            for p in _glob.glob(os.path.join(path, "**", "*"), recursive=True)
-            if os.path.isfile(p) and not os.path.basename(p).startswith((".", "_"))
-        )[0]
-        pattern = path
-    else:
-        first = path
-        pattern = path
+    first = first_visible_file(path)
     with open(first, "rb") as f:
         head = f.read(1 << 20)  # header is a small metadata map
     schema, _, _ = read_header(Decoder(head))
     spark_schema = spark_schema_for(schema)
     field_names = [f.name for f in spark_schema.fields]
     # struct columns arrive in pandas as dicts; Arrow handles the rest
-    binary = spark.read.format("binaryFile").load(pattern)
+    binary = spark.read.format("binaryFile").load(path)
 
     def _decode(batches):
         import pandas as pd

@@ -5,14 +5,14 @@ Mirrors the reference's save flow (SURVEY.md §3.2): column selection
 (:174-182), exists-check → error (:153-160), transactional batched insert
 (:186-236,:249-273). Empty→NULL and the user casts are one projection.
 
-Surrogate key size rule: an input whose plan-time size is at most
-`ONE_TASK_MAX_BYTES` (8 MB) is read, sorted and numbered in ONE task —
-one Spark job. A larger input takes the two-phase distributed row_number
-(range shuffle into `default_parallelism()` tasks, parallel local sorts,
-broadcast per-partition offsets): more jobs, but the scan, parse, casts
-and sort run in parallel. The bound is a constant set from a measured
-crossover, not a session conf. Both paths give the same dense 1..N ids
-for a unique ordering key.
+Surrogate key: the rows are numbered by `queries/_util.range_numbered`,
+whose path follows the engine's one size rule (`_util.fits_one_task`): an
+input whose plan-time size is at most `_util.ONE_TASK_MAX_BYTES` (8 MB) is
+read, sorted and numbered in ONE task — one Spark job. A larger input is
+range-partitioned into `default_parallelism()` tasks with parallel local
+sorts, and its per-partition offsets are broadcast back: more jobs, but the
+scan, parse, casts and sort run in parallel. Both paths give the same dense
+1..N ids for a unique ordering key.
 
 Atomicity: Spark has no cross-partition transaction (SURVEY.md §7.3 #3), so
 the sink stages the whole write into a hidden directory and atomically
@@ -29,10 +29,15 @@ import re
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from omnidata_etl_spark.ingest.readers import empty_to_null
+from omnidata_etl_spark.queries._util import (
+    fits_one_task,
+    range_numbered,
+    rank_offset,
+)
 
 
 class TableExistsError(RuntimeError):
@@ -46,28 +51,6 @@ def sanitize_identifier(name: str) -> str:
 
 def has_id_column(df: DataFrame) -> bool:
     return any(c.lower() == "id" for c in df.columns)
-
-
-# Largest plan-time input size (optimized-plan `sizeInBytes` of the keyed
-# frame) that add_surrogate_key sorts in one task. Measured with typed CSV
-# loads on a 4-core host, each path forced, medians of 3: the two-phase
-# path costs ~1.0 s even at 3 MB (its job floor), while one task takes
-# ~0.5 s at 3 MB, ~1.1 s at 12.5 MB and breaks even with the parallel path
-# at 25-37 MB. Up to 8 MB one task beats that floor, which is job
-# scheduling, not data work, so more cores should not lower it (not
-# measured). The bound deliberately ignores session conf: the AQE advisory
-# size changes when catalog reads resize it.
-ONE_TASK_MAX_BYTES = 8 << 20
-
-
-def _fits_one_task(df: DataFrame) -> bool:
-    """Plan-time size of `df` at most ONE_TASK_MAX_BYTES. Below it, one
-    task's scan + sort costs less than the two-phase path's extra jobs. The
-    two-phase path itself is parallel (explicit `default_parallelism()`
-    range partitions, which AQE does not coalesce), so this trades its
-    parallelism for fewer jobs."""
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    return int(str(size)) <= ONE_TASK_MAX_BYTES
 
 
 def _guarded_id(pos: str, as_long: bool) -> Column:
@@ -97,28 +80,22 @@ def add_surrogate_key(
     """Inject a dense 1..N `id` iff no case-insensitive `id` exists (R12,
     reference `backend/index.js:174-182` — `id SERIAL` when absent).
 
-    The path depends on the input's plan-time size (optimized-plan
-    `sizeInBytes`) against `ONE_TASK_MAX_BYTES` (see its comment):
+    The rows are numbered by `_util.range_numbered`, so the path follows
+    the engine's one size rule, `_util.fits_one_task` (see
+    `_util.ONE_TASK_MAX_BYTES`):
 
-    * **At most ONE_TASK_MAX_BYTES** — the input sorts in ONE task:
-      `coalesce(1)` → local sort → `monotonically_increasing_id() + 1`.
-      `coalesce(1)` has no shuffle, so the upstream scan, parse and casts
-      run in that task too. One job; no range-sampling job, exchange,
-      cache, offsets Window or broadcast join (each Spark job costs
-      ~30-100 ms locally, and the two-phase path below runs eight of them
-      for a 10k-row CSV). This gives up the two-phase path's parallelism
-      for fewer jobs, which pays only while the input is small.
+    * **At most ONE_TASK_MAX_BYTES** — the input sorts in ONE task and `id`
+      is the in-task row number. `coalesce(1)` has no shuffle, so the
+      upstream scan, parse and casts run in that task too. One job; no
+      range-sampling job, exchange, cache, offsets Window or broadcast
+      join (each Spark job costs ~30-100 ms locally, and the range path
+      below runs eight of them for a 10k-row CSV).
     * **Larger inputs** take the two-phase distributed row_number, NOT a
       global `Window.orderBy` (that form moves every row to one partition —
       the single-node sort is the 100 TB anti-pattern WindowExec itself
-      warns about):
-
-      1. range-partition on the ordering key (global order ACROSS
-         partitions is preserved; partition i's keys all sort before
-         partition i+1's),
-      2. `row_number` within each partition (parallel local sorts),
-      3. add per-partition row-count offsets — one row per partition,
-         broadcast.
+      warns about): range partitions with parallel local sorts, then
+      per-partition row-count offsets — one row per partition, broadcast
+      — added to the local row numbers.
 
     For a unique ordering key both paths give the global window's result (a
     row's number is its position in the total order), regardless of where
@@ -133,64 +110,19 @@ def add_surrogate_key(
     """
     if has_id_column(df):
         return df
-    order_cols = order_by or df.columns
-    ocols = [F.col(c) for c in order_cols]
-    if _fits_one_task(df):
-        # One partition: monotonically_increasing_id() is the consecutive-
-        # from-0 record number over the sorted stream (partition id 0 in
-        # the upper bits).
-        return (
-            df.coalesce(1)
-            .sortWithinPartitions(*ocols)
-            .withColumn("_sk_rn", F.monotonically_increasing_id() + 1)
-            .withColumn("id", _guarded_id("_sk_rn", as_long))
-            .drop("_sk_rn")
-        )
-    from omnidata_etl_spark.session import default_parallelism
-
-    # Local row number WITHOUT a Window: a Window.partitionBy(pid) would
-    # demand hashpartitioning(pid) — a second full-data shuffle Catalyst
-    # can't elide even though each partition already holds exactly one pid.
-    # monotonically_increasing_id() is documented (its API doc + source) as
-    # partition id in the upper bits and the consecutive-from-0 record
-    # number within the partition in the low 33 bits; masked, it IS the
-    # local row number over the sorted stream (the id is nondeterministic-
-    # tagged, so Catalyst never reorders it across the sort below it).
-    numbered = (
-        df.repartitionByRange(default_parallelism(), *ocols)
-        .sortWithinPartitions(*ocols)
-        .withColumn("_sk_pid", F.spark_partition_id())
-        .withColumn(
-            "_sk_rn",
-            F.monotonically_increasing_id().bitwiseAND(
-                F.lit((1 << 33) - 1)
-            )
-            + 1,
-        )
-        .persist()  # two consumers below; ReusedExchange cannot dedupe a
-        # broadcast-side subtree, so without the cache the offsets branch
-        # would re-run the range shuffle. load() unpersists after its sink
-        # write; other callers inherit the session-scoped cache lifetime.
-    )
-    # Per-partition offsets: #partitions rows — the single-partition
-    # prefix-sum window over them is trivial at any scale (partition
-    # count, not row count).
-    offsets = (
-        numbered.groupBy("_sk_pid")
-        .agg(F.count(F.lit(1)).alias("_sk_n"))
-        .withColumn(
-            "_sk_off",
-            F.coalesce(
-                F.sum("_sk_n").over(
-                    Window.orderBy("_sk_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0).cast("long"),
-            ),
-        )
-        .select("_sk_pid", "_sk_off")
-    )
+    numbered = range_numbered(df, order_by or df.columns)
+    if fits_one_task(df):
+        return numbered.withColumn(
+            "id", _guarded_id("_sk_rn", as_long)
+        ).drop("_sk_pid", "_sk_rn")
+    # two consumers below; ReusedExchange cannot dedupe a broadcast-side
+    # subtree, so without the cache the offsets branch would re-run the
+    # range shuffle. load() unpersists after its sink write; other callers
+    # inherit the session-scoped cache lifetime.
+    numbered = numbered.persist()
+    offsets = numbered.groupBy("_sk_pid").agg(
+        F.count(F.lit(1)).alias("cnt")
+    ).select("_sk_pid", rank_offset().alias("_sk_off"))
     out = (
         numbered.join(F.broadcast(offsets), "_sk_pid")
         .withColumn("id", _guarded_id("_sk_rn + _sk_off", as_long))

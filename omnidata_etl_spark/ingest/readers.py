@@ -57,9 +57,28 @@ def strip_codec_suffix(path: str) -> str:
     return root if ext.lower() in _CODEC_OPENERS else path
 
 
+def first_visible_file(path: str) -> str:
+    """`path` itself, or for a directory the first file in sorted order
+    under it whose name does not start with `_` or `.` — the files Spark's
+    listing reads (it hides `_SUCCESS`, `.crc` and staging names)."""
+    if not os.path.isdir(path):
+        return path
+    import glob
+
+    files = sorted(
+        p
+        for p in glob.glob(os.path.join(path, "**", "*"), recursive=True)
+        if os.path.isfile(p) and not os.path.basename(p).startswith((".", "_"))
+    )
+    if not files:
+        raise FileNotFoundError(f"{path}: the directory holds no data file")
+    return files[0]
+
+
 def _first_line(path: str) -> str:
     import importlib
 
+    path = first_visible_file(path)
     # Compressed text sniffs the same way Spark reads it: through the codec.
     ext = os.path.splitext(path)[1].lower()
     if ext in _CODEC_OPENERS:

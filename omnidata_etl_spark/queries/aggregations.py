@@ -20,6 +20,8 @@ from omnidata_etl_spark.queries._util import (
     crevsum,
     csum,
     dec2,
+    range_numbered,
+    rank_offset,
 )
 from omnidata_etl_spark.registry import query
 
@@ -904,69 +906,37 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality readout over the per-customer revenue distribution
     (G = (2·Σᵢ i·xᵢ − (n+1)·Σx) / (n·Σx) with x sorted ascending).
 
-    The interesting part at 100 TB is the EXACT global rank: a naive
-    `row_number() OVER (ORDER BY x)` funnels every customer through one
-    WindowExec partition. r11 optimization round (guide §2.4): the
-    previous form materialized the two-phase distributed rank
-    (add_surrogate_key: range partition → local sort → persisted frame
-    consumed by an offsets branch AND the final aggregate) — under
-    re-execution the persisted frame is rebuilt for BOTH consumers every
-    run (0.66 s/run in the bench regime). But Gini never needs the
-    per-row rank column: with id = local_rn + offset(partition),
+    The EXACT global rank comes from `_util.range_numbered`, so it follows
+    the engine's one size rule (`_util.fits_one_task`): a small revenue
+    frame is ranked in one task, a larger one over range partitions with
+    parallel local sorts — never a `row_number() OVER (ORDER BY x)` that
+    funnels every customer through one WindowExec partition. Gini never
+    needs the per-row rank column: with rank = local_rn + offset(partition),
 
-        Σ id·x = Σ_p [ Σ_local rn·x  +  offset(p) · Σ_local x ]
+        Σ rank·x = Σ_p [ Σ_local rn·x  +  offset(p) · Σ_local x ]
 
-    so ONE pass over the range-partitioned, locally-sorted frame
-    aggregates per-partition (count, Σx, Σ rn·x), the |partitions|-row
-    result takes a trivial prefix-sum for offsets, and the three global
-    sums fall out — no persist, no second consumer, no broadcast join
-    back, same exact integers. All sums run in integer cents (revenue
-    decimals ×100; rank·cents products summed exactly in decimal/
-    HUGEINT), so the final double quotient is bit-identical across
-    engines. Revenue ties across range boundaries don't perturb G: equal
-    x contribute x·Σranks regardless of which tied row gets which rank
-    (and the (x, custkey) order key is unique anyway)."""
-    from omnidata_etl_spark.session import default_parallelism
-
+    so ONE pass over the numbered frame aggregates per-partition (count,
+    Σx, Σ rn·x), the |partitions|-row result takes the prefix-sum offsets
+    (`_util.rank_offset`), and the three global sums fall out — no
+    persist, no second consumer, no broadcast join back. All sums run in
+    integer cents (revenue decimals ×100; rank·cents products summed
+    exactly in decimal/HUGEINT), so the final double quotient is
+    bit-identical across engines. Revenue ties don't perturb G: equal x
+    contribute x·Σranks regardless of which tied row gets which rank (and
+    the (x, custkey) order key is unique anyway)."""
     o = table(spark, sf_dir, "orders")
     rev = o.groupBy("o_custkey").agg(
         (F.sum(dec2("o_totalprice")) * 100).cast("long").alias("xc")
     )
-    # same rank layout as add_surrogate_key's large-input path (range
-    # partition + local sort; monotonically_increasing_id's low 33 bits ARE
-    # the local row number over the sorted stream and its nondeterministic
-    # tag stops Catalyst reordering it below the sort)
-    numbered = (
-        rev.repartitionByRange(default_parallelism(), "xc", "o_custkey")
-        .sortWithinPartitions("xc", "o_custkey")
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_rn",
-            F.monotonically_increasing_id().bitwiseAND(
-                F.lit((1 << 33) - 1)
-            )
-            + 1,
-        )
-    )
-    per = numbered.groupBy("_pid").agg(
+    per = range_numbered(rev, ["xc", "o_custkey"]).groupBy("_sk_pid").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum(F.col("xc").cast("decimal(38,0)")).alias("sx"),
-        F.sum((F.col("_rn") * F.col("xc")).cast("decimal(38,0)")).alias(
+        F.sum((F.col("_sk_rn") * F.col("xc")).cast("decimal(38,0)")).alias(
             "srx"
         ),
     )
-    # |partitions|-row frame: the unpartitioned prefix-sum window is the
-    # sanctioned bounded-frame pattern (partition count, not row count)
-    off = F.coalesce(
-        F.sum("cnt").over(
-            Window.orderBy("_pid").rowsBetween(
-                Window.unboundedPreceding, -1
-            )
-        ),
-        F.lit(0).cast("long"),
-    )
     a = (
-        per.withColumn("off", off)
+        per.withColumn("off", rank_offset())
         .agg(
             F.sum("cnt").alias("n"),
             F.sum("sx").alias("s"),

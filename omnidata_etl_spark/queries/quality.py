@@ -15,7 +15,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import dec2, local_df, rev_units
+from omnidata_etl_spark.queries._util import (
+    dec2,
+    local_df,
+    range_numbered,
+    rank_offset,
+    rev_units,
+)
 from omnidata_etl_spark.queries.text import _STOPWORDS_SQL
 from omnidata_etl_spark.registry import query
 
@@ -741,12 +747,13 @@ def etl_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     The 100 TB shape: shuffling by sorting on a seeded hash, NOT by
     collecting or sampling — `md5(seed || doc_id)` is the permutation,
     and the global position comes from ingest.load's surrogate key
-    (load.py:add_surrogate_key). Its size rule picks the path: a keyed
-    frame whose plan-time size is at most `load.ONE_TASK_MAX_BYTES`
-    (8 MB) sorts in one task — the test corpora up to sf0.1 do — and
-    anything larger takes the two-phase distributed row_number
-    (range-partition on the hash → parallel local sorts → broadcast
-    per-partition offsets), never a single-partition
+    (load.py:add_surrogate_key), which numbers rows through
+    `_util.range_numbered` and so follows the engine's one size rule
+    (`_util.fits_one_task`): a keyed frame whose plan-time size is at most
+    `_util.ONE_TASK_MAX_BYTES` (8 MB) sorts in one task — the test corpora
+    up to sf0.1 do — and anything larger takes the two-phase distributed
+    row_number (range-partition on the hash → parallel local sorts →
+    broadcast per-partition offsets), never a single-partition
     global Window. `as_long=True` is the BIGSERIAL opt-in — corpus row
     counts exceed INT_MAX. doc_id is the tiebreak so the permutation is
     total and the oracle differential is exact (md5 hex parity between
@@ -988,63 +995,30 @@ def etl_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Stage boundaries need the EXACT global rank (quantile-free: stage =
     (rank-1)·4 div n, integer arithmetic both engines share bit-for-bit).
-    Like agg_gini_concentration this uses the two-phase distributed rank
-    (range-partition → local sorts → broadcast offsets) instead of the
-    single-partition `row_number() OVER (ORDER BY ...)` funnel — the
-    oracle runs the funnel form because DuckDB is single-node anyway; the
-    ranks are identical because the order is total.
-
-    r11 optimization round: the add_surrogate_key + session_df_memo form
-    consumed the persisted rank frame from THREE branches (offsets, total
-    count, the stage projection), so a cache-cold execution — the bench's
-    prepared-statement regime, or any one-shot pipeline run — re-ran the
-    range shuffle four times plus two cache writes. Now the per-partition
-    counts frame yields offsets AND the total in one tiny pass, and the
-    stage projection is the only other consumer: exactly two executions
-    of the scan→tokenize→range-exchange pipeline, no persist. The two
-    executions land identical partitionings (RangePartitioner's sampling
-    is deterministic for a deterministic input — the same property
-    prepared-statement re-execution of add_surrogate_key plans already
-    relies on)."""
-    from omnidata_etl_spark.session import default_parallelism
-
+    The rank comes from `_util.range_numbered`, so it follows the engine's
+    one size rule (`_util.fits_one_task`): a small `(doc_id, n_tokens)`
+    frame is ranked in one task, a larger one over range partitions with
+    parallel local sorts — never the single-partition `row_number() OVER
+    (ORDER BY ...)` funnel the oracle runs (DuckDB is single-node anyway;
+    the ranks are identical because the order is total). The
+    per-partition counts frame yields the offsets and the total in one
+    tiny pass, and the stage projection is its only other consumer. On
+    the range path both consumers read ONE materialized range exchange
+    (the second is a ReusedExchange), so they see the same partitioning;
+    no persist."""
     docs = table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split("text", " ")).cast("bigint").alias("n_tokens"),
     )
-    numbered = (
-        docs.repartitionByRange(
-            default_parallelism(), "n_tokens", "doc_id"
-        )
-        .sortWithinPartitions("n_tokens", "doc_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_rn",
-            F.monotonically_increasing_id().bitwiseAND(
-                F.lit((1 << 33) - 1)
-            )
-            + 1,
-        )
-    )
-    # |partitions|-row frame: prefix-sum offsets + grand total in one go
-    # (unpartitioned windows over a partition-count-bounded frame — the
-    # sanctioned pattern)
-    counts = numbered.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt"))
-    woff = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    wall = Window.orderBy("_pid").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    numbered = range_numbered(docs, ["n_tokens", "doc_id"])
+    counts = numbered.groupBy("_sk_pid").agg(F.count(F.lit(1)).alias("cnt"))
     stats = counts.select(
-        "_pid",
-        F.coalesce(F.sum("cnt").over(woff), F.lit(0).cast("long")).alias(
-            "_off"
-        ),
-        F.sum("cnt").over(wall).alias("_n"),
+        "_sk_pid",
+        rank_offset().alias("_off"),
+        F.sum("cnt").over(Window.partitionBy()).alias("_n"),
     )
-    staged = numbered.join(F.broadcast(stats), "_pid").select(
-        F.expr("CAST((_off + _rn - 1) * 4 DIV _n AS INT)").alias("stage"),
+    staged = numbered.join(F.broadcast(stats), "_sk_pid").select(
+        F.expr("CAST((_off + _sk_rn - 1) * 4 DIV _n AS INT)").alias("stage"),
         "n_tokens",
     )
     return staged.groupBy("stage").agg(

@@ -26,7 +26,9 @@ def sf_dir() -> str:
 
 @pytest.fixture
 def two_phase_key(monkeypatch):
-    """Send every add_surrogate_key call in the test through the two-phase
-    range path: the test inputs all fit ONE_TASK_MAX_BYTES."""
-    load_mod = importlib.import_module("omnidata_etl_spark.ingest.load")
-    monkeypatch.setattr(load_mod, "ONE_TASK_MAX_BYTES", -1)
+    """Send every engine-side global rank in the test (add_surrogate_key,
+    agg_gini_concentration, etl_curriculum_stages — all through
+    `_util.range_numbered`) down the range path: the test inputs all fit
+    ONE_TASK_MAX_BYTES."""
+    util = importlib.import_module("omnidata_etl_spark.queries._util")
+    monkeypatch.setattr(util, "ONE_TASK_MAX_BYTES", -1)

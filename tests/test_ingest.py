@@ -136,6 +136,7 @@ def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
     import importlib
 
     load_mod = importlib.import_module("omnidata_etl_spark.ingest.load")
+    util = importlib.import_module("omnidata_etl_spark.queries._util")
     df = read_any(spark, fixture_path("people_noid.csv"))
 
     def keyed(order_by):
@@ -154,7 +155,7 @@ def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
 
     orders = (None, ["full_name"])
     small = [keyed(o) for o in orders]
-    monkeypatch.setattr(load_mod, "ONE_TASK_MAX_BYTES", -1)
+    monkeypatch.setattr(util, "ONE_TASK_MAX_BYTES", -1)
     large = [keyed(o) for o in orders]
 
     for (small_plan, small_rows), (large_plan, large_rows) in zip(small, large):
@@ -169,6 +170,38 @@ def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
     by_name = sorted(small[1][1], key=lambda t: t[1])
     names = [row[df.columns.index("full_name")] for row, _ in by_name]
     assert names == sorted(names)
+
+
+@pytest.mark.parametrize("force_range", [False, True], ids=["one_task", "range"])
+def test_surrogate_key_degenerate_inputs(spark, monkeypatch, force_range):
+    """On both paths of the size rule, a 0-row frame numbers to 0 rows and
+    keeps its declared schema plus `id`, and a 1-row frame gets id 1."""
+    from omnidata_etl_spark.ingest.load import add_surrogate_key
+    from omnidata_etl_spark.queries import _util
+
+    if force_range:
+        monkeypatch.setattr(_util, "ONE_TASK_MAX_BYTES", -1)
+    # spark.range has a plan-time size; an RDD-backed createDataFrame does
+    # not, and an unknown size always takes the range path
+    empty, one = (
+        spark.range(n).selectExpr("'x' AS name", "CAST(7 AS INT) AS n")
+        for n in (0, 1)
+    )
+    assert _util.range_numbered(empty, ["name"]).collect() == []
+    assert [r["_sk_rn"] for r in _util.range_numbered(one, ["name"]).collect()] == [1]
+
+    for df, want in ((empty, []), (one, [("x", 7, 1)])):
+        out = add_surrogate_key(df)
+        try:
+            assert out.schema.simpleString() == (
+                "struct<name:string,n:int,id:int>"
+            )
+            assert [tuple(r) for r in out.collect()] == want
+        finally:
+            cache = getattr(out, "_sk_cache", None)
+            if cache is not None:
+                cache.unpersist()
+        assert hasattr(out, "_sk_cache") == force_range
 
 
 def test_errorifexists(spark):
@@ -368,6 +401,31 @@ def test_read_any_rebuilds_directories_and_excel(spark, tmp_path):
     xlsx = str(tmp_path / "people.xlsx")
     write_xlsx(xlsx, list(PEOPLE_HEADERS), list(_ROWS))
     assert read_any(spark, xlsx) is not read_any(spark, xlsx)
+
+
+def test_read_any_reads_a_directory_of_text_files(spark, tmp_path):
+    """A directory of CSV or markdown files sniffs its header from the first
+    visible file in sorted order — names starting with `_` or `.` are
+    hidden, as in Spark's listing — with or without `fmt`, and loads with
+    dense ids."""
+    csv_dir, md_dir = tmp_path / "csv", tmp_path / "md"
+    for d in (csv_dir, md_dir):
+        d.mkdir()
+        _write(str(d / ".meta"), "x|y\n")
+        _write(str(d / "_SUCCESS"), "")
+    _write(str(csv_dir / "p0.csv"), "a,b\n1,2\n3,4\n")
+    _write(str(csv_dir / "p1.csv"), "a,b\n5,6\n7,8\n")
+    _write(str(md_dir / "p0.md"), "| a | b |\n|---|---|\n| 1 | 2 |\n| 3 | 4 |\n")
+    _write(str(md_dir / "p1.md"), "| a | b |\n|---|---|\n| 5 | 6 |\n| 7 | 8 |\n")
+
+    for path, fmt in ((csv_dir, None), (csv_dir, "csv"), (md_dir, "md")):
+        df = read_any(spark, str(path), fmt=fmt)
+        assert df.columns == ["a", "b"], (path, fmt)
+        assert sorted(tuple(r) for r in df.collect()) == [
+            ("1", "2"), ("3", "4"), ("5", "6"), ("7", "8")
+        ], (path, fmt)
+    t = load(read_any(spark, str(csv_dir)), "parts", warehouse=str(tmp_path / "wh"))
+    assert sorted(r["id"] for r in spark.read.parquet(t).collect()) == [1, 2, 3, 4]
 
 
 def test_read_any_memo_equals_unmemoized_read(spark, tmp_path):

@@ -465,16 +465,14 @@ def test_unpartitioned_windows_sit_above_small_frames(spark, sf_dir):
         if re.search(r"Window\.orderBy\(|Window\.partitionBy\(\)", text):
             sites.add(str(p.relative_to(pkg)))
     assert sites == {
-        "ingest/load.py",        # prefix-sum over per-partition COUNTs
+        "queries/_util.py",      # rank_offset: prefix-sum over per-partition COUNTs
         "queries/projections.py",  # surrogate_key over `region` (5 rows)
         "queries/text.py",       # vocab total over groupBy(tok) output
         "queries/events.py",     # cumulative sum over per-day aggregates
         "queries/windows.py",    # share-of-total over groupBy(o_orderstatus) (3 rows)
         "queries/reshape.py",    # MoM lag over groupBy(month) (~80 rows)
-        # r11 optimization round: prefix-sum offsets over per-PARTITION
-        # count frames (|partitions| rows at any SF) — the two-phase rank
-        # fold in agg_gini_concentration / etl_curriculum_stages
-        "queries/aggregations.py",
+        # etl_curriculum_stages: grand total over the per-PARTITION count
+        # frame (|partitions| rows at any SF)
         "queries/quality.py",
     }, f"new unpartitioned-window site(s): {sites}"
 
@@ -670,25 +668,30 @@ def test_range_bucketed_join_never_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_two_pass_ranks_reuse_or_single_range_exchange(spark, sf_dir):
+def _final_plan(spark, sf_dir, name: str) -> list[str]:
+    """Executed plan lines after a collect, so AQE has settled the final
+    plan (toString() prints "== Final Plan ==" then "== Initial Plan ==")."""
+    df = _SPECS[name].fn(spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0].splitlines()
+
+
+def test_two_pass_ranks_reuse_or_single_range_exchange(
+    spark, sf_dir, two_phase_key
+):
     """The two-pass distributed ranks must not depend on RangePartitioner
     sampling determinism (Spark seeds range-bound sampling with the RDD
     id — VERDICT r11 #4): their safety argument is structural. For
-    agg_gini_concentration the restructure left exactly ONE consumer of
-    the range exchange, so the plan must hold exactly one
+    agg_gini_concentration the rank has exactly ONE consumer of the range
+    exchange, so the plan must hold exactly one
     `Exchange rangepartitioning`. For etl_curriculum_stages the offsets
     branch and the stage projection both read the SAME range exchange —
     the executed plan must materialize it once and serve the second
     consumer a ReusedExchange/reused stage, never two independently
     sampled range exchanges (which could silently skew ranks if a future
-    edit makes the subtrees non-identical)."""
-    def final_plan(name):
-        df = _SPECS[name].fn(spark, sf_dir)
-        df.collect()  # materialize so AQE settles the final plan
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # toString() prints "== Final Plan ==" then "== Initial Plan =="
-        return plan.split("== Initial Plan ==")[0].splitlines()
-
+    edit makes the subtrees non-identical). The test inputs fit
+    ONE_TASK_MAX_BYTES, so two_phase_key forces the range path."""
     def count_range(lines):
         mat = [
             l for l in lines
@@ -700,11 +703,32 @@ def test_two_pass_ranks_reuse_or_single_range_exchange(spark, sf_dir):
         ]
         return len(mat), len(reused)
 
-    mat, _ = count_range(final_plan("agg_gini_concentration"))
+    mat, _ = count_range(_final_plan(spark, sf_dir, "agg_gini_concentration"))
     assert mat == 1, f"gini: expected 1 materialized range exchange, got {mat}"
 
-    mat, reused = count_range(final_plan("etl_curriculum_stages"))
+    mat, reused = count_range(_final_plan(spark, sf_dir, "etl_curriculum_stages"))
     assert mat == 1 and reused >= 1, (
         f"curriculum: expected one materialized range exchange plus a "
         f"ReusedExchange, got {mat} materialized / {reused} reused"
     )
+
+
+def test_small_ranks_run_in_one_task(spark, sf_dir):
+    """At default settings both rank queries' inputs fit ONE_TASK_MAX_BYTES:
+    range_numbered coalesces to one partition, so the plan holds no range
+    exchange, and each `_sk_pid` aggregate reads the helper's one-task sort
+    with no Exchange between them."""
+    for name in ("agg_gini_concentration", "etl_curriculum_stages"):
+        lines = _final_plan(spark, sf_dir, name)
+        assert not any("rangepartitioning" in l for l in lines), name
+        aggs = [i for i, l in enumerate(lines) if "HashAggregate(keys=[_sk_pid" in l]
+        assert aggs, name
+        for i in aggs:
+            j = next(
+                k for k in range(i + 1, len(lines) - 1)
+                if "Sort [" in lines[k] and "Coalesce 1" in lines[k + 1]
+            )
+            between = lines[i:j]
+            assert not any("Exchange" in l for l in between), (
+                name + "\n" + "\n".join(lines)
+            )

@@ -514,16 +514,22 @@ def test_join_skew_report_consistent(spark, sf_dir):
     assert rows[0]["ratio_to_mean"] >= 1.0
 
 
-def test_r11_single_pass_rank_rewrites_match_naive_window_forms(spark, sf_dir):
+def test_r11_single_pass_rank_rewrites_match_naive_window_forms(
+    spark, sf_dir, monkeypatch
+):
     """r11 optimization pins: agg_weighted_median (two-phase bucket
     refinement), agg_gini_concentration (per-partition rank folding), and
     etl_curriculum_stages (counts-frame offsets) were restructured for
     single-pass/bounded-window execution — each must still equal the
-    naive global-window formulation it replaced, computed here directly."""
+    naive global-window formulation it replaced, computed here directly.
+    The gini and curriculum ranks run on both paths of the size rule: the
+    default (one task at this scale) and the range path that
+    `two_phase_key` forces."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from omnidata_etl_spark.catalog import table
+    from omnidata_etl_spark.queries import _util
     from omnidata_etl_spark.queries._util import dec2
     from omnidata_etl_spark.registry import all_specs
 
@@ -573,8 +579,6 @@ def test_r11_single_pass_rank_rewrites_match_naive_window_forms(spark, sf_dir):
             "gini"
         ),
     ).toPandas()
-    got_gini = specs["agg_gini_concentration"].fn(spark, sf_dir).toPandas()
-    assert naive_gini.equals(got_gini)
 
     # --- curriculum: naive single-partition rank + stage split
     docs = table(spark, sf_dir, "documents").select(
@@ -597,8 +601,14 @@ def test_r11_single_pass_rank_rewrites_match_naive_window_forms(spark, sf_dir):
             F.sum("n_tokens").alias("total_tokens"),
         )
     ).toPandas().sort_values("stage").reset_index(drop=True)
-    got_cs = (
-        specs["etl_curriculum_stages"].fn(spark, sf_dir).toPandas()
-        .sort_values("stage").reset_index(drop=True)
-    )
-    assert naive_cs.equals(got_cs)
+
+    for bound in (_util.ONE_TASK_MAX_BYTES, -1):  # default, two_phase_key
+        with monkeypatch.context() as m:
+            m.setattr(_util, "ONE_TASK_MAX_BYTES", bound)
+            got_gini = specs["agg_gini_concentration"].fn(spark, sf_dir).toPandas()
+            got_cs = (
+                specs["etl_curriculum_stages"].fn(spark, sf_dir).toPandas()
+                .sort_values("stage").reset_index(drop=True)
+            )
+        assert naive_gini.equals(got_gini), bound
+        assert naive_cs.equals(got_cs), bound
