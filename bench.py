@@ -38,11 +38,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from omnidata_etl_spark.registry import (  # noqa: E402
-    all_specs,
-    prepare,
-    prepare_execute,
-)
+from omnidata_etl_spark.registry import all_specs, prepare_execute  # noqa: E402
 from omnidata_etl_spark.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -165,17 +161,9 @@ def run_once(name, spark, sf_dir: str, mode: str) -> float:
     mode="rebuild" (reported alongside as spark_rebuild_sec): re-invoke the
     Python builder every run, so per-run time additionally includes
     DataFrame construction + analysis.
-
-    mode="service": registry.prepare — repeats serve from materialized
-    shuffle stages (the fixed-queries-per-request deployment shape of the
-    reference backend). NOT comparable to a recomputing oracle (the scan
-    is skipped on repeats; 12.9 s suite vs 37 s rebuild), so it is never
-    the headline and only runs when BENCH_PREPARE=1.
     """
     t0 = time.perf_counter()
-    if mode == "service":
-        df = prepare(spark, name, sf_dir)
-    elif mode == "prepared":
+    if mode == "prepared":
         df = prepare_execute(spark, name, sf_dir)
     else:
         df = all_specs()[name].fn(spark, sf_dir)
@@ -228,24 +216,16 @@ def main() -> None:
     specs = all_specs()
     names = sorted(n for n in specs if n not in SKIP)
 
-    env_mode = os.environ.get("BENCH_PREPARE", "")
     # Per-mode error maps (r5 ADVICE: one shared dict let a prepared-mode
     # flake silently veto a query's rebuild timing and vice versa — the
     # skip-if-errored check in time_suite is mode-local state).
     errors: dict[str, str] = {}
     rebuild_errors: dict[str, str] = {}
-    if env_mode == "1":
-        per_query = time_suite(names, spark, "service", errors)
-        rebuild: dict[str, float] = {}
-    elif env_mode == "0":
-        per_query = time_suite(names, spark, "rebuild", errors)
-        rebuild = {}
-    else:
-        # Headline protocol (BASELINE.md): prepared-statement execution,
-        # with the full-rebuild numbers measured alongside for transparency
-        # (spark_rebuild_sec in BENCH_DETAIL.json).
-        per_query = time_suite(names, spark, "prepared", errors)
-        rebuild = time_suite(names, spark, "rebuild", rebuild_errors)
+    # Headline protocol (BASELINE.md): prepared-statement execution, with
+    # the full-rebuild numbers measured alongside for transparency
+    # (spark_rebuild_sec in BENCH_DETAIL.json).
+    per_query = time_suite(names, spark, "prepared", errors)
+    rebuild = time_suite(names, spark, "rebuild", rebuild_errors)
 
     total = round(sum(per_query.values()), 4)
     # r12 (VERDICT r11 #3): the driver's round-over-round comparison reads

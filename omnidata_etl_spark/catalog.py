@@ -67,7 +67,9 @@ _MIN_GROUP_ROWS = 8_192  # don't shred into groups too small to scan well
 #      DIRECTORY of single-group part files.
 #   2. The directory mirror was implemented (commit a1d5948) and A/B'd
 #      same-session, mirror vs OMNIDATA_NO_MIRROR, noop sink, min of 4
-#      (scripts/ab_mirror_r12.py): it LOSES on most consumers —
+#      (OPTIMIZATION_r12.md, VERDICT r11 disposition item 1; the A/B
+#      script is in `git show 86b1f03:scripts/`): it LOSES on most
+#      consumers —
 #      binary_stats −63 ms, curriculum −62, similarity_cosine −34,
 #      ann_pq −34, udtf_chunk −20, decontaminate −15, decode_stats −14,
 #      vs wins of +38 (audio_stats) and +20 (scene_cut) only. 32 micro-file

@@ -189,7 +189,14 @@ def read_xml(spark: SparkSession, path: str, row_tag: str = "row") -> DataFrame:
 
 def _rows_to_df(spark: SparkSession, rows: list) -> DataFrame:
     """Header-row + body cell-string grid → all-text DataFrame (shared by
-    the xlsx and legacy-xls paths)."""
+    the xlsx and legacy-xls paths).
+
+    The grid goes in as an object-dtype pandas frame, which plans as a
+    sized `LocalRelation`; a Python list would plan as an RDD scan with no
+    plan-time size, so `load()`'s surrogate key would take the range path
+    (8 Spark jobs for a 6-row sheet instead of the CSV path's 1)."""
+    import pandas as pd
+
     if not rows:
         return spark.createDataFrame([], T.StructType([]))
     headers = [h or f"col{i}" for i, h in enumerate(rows[0])]
@@ -198,7 +205,8 @@ def _rows_to_df(spark: SparkSession, rows: list) -> DataFrame:
     )
     body = [tuple(r[: len(headers)]) + (None,) * (len(headers) - len(r))
             for r in rows[1:]]
-    return empty_to_null(spark.createDataFrame(body, schema))
+    grid = pd.DataFrame(body, columns=range(len(headers)), dtype=object)
+    return empty_to_null(spark.createDataFrame(grid, schema))
 
 
 def read_excel(spark: SparkSession, path: str) -> DataFrame:

@@ -1128,8 +1128,10 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same candidate pairs from ONE evaluation and ONE exchange: attach
     # the batch flag with a broadcast join, group by (band_id, band_hash),
     # collect the batch/corpus member lists per bucket, and explode their
-    # cross product. Same-session alternating A/B (scripts/
-    # ab_incremental_r12.py): 5.94 → 4.25 s min-of-4, output identical.
+    # cross product. Same-session alternating A/B (OPTIMIZATION_r12.md,
+    # VERDICT r11 disposition item 6; the A/B script is in
+    # `git show 86b1f03:scripts/`): 5.94 → 4.25 s min-of-4, output
+    # identical.
     # Per-bucket state is bounded by bucket population — the same rows a
     # degenerate hot band would also concentrate into one join partition
     # in the old form, so the skew class is unchanged.

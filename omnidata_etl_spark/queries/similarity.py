@@ -25,8 +25,9 @@ EMBED_DIM = 64
 LSH_PLANES = 8  # 2^8 = 256 buckets
 # Corpus size above which banded LSH hashing switches from the SQL
 # expression path to the Arrow/BLAS matmul path (see banded_lsh_buckets).
-# Pinned by the r10 crossover sweep (scripts/ab_lsh_crossover_r10.py —
-# full dedup_embedding_cosine, driver regime: fresh QueryExecution per
+# Pinned by the r10 crossover sweep (PLANS.md, "dedup_embedding_cosine
+# settled under the driver protocol"; the sweep script is in
+# `git show 86b1f03:scripts/`) — full dedup_embedding_cosine, driver regime: fresh QueryExecution per
 # run, cold cache, min-of-N interleaved): SQL wins at 2k (1.17 vs 1.82 s
 # min), the two tie at 8k (2.89 vs 2.48 min / 3.32 vs 3.80 med), numpy
 # wins 1.5× at 32k (5.33 vs 3.46) and 3.2× at 128k (21.3 vs 6.6) — the
@@ -34,7 +35,7 @@ LSH_PLANES = 8  # 2^8 = 256 buckets
 # B·r·dim work dwarfs the Python-worker round-trip. The r9 gate move to
 # the 2k bench corpus was measured under a loaded local session and did
 # NOT transfer to the driver artifact (BENCH_r09 1.34→1.67 s regression,
-# root-caused r10); the driver-regime A/B (scripts/ab_embcos_r10.py)
+# root-caused r10); the driver-regime A/B (same PLANS.md section)
 # reads SQL min 1.17 / med 1.32 vs numpy min 1.82 / med 2.06 at 2k.
 NUMPY_LSH_MIN_N = 8_192
 
@@ -644,12 +645,12 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the brute top-10 feeds the flag join as a BROADCAST consumer, and
     broadcast consumers get no ReusedExchange (the r3 finding), so the
     planner duplicates the scored subtree — the encode UDF runs once per
-    branch, column-pruned to each branch's columns (see
-    plans/r12/ann_ivf_pq_topk_after.txt). Forcing actual sharing was
-    A/B'd twice and REJECTED: a persist (r11) and a single-pass
-    mapInArrow emitting the triple once (r12, scripts/ab_ann_r12.py)
-    both lose — the shared exchange serializes two cheap parallel
-    subtrees. The probed-rows repartition is kept per branch: removing
+    branch, column-pruned to each branch's columns (the r12 after-plan
+    dump is under `git show 86b1f03:plans/`). Forcing actual sharing was
+    A/B'd twice and REJECTED: a persist (r11) and a single-pass mapInArrow
+    emitting the triple once (r12; OPTIMIZATION_r12.md, VERDICT r11
+    disposition item 4) both lose — the shared exchange serializes two
+    cheap parallel subtrees. The probed-rows repartition is kept per branch: removing
     it measured -0.10 s (it fans the post-UDF rows out for the distance
     work and TakeOrdered). At 100 TB the same trade holds per branch:
     the exchange moves only the probed fraction at ~20 bytes/row."""

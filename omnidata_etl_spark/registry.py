@@ -224,10 +224,9 @@ def prepare(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     request (/root/reference/backend/index.js route handlers), and a
     long-lived Spark service answering that workload would serve repeats
     from materialized stages exactly like this. It is the WRONG semantics
-    for a cold-query benchmark, which is why bench.py's default headline is
+    for a cold-query benchmark, which is why bench.py's headline is
     prepared-STATEMENT mode (prepare_execute: every stage re-runs), with
-    full per-run rebuilds measured alongside; this service mode runs only
-    when asked for (BENCH_PREPARE=1).
+    full per-run rebuilds measured alongside.
 
     The cache lives on the session object, so it dies with the session;
     builders in NO_PREPARE (build-time Spark jobs) and streaming frames

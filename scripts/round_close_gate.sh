@@ -8,9 +8,8 @@
 # clean worktree guarantees the code that runs is the code being shipped.
 #
 # Usage: bash scripts/round_close_gate.sh [commit-ish (default HEAD)]
-# Writes artifacts into the REPO (not the temp checkout):
-#   /tmp/omnidata_close_gate/{pytest.log,bench.json,bench.err}
-#   CORRECTNESS_LOCAL_<tag>.json via scripts/correctness_sweep.py if present
+# Writes its artifacts to /tmp/omnidata_close_gate/{pytest.log,bench.json,
+# bench.err,BENCH_DETAIL.json}.
 set -euo pipefail
 
 REF="${1:-HEAD}"
@@ -26,8 +25,10 @@ trap 'git -C "$REPO" worktree remove --force "$WORK/checkout" >/dev/null 2>&1 ||
 cd "$WORK/checkout"
 echo "== close gate @ $SHA =="
 
-echo "-- [1/3] full pytest --"
-python -m pytest tests/ -q 2>&1 | tail -3 | tee "$WORK/pytest.log"
+echo "-- [1/3] full pytest (the ROADMAP tier-1 command) --"
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local
+timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors \
+    -p no:cacheprovider 2>&1 | tail -3 | tee "$WORK/pytest.log"
 grep -qE "^[0-9]+ passed" "$WORK/pytest.log"
 ! grep -qE "failed|error" "$WORK/pytest.log"
 

@@ -403,6 +403,36 @@ def test_read_any_rebuilds_directories_and_excel(spark, tmp_path):
     assert read_any(spark, xlsx) is not read_any(spark, xlsx)
 
 
+def test_excel_load_runs_as_many_jobs_as_csv(spark, tmp_path):
+    """An Excel sheet plans with a plan-time size like a CSV scan, so its
+    `load()` keys the rows in one task: the same job count as the equal
+    CSV, and the same rows."""
+    from omnidata_etl_spark.ingest.fixtures import _ROWS
+    from omnidata_etl_spark.ingest.xls_biff import write_xls
+    from omnidata_etl_spark.ingest.xlsx import write_xlsx
+
+    paths = {ext: str(tmp_path / f"people.{ext}") for ext in ("csv", "xlsx", "xls")}
+    _write(paths["csv"], "".join(",".join(r) + "\n" for r in [PEOPLE_HEADERS, *_ROWS]))
+    write_xlsx(paths["xlsx"], list(PEOPLE_HEADERS), list(_ROWS))
+    write_xls(paths["xls"], list(PEOPLE_HEADERS), list(_ROWS))
+    sc = spark.sparkContext
+    jobs, rows = {}, {}
+    for ext, path in paths.items():
+        df = read_any(spark, path)
+        group = f"excel-load-{ext}-{tmp_path.name}"
+        sc.setJobGroup(group, f"load {ext}")
+        try:
+            target = load(df, f"people_{ext}", warehouse=str(tmp_path / "wh"))
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs[ext] = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows[ext] = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    assert jobs["xlsx"] == jobs["csv"] and jobs["xls"] == jobs["csv"], jobs
+    assert rows["xlsx"] == rows["csv"] and rows["xls"] == rows["csv"]
+    assert len(rows["csv"]) == N_PEOPLE
+
+
 def test_read_any_reads_a_directory_of_text_files(spark, tmp_path):
     """A directory of CSV or markdown files sniffs its header from the first
     visible file in sorted order — names starting with `_` or `.` are

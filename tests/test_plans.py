@@ -5,7 +5,11 @@ These guard against regressions that stay correct but stop scaling."""
 
 from __future__ import annotations
 
+import json
+import os
+
 from omnidata_etl_spark.registry import all_specs
+from perfbench.layers import python_boundary_nodes
 
 _SPECS = all_specs()
 
@@ -732,3 +736,53 @@ def test_small_ranks_run_in_one_task(spark, sf_dir):
             assert not any("Exchange" in l for l in between), (
                 name + "\n" + "\n".join(lines)
             )
+
+
+# --- per-query plan budget ---------------------------------------------------
+
+_BUDGET = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plan_budget.json")
+
+
+def plan_counts(df) -> dict[str, int]:
+    """Node counts of `df`'s pre-AQE physical plan (`sparkPlan()`), before
+    exchanges are added for joins and aggregates: what the builder asked
+    for, not what the planner's core-count-dependent choices add. The walk
+    follows children only, so a cached frame counts as a leaf: the plan
+    printed under its InMemoryRelation reads differently once an earlier
+    action has run it."""
+    names, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        names.append(node.nodeName())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.length()))
+    return {
+        "exchange": names.count("Exchange"),
+        "reused_exchange": names.count("ReusedExchange"),
+        "python_boundary": python_boundary_nodes("\n".join(names)),
+    }
+
+
+def test_plan_budget(spark, sf_dir):
+    """Every registry query that is neither in NO_PREPARE nor streaming
+    keeps the explicit exchanges, reused exchanges and Python-boundary
+    nodes recorded in tests/plan_budget.json (sf0.001). An added
+    repartition or Python map turns this red; to accept one, copy the
+    printed counts into the budget."""
+    from omnidata_etl_spark.registry import NO_PREPARE
+
+    with open(_BUDGET) as f:
+        budget = json.load(f)
+    got = {}
+    for name, spec in _SPECS.items():
+        if name in NO_PREPARE:
+            continue
+        df = spec.fn(spark, sf_dir)
+        if not df.isStreaming:
+            got[name] = plan_counts(df)
+    bad = [
+        f"{name}: budget {json.dumps(budget.get(name))} plan {json.dumps(got.get(name))}"
+        for name in sorted(set(budget) | set(got))
+        if budget.get(name) != got.get(name)
+    ]
+    assert not bad, "plan budget broken:\n" + "\n".join(bad)
