@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from omnidata_etl_spark.session import (
     default_parallelism,
     ensure_tuned,
-    session_handles,
+    session_memo,
 )
 
 TABLES = (
@@ -80,6 +80,11 @@ _MIN_GROUP_ROWS = 8_192  # don't shred into groups too small to scan well
 # thousands of files, the scan is already wide, and spread() no-ops.
 
 
+def parquet_path(sf_dir: str, name: str) -> str:
+    """The driver's parquet file (or directory) of catalog table ``name``."""
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
 def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
     """Path to scan for a catalog table + its split-count estimate.
 
@@ -87,7 +92,7 @@ def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
     multi-file) tables, small tables, and already-chunked files; otherwise
     the lazily-built multi-row-group mirror.
     """
-    src = os.path.join(sf_dir, f"{name}.parquet")
+    src = parquet_path(sf_dir, name)
     if os.path.isdir(src):
         try:
             return src, sum(1 for f in os.listdir(src) if f.endswith(".parquet"))
@@ -223,11 +228,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_tuned(spark)
     _size_shuffle_partitions(spark, sf_dir)
-    per_session = session_handles(spark)
-    key = (sf_dir, name)
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
+    return session_memo(
+        spark, ("table", sf_dir, name), lambda: _read_table(spark, sf_dir, name)
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path, n_splits = _splittable_path(sf_dir, name)
     df = spark.read.parquet(path)
     if name == "events":
@@ -242,7 +248,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # fan-out decisions never materialize an RDD lineage (r2 ADVICE: the
     # df.rdd.getNumPartitions() probe cost a full analysis per query build).
     df._omnidata_splits = n_splits
-    per_session[key] = df
     return df
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from omnidata_etl_spark.ingest.types import map_user_type
-from omnidata_etl_spark.session import ensure_tuned, session_handles
+from omnidata_etl_spark.session import ensure_tuned, session_memo
 
 
 def sniff_delimiter(first_line: str) -> str:
@@ -286,18 +286,18 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     dispatch at backend/index.js:88-97; Access/OLE DB generalized to
     "any JDBC source" per SURVEY.md §7.2, see `read_jdbc`).
 
-    A regular local file resolves once per session: the frame is memoized
-    in `session_handles` per `(ext, realpath)` with the file's identity
-    `(st_ino, st_mtime_ns, st_size)`, and a later call on an unchanged
-    file returns the same handle, so `preview` → `read_any` → `load` runs
-    the CSV header job or the JSON inference scan once. A changed identity
-    rebuilds and replaces the entry (one entry per path, kept for the
-    session's life). The handle is a lazy file scan: rows are read fresh at
-    every execution; only the resolved schema, the sniffed delimiter and
-    the file listing are reused, and the identity check keeps those
-    current. Directories, globs and non-local paths resolve on every call,
-    and so do Excel workbooks, whose frames hold the rows parsed on the
-    driver.
+    A regular local file resolves once per session: the frame goes through
+    `session.session_memo` keyed by `(ext, realpath)` with the realpath as
+    its source, so a later call on a file with the same
+    `session.file_identity` (`(st_ino, st_mtime_ns, st_size)`) returns the
+    same handle, and `preview` → `read_any` → `load` runs the CSV header job
+    or the JSON inference scan once. A changed identity rebuilds and
+    replaces the entry (one entry per path, kept for the session's life).
+    The handle is a lazy file scan: rows are read fresh at every execution;
+    only the resolved schema, the sniffed delimiter and the file listing
+    are reused, and the identity check keeps those current. Directories,
+    globs and non-local paths resolve on every call, and so do Excel
+    workbooks, whose frames hold the rows parsed on the driver.
     """
     ensure_tuned(spark)
     if fmt:
@@ -307,18 +307,9 @@ def read_any(spark: SparkSession, path: str, fmt: str | None = None) -> DataFram
     real = os.path.realpath(path)
     if ext in (".xlsx", ".xls") or not os.path.isfile(real):
         return _read(spark, path, ext)
-    # stat BEFORE resolving: a write racing the resolve then leaves an
-    # entry whose identity is already stale, so the next call rebuilds
-    st = os.stat(real)
-    ident = (st.st_ino, st.st_mtime_ns, st.st_size)
-    handles = session_handles(spark)
-    key = ("read_any", ext, real)
-    hit = handles.get(key)
-    if hit is not None and hit[0] == ident:
-        return hit[1]
-    df = _read(spark, path, ext)
-    handles[key] = (ident, df)
-    return df
+    return session_memo(
+        spark, ("read_any", ext, real), lambda: _read(spark, path, ext), source=real
+    )
 
 
 def read_jdbc(

@@ -299,73 +299,22 @@ def davg(expr: Column, count: Column | None = None) -> Column:
     return F.sum(expr.cast(DEC)).cast("double") / n
 
 
-def session_df_memo(spark, key: tuple, build) -> DataFrame:
-    """Session-scoped persisted-DataFrame memo (r10, r9 ADVICE #3).
-
-    Repeated query BUILDS in one long-lived session previously persisted a
-    FRESH O(corpus) frame per build and never unpersisted it — each call
-    creates a new plan, so the cache manager accumulates entries. The memo
-    returns one shared frame per logical key; keys embed the source parquet
-    fingerprint (similarity._parquet_fingerprint), so a regenerated table
-    unpersists and evicts the superseded entry instead of pinning stale
-    data (the _corpus_count discipline). key = (kind, sf_dir, fingerprint,
-    ...); pruning matches on (kind, sf_dir). A persisted frame INSIDE a
-    memoized plan (e.g. a shingle-set feeding a pair frame) is not
-    individually tracked: on fingerprint invalidation only the top frame is
-    unpersisted and the inner one ages out with the session — a one-off,
-    regeneration-only leak accepted for the build()-closure simplicity."""
-    cache = getattr(spark, "_omnidata_df_memo", None)
-    if cache is None:
-        cache = {}
-        spark._omnidata_df_memo = cache
-    df = cache.get(key)
-    if df is None:
-        for k in [k for k in cache if k[:2] == key[:2]]:
-            try:
-                cache[k].unpersist()
-            except Exception:
-                pass
-            del cache[k]
-        df = build()
-        cache[key] = df
-    else:
-        # A long-lived session may clearCache() between workload passes
-        # (bench.py housekeeping does): the memo then handed back an
-        # EVICTED frame and every consumer silently recomputed the full
-        # build plan per action (caught r10: the audio-fingerprint memo
-        # benched at 2.06 s vs 1.10 s measured — 4 summary subtrees each
-        # re-ran the FFT pass). Eviction shows as a storageLevel with
-        # neither memory nor disk; re-pin and rematerialize once.
-        lvl = df.storageLevel
-        if getattr(df, "_omnidata_checkpointed", False):
-            pass  # localCheckpoint blocks live outside the SQL cache —
-            # clearCache can't evict them and storageLevel is not
-            # meaningful for the check below
-        elif not (lvl.useMemory or lvl.useDisk):
-            df.persist()
-            df.count()
-    return df
-
-
 def memo_pin(df: DataFrame) -> DataFrame:
-    """Pin a memo build's result OUTSIDE the SQL cache manager.
+    """Materialize a small derived frame once, OUTSIDE the SQL cache manager.
 
-    ``localCheckpoint(eager=True)`` materializes the frame into block-
-    manager storage that ``spark.catalog.clearCache()`` cannot evict —
-    persist-backed memo frames were silently un-cached by long-lived-
-    session housekeeping (bench.py between-pass clearCache) and every
-    later pass re-ran the full build (r10: audio-fingerprint 2.06 s
-    benched vs 1.10 s measured). The marker tells session_df_memo's
-    eviction re-pin check to skip (storageLevel is not meaningful for
-    checkpointed frames).
+    ``localCheckpoint(eager=True)`` writes the frame into block-manager
+    storage that ``spark.catalog.clearCache()`` cannot evict. Persist-backed
+    memo frames were silently un-cached by long-lived-session housekeeping
+    (bench.py between-pass clearCache), and every later pass re-ran the full
+    build (r10: audio-fingerprint 2.06 s benched vs 1.10 s measured).
 
     Cluster safety (r10 ADVICE): localCheckpoint blocks are UNREPLICATED
-    and truncate lineage — on executor loss every later consumer action
+    and truncate lineage: on executor loss every later consumer action
     fails, with no recompute path. That trade is only sound where block
     loss implies the whole app died, i.e. a local[*] master. On any
     non-local master this falls back to persist(MEMORY_AND_DISK): the
-    frame stays lineage-backed (recomputable on block loss) and
-    session_df_memo's storageLevel re-pin check handles cache eviction."""
+    frame stays lineage-backed (recomputable on block loss), and
+    `session.session_memo` re-persists it on a hit after an eviction."""
     spark = df.sparkSession
     master = spark.conf.get("spark.master", "")
     if not master.startswith("local"):
@@ -374,6 +323,4 @@ def memo_pin(df: DataFrame) -> DataFrame:
         out = df.persist(StorageLevel.MEMORY_AND_DISK)
         out.count()
         return out
-    out = df.localCheckpoint(eager=True)
-    out._omnidata_checkpointed = True
-    return out
+    return df.localCheckpoint(eager=True)

@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import map_rows, spread
-from omnidata_etl_spark.session import ensure_tuned
+from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.queries._util import map_rows, memo_pin, spread
+from omnidata_etl_spark.session import ensure_tuned, session_memo
 
 # Real codecs for the container-expressible formats: PPM/BMP/PNG/GIF/JPEG
 # images decode to numpy with zero dependencies (PNG via stdlib zlib + a
@@ -788,7 +788,7 @@ def multimodal_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two independent consumers below (hash-bucket stats + per-doc twin
     # pivot) would each re-run the decode pass; pin the tiny post-decode
     # frame (3 scalars per asset) so pixels are decoded exactly once
-    hashed = hashed.localCheckpoint(eager=True)
+    hashed = memo_pin(hashed)
 
     groups = hashed.groupBy("phash").agg(F.count(F.lit(1)).alias("n"))
     dup_groups = groups.agg(
@@ -886,30 +886,18 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread(table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    from omnidata_etl_spark.queries._util import session_df_memo
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
-
-    def build():
-        # localCheckpoint, not persist: checkpoint blocks live OUTSIDE the
-        # SQL cache manager, so a long-lived session's clearCache()
-        # housekeeping (bench passes) cannot evict them — persist-backed
-        # memos re-ran the whole FFT pass per bench pass (2.06 s benched
-        # vs 1.10 s measured, r10)
-        df = map_rows(
-            docs, row, "doc_id long, variant string, landmark long"
-        ).localCheckpoint(eager=True)
-        df._omnidata_checkpointed = True
-        return df
-
-    # session memo (r9 ADVICE #3 discipline): one persisted landmark frame
+    # session memo (r9 ADVICE #3 discipline): one pinned landmark frame
     # per corpus generation; repeated builds reuse it instead of stacking
     # cache entries, and all four summaries below are subtrees of ONE
-    # action over the cache (a fresh count-per-summary paid ~0.25 s of
-    # local job floor each — 1.49 s → this form)
-    lm = session_df_memo(
+    # action over the pinned frame (a fresh count-per-summary paid ~0.25 s
+    # of local job floor each — 1.49 s → this form)
+    lm = session_memo(
         spark,
-        ("audio_lm", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
-        build,
+        ("audio_lm", sf_dir),
+        lambda: memo_pin(
+            map_rows(docs, row, "doc_id long, variant string, landmark long")
+        ),
+        source=parquet_path(sf_dir, "documents"),
     )
 
     orig = lm.where(F.col("variant") == "orig").select("doc_id", "landmark")

@@ -16,10 +16,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import spread
+from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.queries._util import memo_pin, spread
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import default_parallelism
+from omnidata_etl_spark.session import default_parallelism, session_memo
 
 EMBED_DIM = 64
 LSH_PLANES = 8  # 2^8 = 256 buckets
@@ -1043,29 +1043,6 @@ def blocked_cosine_pairs(
     )
 
 
-def _parquet_fingerprint(sf_dir: str, name: str) -> tuple:
-    """Cheap (mtime_ns, size) fingerprint of a catalog parquet path —
-    one or a handful of stat() calls, no data read. Folded into the
-    _corpus_count cache key so a regenerated table invalidates the
-    memoized count instead of silently pinning stale values (r7 ADVICE —
-    the same staleness class the r7 TF-IDF change removed)."""
-    import os
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(path):
-            parts = []
-            for root, _, files in os.walk(path):
-                for p in files:
-                    s = os.stat(os.path.join(root, p))
-                    parts.append((p, s.st_mtime_ns, s.st_size))
-            return tuple(sorted(parts))
-        s = os.stat(path)
-        return (s.st_mtime_ns, s.st_size)
-    except OSError:
-        return ()
-
-
 def _corpus_count(
     spark: SparkSession,
     sf_dir: str,
@@ -1073,41 +1050,27 @@ def _corpus_count(
     id_below: int | None = None,
     id_col: str = "vec_id",
 ) -> int:
-    """Memoized table row count per (session, sf_dir, table[, id filter]).
+    """Row count of catalog table ``name``, once per session while its
+    parquet is unchanged (`session.session_memo`): one parquet-metadata
+    count job the first time a build needs the corpus size (the
+    adaptive-LSH r pin, the planted-probe denominators), then a dict hit.
 
     ``id_below`` (r10, r9 ADVICE #2): count only rows with id_col <
     id_below — a pushed-down range predicate, used to validate the
     planted-probe id contract (probe filters like ``vec_id < 10`` assume a
     zero-based contiguous id space; an empty probe must fail loudly at
-    build instead of degrading the recall evidence column to 0/NULL).
+    build instead of degrading the recall evidence column to 0/NULL)."""
 
-    One parquet-metadata count job the FIRST time a query build needs the
-    corpus size (the adaptive-LSH r pin), then a dict hit for every later
-    build in the session — the r6 verdict flagged the per-build count on
-    the suite's slowest query. Keyed on the session object itself (the
-    catalog.table handle-cache discipline: the cache's lifetime IS the
-    session's, and sf_dir keys keep scale factors apart) PLUS a cheap
-    mtime/size fingerprint of the parquet path, so regenerating the data
-    mid-session invalidates the count instead of silently pinning a stale
-    adaptive-LSH r / recall denominator (r7 ADVICE)."""
-    cache = getattr(spark, "_omnidata_count_cache", None)
-    if cache is None:
-        cache = {}
-        spark._omnidata_count_cache = cache
-    key = (sf_dir, name, id_below, _parquet_fingerprint(sf_dir, name))
-    n = cache.get(key)
-    if n is None:
-        # drop superseded fingerprints for the same (sf_dir, table, filter)
-        # so the cache stays one entry per live table instead of growing
-        # with every mid-session regeneration (r9 ADVICE)
-        for k in [k for k in cache if k[:3] == key[:3]]:
-            del cache[k]
+    def build() -> int:
         df = table(spark, sf_dir, name)
         if id_below is not None:
             df = df.filter(F.col(id_col) < id_below)
-        n = df.count()
-        cache[key] = n
-    return n
+        return df.count()
+
+    return session_memo(
+        spark, ("count", sf_dir, name, id_below), build,
+        source=parquet_path(sf_dir, name),
+    )
 
 
 @query("dedup_embedding_cosine", tags=("similarity", "dedup"))
@@ -1189,14 +1152,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly the granularity deployed for this corpus. One persisted pair
     # frame (and one inner LSH persist) per (session, sf_dir): repeated
     # builds reuse instead of stacking cache entries (r9 ADVICE #3 class)
-    from omnidata_etl_spark.queries._util import memo_pin, session_df_memo
-
-    all_pairs = session_df_memo(
+    all_pairs = session_memo(
         spark,
-        ("emb_cosine_pairs", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
+        ("emb_cosine_pairs", sf_dir),
         lambda: memo_pin(
             blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main)
         ),
+        source=parquet_path(sf_dir, "embeddings"),
     )
     main = all_pairs.filter(
         (F.col("vec_a") < _POFF) & (F.col("vec_b") < _POFF)
@@ -1450,7 +1412,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce, or a broken union all fail at least one leg."""
     import numpy as np
 
-    from omnidata_etl_spark.queries._util import local_df, session_df_memo
+    from omnidata_etl_spark.queries._util import local_df
 
     emb = table(spark, sf_dir, "embeddings").select("embedding")
 
@@ -1472,25 +1434,17 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = local_df(spark, planted_rows, "embedding array<double>")
 
     def build():
-        # localCheckpoint (eager), not persist: survives a long-lived
-        # session's clearCache() housekeeping between bench passes —
-        # see multimodal_audio_fingerprint's build note
-        df = (
+        df = memo_pin(
             emb.select(F.col("embedding").cast("array<double>"))
             .unionAll(planted)
             .coalesce(8)
-            .localCheckpoint(eager=True)
         )
-        df._omnidata_checkpointed = True
-        df._omnidata_row_count = df.count()
-        return df
+        return df, df.count()
 
-    data = session_df_memo(
-        spark,
-        ("power_iter_aug", sf_dir, _parquet_fingerprint(sf_dir, "embeddings")),
-        build,
+    data, n_vec = session_memo(
+        spark, ("power_iter_aug", sf_dir), build,
+        source=parquet_path(sf_dir, "embeddings"),
     )
-    n_vec = getattr(data, "_omnidata_row_count", None) or data.count()
 
     def gemv_pass(v: "np.ndarray") -> "np.ndarray":
         def op(batches):

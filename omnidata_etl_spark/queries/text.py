@@ -11,9 +11,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from omnidata_etl_spark.catalog import table
-from omnidata_etl_spark.queries._util import spread
+from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.queries._util import memo_pin, spread
 from omnidata_etl_spark.registry import query
+from omnidata_etl_spark.session import session_memo
 
 FINGERPRINT_SHINGLE = 5
 
@@ -848,8 +849,6 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted pairs instead of re-running the tokenize/explode prefix.
     `source` rides along (functionally dependent on doc_id) for the
     perplexity consumer; tfidf simply ignores it — counts are identical."""
-    from omnidata_etl_spark.queries._util import memo_pin, session_df_memo
-    from omnidata_etl_spark.queries.similarity import _parquet_fingerprint
 
     def build():
         docs = table(spark, sf_dir, "documents")
@@ -865,10 +864,9 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return memo_pin(tc)
 
-    return session_df_memo(
-        spark,
-        ("doc_tok_counts", sf_dir, _parquet_fingerprint(sf_dir, "documents")),
-        build,
+    return session_memo(
+        spark, ("doc_tok_counts", sf_dir), build,
+        source=parquet_path(sf_dir, "documents"),
     )
 
 

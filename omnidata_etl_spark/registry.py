@@ -19,6 +19,8 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
+from omnidata_etl_spark.session import session_memo
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 # Modules that register queries on import. Import order only decides the
@@ -158,7 +160,7 @@ def query(name: str, *, oracle=None, tags: tuple[str, ...] = ()):
 # Builders that run Spark jobs at BUILD time (iterative connected
 # components, driver-side k-means training, sketch folds): their cost IS the
 # query, so a prepared-plan cache would silently skip it on re-execution.
-# prepare() re-invokes these every call.
+# prepare_execute() re-invokes these every call.
 NO_PREPARE = frozenset(
     {
         "dedup_cluster_canonical",  # per-round convergence counts
@@ -206,68 +208,28 @@ NO_PREPARE = frozenset(
 )
 
 
-def prepare(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
-    """Prepared-query SERVICE mode: build the DataFrame once per
-    (session, query, sf_dir) and return the same object on every
-    subsequent call.
-
-    What repeat execution then costs — be precise, because it is NOT a
-    full recompute: re-running an action on the same DataFrame reuses the
-    plan (py4j construction + analysis + optimization skipped) AND any
-    already-materialized shuffle map stages (Spark's stage-skipping /
-    AQE query-stage reuse — the scan and shuffle-write side runs once per
-    session, later actions re-run only the final stage + result transfer).
-    Measured at sf0.1: tpch_q12 360 ms first execution, 33 ms repeats.
-
-    That is the right semantics for the reference backend's deployment
-    shape — every Express endpoint re-executes a fixed query per HTTP
-    request (/root/reference/backend/index.js route handlers), and a
-    long-lived Spark service answering that workload would serve repeats
-    from materialized stages exactly like this. It is the WRONG semantics
-    for a cold-query benchmark, which is why bench.py's headline is
-    prepared-STATEMENT mode (prepare_execute: every stage re-runs), with
-    full per-run rebuilds measured alongside.
-
-    The cache lives on the session object, so it dies with the session;
-    builders in NO_PREPARE (build-time Spark jobs) and streaming frames
-    are rebuilt every call.
-    """
-    fn = all_specs()[name].fn
-    if name in NO_PREPARE:
-        return fn(spark, sf_dir)
-    cache = getattr(spark, "_omnidata_prepared", None)
-    if cache is None:
-        cache = {}
-        spark._omnidata_prepared = cache
-    key = (name, sf_dir)
-    df = cache.get(key)
-    if df is None:
-        df = fn(spark, sf_dir)
-        if df.isStreaming:
-            return df
-        cache[key] = df
-    return df
-
-
 def prepare_execute(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Prepared-STATEMENT execution: re-execute a cached ANALYZED plan.
 
     Classic DB prepare/execute semantics (parse + analyze once; optimize,
     physical-plan, schedule, and run every execute): the builder's analyzed
-    DataFrame is cached once per (session, query, sf_dir) — that's the
-    parse/analyze step, 20-120 ms of py4j round-trips per build — and each
-    call returns a FRESH execution wrapper over it (``select("*")``), which
-    gets its own QueryExecution: Catalyst re-optimizes, new exchange
-    operators are instantiated, so NO shuffle stages or broadcasts are
-    reused and every stage re-runs from the parquet scan up. This is the
-    mode comparable to re-executing a prepared statement against DuckDB;
-    contrast prepare(), whose repeats serve from materialized stages.
-    NO_PREPARE builders rebuild fully every call, same as prepare().
+    DataFrame is kept once per (session, query, sf_dir) through
+    `session.session_memo` — that's the parse/analyze step, 20-120 ms of
+    py4j round-trips per build — and each call returns a FRESH execution
+    wrapper over it (``select("*")``), which gets its own QueryExecution:
+    Catalyst re-optimizes, new exchange operators are instantiated, so NO
+    shuffle stages or broadcasts are reused and every stage re-runs from
+    the parquet scan up. This is the mode comparable to re-executing a
+    prepared statement against DuckDB.
+
+    NO_PREPARE builders (build-time Spark jobs) are rebuilt fully every
+    call, and a streaming frame is served as built, without the wrapper.
     """
-    df = prepare(spark, name, sf_dir)
-    if name in NO_PREPARE or df.isStreaming:
-        return df
-    return df.select("*")
+    fn = all_specs()[name].fn
+    if name in NO_PREPARE:
+        return fn(spark, sf_dir)
+    df = session_memo(spark, ("prepared", name, sf_dir), lambda: fn(spark, sf_dir))
+    return df if df.isStreaming else df.select("*")
 
 
 def _load() -> None:

@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Conf that is safe (and required for oracle parity) to set at runtime on any
 # session, including the driver-provided one.
@@ -106,20 +106,72 @@ def default_driver_memory() -> str:
     return f"{max(1, min(16, kib * 2 // 5 >> 20))}g"
 
 
-def session_handles(spark: SparkSession) -> dict:
-    """The session's DataFrame-handle dict (logical plans, not data), shared
-    by `catalog.table` and `ingest.readers.read_any`.
+def file_identity(path: str) -> tuple:
+    """What a rewrite of ``path`` changes: ``(st_ino, st_mtime_ns, st_size)``
+    for a file, the sorted ``(relative name, identity)`` pairs of the files
+    under a directory, and ``()`` for a missing path. Stat calls only, no
+    data read."""
+    try:
+        if os.path.isdir(path):
+            return tuple(sorted(
+                (os.path.relpath(p, path), file_identity(p))
+                for root, _, files in os.walk(path)
+                for p in (os.path.join(root, f) for f in files)
+            ))
+        st = os.stat(path)
+    except OSError:
+        return ()
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
 
-    It lives on the session object itself, so its lifetime IS the session's.
-    (A module-global WeakKeyDictionary cannot work here: each cached
-    DataFrame strongly references its session via df._session, pinning the
-    weak key forever; and an id()-keyed dict could alias a recycled address
-    to a dead session's plans.)"""
-    handles = getattr(spark, "_omnidata_handle_cache", None)
-    if handles is None:
-        handles = {}
-        spark._omnidata_handle_cache = handles
-    return handles
+
+def _sql_cache_level(value):
+    """The storage level of a DataFrame held in the SQL cache, else None."""
+    if isinstance(value, DataFrame):
+        level = value.storageLevel
+        if level.useMemory or level.useDisk:
+            return level
+    return None
+
+
+def session_memo(spark: SparkSession, key: tuple, build, source: str | None = None):
+    """``build()``'s value, derived once per session while ``source`` is
+    unchanged.
+
+    The session holds one dict, ``key`` → ``(file_identity(source), value,
+    level)``, so the memo's lifetime is the session's. (A module-global
+    WeakKeyDictionary cannot work here: each DataFrame strongly references
+    its session, pinning the weak key forever; and an id()-keyed dict could
+    alias a recycled address to a dead session's values.) Without a
+    ``source`` the value lives as long as the session.
+
+    The identity is taken before ``build`` runs, so a write racing the
+    build leaves an entry that is already stale and the next call
+    rebuilds. On a changed identity a superseded DataFrame that was in the
+    SQL cache is unpersisted before the rebuild, so the new build cannot
+    pick up the old cached rows through a same-plan cache match.
+
+    ``level`` is the frame's SQL-cache storage level when stored, else
+    None. A hit re-persists and counts a frame only when it was cached when
+    stored and has since been evicted (a long-lived session's
+    ``spark.catalog.clearCache()``): a frame the build left lazy stays lazy,
+    and a ``memo_pin``'d checkpoint lives outside the SQL cache."""
+    memo = getattr(spark, "_omnidata_memo", None)
+    if memo is None:
+        memo = spark._omnidata_memo = {}
+    ident = None if source is None else file_identity(source)
+    hit = memo.get(key)
+    if hit is not None:
+        old_ident, value, level = hit
+        if old_ident == ident:
+            if level is not None and _sql_cache_level(value) is None:
+                value.persist(level)
+                value.count()
+            return value
+        if level is not None:
+            value.unpersist()
+    value = build()
+    memo[key] = (ident, value, _sql_cache_level(value))
+    return value
 
 
 def ensure_tuned(spark: SparkSession) -> SparkSession:

@@ -15,8 +15,8 @@ An arm is one of:
 
 A patch also rebinds every loaded module of the same package that holds
 the original object under the same name (`text.py` and `multimodal.py`
-bind `spread` at import). Each arm has its own session memo and handle
-dicts, so no arm times a frame memoized under another arm.
+bind `spread` at import). Each arm has its own `session.session_memo`
+dict, so no arm times a frame, handle or count memoized under another arm.
 
 For each query, every arm's frame is built and collected once (the
 warm-up) and the frames must be equal under `tests/oracle_util.canonical`
@@ -24,7 +24,11 @@ before anything is timed. Then the arms alternate rep by rep, the order
 rotating each rep; one rep is `bench.run_once(..., "rebuild")`, the builder
 plus `toPandas`, under its own job group. Per arm the report gives the
 min, median and IQR of wall seconds, the reps it beat the first arm, and
-the median Spark jobs, tasks and task CPU-seconds per rep.
+the median Spark jobs, tasks and `jvm_cpu_s` per rep. `jvm_cpu_s` is the
+executor CPU time Spark records for its tasks (`spark.task_cpu_s` in
+`perfbench/layers.spark_counters`): JVM threads only. CPU spent in Python
+workers (UDFs, Arrow maps) is not in it, so a Python-boundary query can
+read a small fraction of its wall.
 
 An override that the live session cannot take fails the run: a conf that
 is static or unknown, a conf the engine resets during a build, and an env
@@ -53,18 +57,17 @@ from tests.oracle_util import canonical  # noqa: E402
 _PATCH = re.compile(r"([\w.]+):(\w+)=(.*)", re.S)
 _CONF = re.compile(r"(spark\.[\w.-]+)=(.*)", re.S)
 _ENV = re.compile(r"([A-Za-z_]\w*)=(.*)", re.S)
-# memo dicts the engine hangs on the session (queries/_util.session_df_memo,
-# session.session_handles)
-_SESSION_MEMOS = ("_omnidata_df_memo", "_omnidata_handle_cache")
+# the one memo dict the engine hangs on the session (session.session_memo)
+_SESSION_MEMO = "_omnidata_memo"
 
 
 class Arm:
-    """One side of the A/B: a parsed override plus its own memo dicts."""
+    """One side of the A/B: a parsed override plus its own memo dict."""
 
     def __init__(self, spec: str):
         self.label = spec
         self.kind = "base"
-        self.memos = {attr: {} for attr in _SESSION_MEMOS}
+        self.memo = {}
         if spec == "base":
             return
         for kind, rx in (("patch", _PATCH), ("conf", _CONF), ("env", _ENV)):
@@ -76,15 +79,13 @@ class Arm:
 
     @contextmanager
     def applied(self, spark):
-        saved = {attr: getattr(spark, attr, None) for attr in _SESSION_MEMOS}
-        for attr, memo in self.memos.items():
-            setattr(spark, attr, memo)
+        saved = getattr(spark, _SESSION_MEMO, None)
+        setattr(spark, _SESSION_MEMO, self.memo)
         try:
             with getattr(self, f"_{self.kind}")(spark):
                 yield
         finally:
-            for attr, memo in saved.items():
-                setattr(spark, attr, memo)
+            setattr(spark, _SESSION_MEMO, saved)
 
     @contextmanager
     def _base(self, spark):
@@ -228,7 +229,7 @@ def summarize(label: str, t: list[float], first: list[float], counters: list[dic
         "wins": sum(a < b for a, b in zip(t, first)),
         "jobs": statistics.median(c["spark.jobs"] for c in counters),
         "tasks": statistics.median(c["spark.tasks"] for c in counters),
-        "task_cpu_s": statistics.median(c["spark.task_cpu_s"] for c in counters),
+        "jvm_cpu_s": statistics.median(c["spark.task_cpu_s"] for c in counters),
     }
 
 
@@ -236,12 +237,12 @@ def report(name: str, rows: list[dict], reps: int) -> None:
     width = max(len(r["arm"]) for r in rows)
     print(f"\n{name} ({reps} reps; wins = reps faster than the first arm)")
     print(f"{'arm':<{width}}  {'min':>7} {'median':>7} {'iqr':>7} "
-          f"{'wins':>6} {'jobs':>5} {'tasks':>6} {'cpu_s':>6}")
+          f"{'wins':>6} {'jobs':>5} {'tasks':>6} {'jvm_cpu_s':>9}")
     for i, r in enumerate(rows):
         wins = "-" if i == 0 else f"{r['wins']}/{reps}"
         print(f"{r['arm']:<{width}}  {r['min']:7.3f} {r['median']:7.3f} "
               f"{r['iqr']:7.3f} {wins:>6} {r['jobs']:5g} {r['tasks']:6g} "
-              f"{r['task_cpu_s']:6.2f}")
+              f"{r['jvm_cpu_s']:9.2f}")
 
 
 def main() -> int:

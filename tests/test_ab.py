@@ -34,17 +34,17 @@ def test_patch_rebinds_import_time_aliases():
 
 
 def test_each_arm_has_its_own_session_memos():
-    spark = SimpleNamespace(_omnidata_df_memo={"shared": 1})
+    spark = SimpleNamespace(_omnidata_memo={"shared": 1})
     a, b = ab.Arm("base"), ab.Arm("OMNIDATA_AB_TEST=1")
     with a.applied(spark):
-        memo_a = spark._omnidata_df_memo
+        memo_a = spark._omnidata_memo
         memo_a["k"] = "a"
         assert os.environ.get("OMNIDATA_AB_TEST") is None
     with b.applied(spark):
-        assert spark._omnidata_df_memo == {} and os.environ["OMNIDATA_AB_TEST"] == "1"
+        assert spark._omnidata_memo == {} and os.environ["OMNIDATA_AB_TEST"] == "1"
     with a.applied(spark):
-        assert spark._omnidata_df_memo is memo_a
-    assert spark._omnidata_df_memo == {"shared": 1}
+        assert spark._omnidata_memo is memo_a
+    assert spark._omnidata_memo == {"shared": 1}
     assert "OMNIDATA_AB_TEST" not in os.environ
 
 

@@ -758,15 +758,16 @@ def plan_counts(df) -> dict[str, int]:
         stack.extend(kids.apply(i) for i in range(kids.length()))
     return {
         "exchange": names.count("Exchange"),
-        "reused_exchange": names.count("ReusedExchange"),
         "python_boundary": python_boundary_nodes("\n".join(names)),
     }
 
 
 def test_plan_budget(spark, sf_dir):
     """Every registry query that is neither in NO_PREPARE nor streaming
-    keeps the explicit exchanges, reused exchanges and Python-boundary
-    nodes recorded in tests/plan_budget.json (sf0.001). An added
+    keeps the explicit exchanges and Python-boundary nodes recorded in
+    tests/plan_budget.json (sf0.001). (A pre-AQE plan holds no
+    ReusedExchange, so exchange reuse is checked on the executed plan, by
+    test_two_pass_ranks_reuse_or_single_range_exchange.) An added
     repartition or Python map turns this red; to accept one, copy the
     printed counts into the budget."""
     from omnidata_etl_spark.registry import NO_PREPARE

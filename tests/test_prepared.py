@@ -1,39 +1,30 @@
-"""Prepared-query SERVICE mode (registry.prepare): plan-once, repeats
-served from materialized stages. Not used by the headline bench (see
-bench.py run_once) — these tests pin the API contract:
-  * a prepared plan returns the SAME results as a fresh build;
-  * the cache is per-(session, name, sf_dir) and returns the same
-    DataFrame object on a hit;
+"""Prepared-statement execution (registry.prepare_execute), the headline
+bench mode (see bench.py run_once). These tests pin its contract:
+  * each call returns a fresh execution wrapper with the same results as
+    a fresh build;
+  * the analyzed plan is built once per (session, name, sf_dir);
   * NO_PREPARE builders (build-time Spark jobs) are re-invoked per call.
 """
 
 from unittest import mock
 
 from omnidata_etl_spark import registry
-from omnidata_etl_spark.registry import NO_PREPARE, QuerySpec, all_specs, prepare
+from omnidata_etl_spark.registry import NO_PREPARE, QuerySpec, all_specs, prepare_execute
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_prepare_matches_fresh_build(spark):
-    spec = all_specs()["agg_having"]
-    fresh = spec.fn(spark, SF).toPandas()
-    prepped = prepare(spark, "agg_having", SF).toPandas()
-    assert fresh.equals(prepped)
+def _counting(name, calls):
+    real = all_specs()[name]
 
+    def counting_fn(sp, sf_dir):
+        calls.append(sf_dir)
+        return sp.range(1)
 
-def test_prepare_cache_hit_same_object(spark):
-    a = prepare(spark, "limit_preview", SF)
-    b = prepare(spark, "limit_preview", SF)
-    assert a is b
-    # different sf_dir => different cache entry
-    c = prepare(spark, "limit_preview", "/root/testdata/sf0.01")
-    assert c is not a
+    return QuerySpec(name=name, fn=counting_fn, oracle=real.oracle, tags=real.tags)
 
 
 def test_prepare_execute_fresh_wrapper_same_results(spark):
-    from omnidata_etl_spark.registry import prepare_execute
-
     spec = all_specs()["agg_having"]
     fresh = spec.fn(spark, SF).toPandas()
     a = prepare_execute(spark, "agg_having", SF)
@@ -45,20 +36,27 @@ def test_prepare_execute_fresh_wrapper_same_results(spark):
     assert b.toPandas().equals(fresh)
 
 
+def test_prepare_execute_builds_once_per_sf_dir(spark, monkeypatch):
+    calls = []
+    name = "limit_preview"
+    assert name not in NO_PREPARE
+    # an empty session memo for the test: no prepared plan of the real
+    # builder from an earlier test, and none of the fake's left behind
+    monkeypatch.setattr(spark, "_omnidata_memo", {}, raising=False)
+    with mock.patch.dict(registry._REGISTRY, {name: _counting(name, calls)}):
+        prepare_execute(spark, name, SF)
+        prepare_execute(spark, name, SF)
+        prepare_execute(spark, name, "/root/testdata/sf0.01")
+    assert calls == [SF, "/root/testdata/sf0.01"]
+
+
 def test_no_prepare_rebuilds_every_call(spark):
     calls = []
     name = "dedup_cluster_canonical"
-    real = all_specs()[name]
     assert name in NO_PREPARE
-
-    def counting_fn(sp, sf_dir):
-        calls.append(sf_dir)
-        return sp.range(1)
-
-    fake = QuerySpec(name=name, fn=counting_fn, oracle=real.oracle, tags=real.tags)
-    with mock.patch.dict(registry._REGISTRY, {name: fake}):
-        prepare(spark, name, SF)
-        prepare(spark, name, SF)
+    with mock.patch.dict(registry._REGISTRY, {name: _counting(name, calls)}):
+        prepare_execute(spark, name, SF)
+        prepare_execute(spark, name, SF)
     assert len(calls) == 2
 
 

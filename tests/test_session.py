@@ -1,16 +1,24 @@
-"""The engine's Python worker daemon (omnidata_etl_spark.pydaemon) and the
-worker path conf that get_session sets for it."""
+"""The engine's Python worker daemon (omnidata_etl_spark.pydaemon), the
+worker path conf that get_session sets for it, and the per-session memo
+(session.session_memo)."""
 
 from __future__ import annotations
 
 import importlib
 import os
+import shutil
 import subprocess
 import sys
 import zipfile
 import zipimport
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
 from omnidata_etl_spark import pydaemon
+from omnidata_etl_spark.session import session_memo
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -121,3 +129,107 @@ def test_default_driver_memory_fits_the_host(spark):
     assert gib << 20 <= max(kib * 2 // 5, 1 << 20)
     want = os.environ.get("OMNIDATA_DRIVER_MEM") or got
     assert spark.sparkContext.getConf().get("spark.driver.memory") == want
+
+
+# --- session_memo -------------------------------------------------------------
+
+
+def _write_rows(path, n):
+    pq.write_table(pa.table({"x": list(range(n))}), path)
+
+
+def _cached(df):
+    level = df.storageLevel
+    return level.useMemory or level.useDisk
+
+
+def _no_build():
+    raise AssertionError("a memo hit must not build")
+
+
+def test_memo_hit_returns_the_same_object(spark, tmp_path):
+    src = str(tmp_path / "t.parquet")
+    _write_rows(src, 3)
+    key = ("test-hit", src)
+    first = session_memo(spark, key, lambda: spark.read.parquet(src), source=src)
+    assert session_memo(spark, key, _no_build, source=src) is first
+
+
+@pytest.mark.parametrize("change", ["inode", "mtime", "size"])
+def test_memo_rebuilds_on_a_rewritten_source(spark, tmp_path, change):
+    """Each field of the file identity alone invalidates the entry, and the
+    superseded cached frame leaves the SQL cache before the rebuild."""
+    src = str(tmp_path / "t.parquet")
+    _write_rows(src, 3)
+    st = os.stat(src)
+    builds = []
+
+    def build():
+        builds.append(src)
+        df = spark.read.parquet(src).withColumn("build", F.lit(len(builds))).persist()
+        df.count()
+        return df
+
+    key = ("test-rewrite", src)
+    old = session_memo(spark, key, build, source=src)
+    if change == "inode":  # the same bytes and mtime under a new inode
+        shutil.copyfile(src, src + ".new")
+        os.utime(src + ".new", ns=(st.st_atime_ns, st.st_mtime_ns))
+        os.replace(src + ".new", src)
+    elif change == "mtime":
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    else:  # more rows in place, the old mtime put back
+        _write_rows(src, 5)
+        os.utime(src, ns=(st.st_atime_ns, st.st_mtime_ns))
+    new = session_memo(spark, key, build, source=src)
+    try:
+        assert len(builds) == 2 and new is not old
+        assert not _cached(old) and _cached(new)
+        assert new.count() == (5 if change == "size" else 3)
+    finally:
+        new.unpersist()
+
+
+def test_memo_recaches_a_frame_evicted_by_clear_cache(spark, tmp_path):
+    """A frame cached when stored is cached again on the next hit after
+    clearCache; a frame the build left lazy stays lazy."""
+    src = str(tmp_path / "t.parquet")
+    _write_rows(src, 3)
+
+    def cached_build():
+        df = spark.read.parquet(src).persist()
+        df.count()
+        return df
+
+    pinned = session_memo(spark, ("test-evict", src), cached_build, source=src)
+    lazy = session_memo(
+        spark, ("test-lazy", src),
+        lambda: spark.read.parquet(src).withColumn("k", F.lit(1)), source=src,
+    )
+    spark.catalog.clearCache()
+    assert not _cached(pinned)
+    try:
+        assert session_memo(spark, ("test-evict", src), _no_build, source=src) is pinned
+        assert _cached(pinned)
+        assert session_memo(spark, ("test-lazy", src), _no_build, source=src) is lazy
+        assert not _cached(lazy)
+    finally:
+        pinned.unpersist()
+
+
+def test_second_global_shuffle_build_runs_no_job(spark, sf_dir, monkeypatch):
+    """A repeat build of a memoized query takes the memo's frame as stored:
+    it neither persists nor counts a frame the build did not pin."""
+    from omnidata_etl_spark.registry import all_specs
+
+    monkeypatch.setattr(spark, "_omnidata_memo", {}, raising=False)
+    build = all_specs()["etl_global_shuffle"].fn
+    build(spark, sf_dir)
+    sc, group = spark.sparkContext, "test-memo-second-build"
+    sc.setJobGroup(group, "second etl_global_shuffle build")
+    try:
+        build(spark, sf_dir)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is async
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
