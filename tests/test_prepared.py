@@ -1,7 +1,7 @@
 """Prepared-statement execution (registry.prepare_execute), the headline
 bench mode (see bench.py run_once). These tests pin its contract:
-  * each call returns a fresh execution wrapper with the same results as
-    a fresh build;
+  * a prepared plan returns the same results as a fresh build, and each
+    call returns a fresh execution wrapper;
   * the analyzed plan is built once per (session, name, sf_dir);
   * NO_PREPARE builders (build-time Spark jobs) are re-invoked per call.
 """
@@ -22,6 +22,13 @@ def _counting(name, calls):
         return sp.range(1)
 
     return QuerySpec(name=name, fn=counting_fn, oracle=real.oracle, tags=real.tags)
+
+
+def test_prepare_matches_fresh_build(spark):
+    spec = all_specs()["agg_having"]
+    fresh = spec.fn(spark, SF).toPandas()
+    prepped = prepare_execute(spark, "agg_having", SF).toPandas()
+    assert fresh.equals(prepped)
 
 
 def test_prepare_execute_fresh_wrapper_same_results(spark):
