@@ -3,17 +3,22 @@
 Tables: region nation customer supplier part orders lineitem events documents
 embeddings — one parquet per table under an ``sf_dir``. Parquet scans get
 predicate pushdown / column pruning / vectorized reads from Catalyst for free
-(SURVEY.md §4).
+(SURVEY.md §4). A single-file table's schema comes from its parquet footer,
+read on the driver with Spark's own conversion rule (`parquet_schema`), so
+opening the catalog runs no Spark job.
 """
 
 from __future__ import annotations
 
 import glob
 import hashlib
+import json
 import math
 import os
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from omnidata_etl_spark.session import (
     default_parallelism,
@@ -83,6 +88,49 @@ _MIN_GROUP_ROWS = 8_192  # don't shred into groups too small to scan well
 def parquet_path(sf_dir: str, name: str) -> str:
     """The driver's parquet file (or directory) of catalog table ``name``."""
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, without its job.
+
+    Spark infers a parquet schema in a one-task job that reads one footer.
+    For a regular file this reads that footer on the driver instead and
+    converts it with Spark's own rule (`ParquetFileFormat.readSchemaFromFooter`
+    with a `ParquetToSparkSchemaConverter` over the session conf), so the
+    Spark row-metadata key, INT96, `nanosAsLong` and TIMESTAMP_NTZ inference
+    all follow the session as it is at call time: call it after
+    `ensure_tuned`. Anything else (a directory, a glob, a non-local URI, a
+    footer the JVM cannot read) goes through Spark's inference, which also
+    raises Spark's own error for a bad path.
+    """
+    if os.path.isfile(path):
+        try:
+            jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+            parquet = jvm.org.apache.parquet
+            jpath = jvm.org.apache.hadoop.fs.Path(os.path.abspath(path))
+            skip = parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+            footer = parquet.hadoop.ParquetFileReader.readFooter(
+                state.newHadoopConf(), jpath, skip
+            )
+            rule = jvm.org.apache.spark.sql.execution.datasources.parquet
+            jschema = rule.ParquetFileFormat.readSchemaFromFooter(
+                parquet.hadoop.Footer(jpath, footer),
+                rule.ParquetToSparkSchemaConverter(state.conf()),
+            )
+            return StructType.fromJson(json.loads(jschema.json()))
+        except Py4JError:  # pragma: no cover - unreadable: Spark's own error
+            pass
+    return spark.read.parquet(path).schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, opened with `parquet_schema` when
+    ``path`` is a regular file. A directory keeps Spark's own inference:
+    its partition discovery and its choice of footer file."""
+    reader = spark.read
+    if os.path.isfile(path):
+        reader = reader.schema(parquet_schema(spark, path))
+    return reader.parquet(path)
 
 
 def _splittable_path(sf_dir: str, name: str) -> tuple[str, int]:
@@ -235,7 +283,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path, n_splits = _splittable_path(sf_dir, name)
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if name == "events":
         from pyspark.sql import functions as F
         from pyspark.sql import types as T

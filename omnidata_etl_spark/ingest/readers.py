@@ -20,9 +20,11 @@ stop-after-11-lines, SURVEY.md §4).
 The schema is resolved when the frame is built, not when it runs: CSV runs
 a one-row header job, JSON and XML run a schema-inference job that scans the
 WHOLE file, markdown reads the header line on the driver, avro reads the
-container header on the driver and parquet reads the footers. `read_any`
-does this once per unchanged regular file per session (see its docstring),
-so a preview followed by a read and a load resolves the file once.
+container header on the driver, and parquet reads a regular file's footer on
+the driver (`catalog.read_parquet`; a directory runs Spark's footer job).
+`read_any` does this once per unchanged regular file per session (see its
+docstring), so a preview followed by a read and a load resolves the file
+once.
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omnidata_etl_spark.catalog import read_parquet
 from omnidata_etl_spark.ingest.types import map_user_type
 from omnidata_etl_spark.session import ensure_tuned, session_memo
 
@@ -277,7 +280,7 @@ _EXT_READERS = {
 
 def _read(spark: SparkSession, path: str, ext: str) -> DataFrame:
     if ext == ".parquet":
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     return _EXT_READERS.get(ext, read_delimited)(spark, path)
 
 

@@ -1415,25 +1415,24 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from omnidata_etl_spark.queries._util import local_df
 
     emb = table(spark, sf_dir, "embeddings").select("embedding")
-
-    # corpus energy Σ‖x‖² (one cheap agg) sizes the planted spike so it
-    # dominates the spectrum by ≥100× at any corpus size
-    energy = emb.select(
-        F.sum(F.aggregate(
-            F.transform("embedding", lambda x: x * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )).alias("e")
-    ).collect()[0].e
     dim = 64
     m_planted = 32
     u = np.array([1.0 if j % 2 == 0 else -1.0 for j in range(dim)])
     u /= np.linalg.norm(u)
-    c = float(np.sqrt(100.0 * energy / m_planted))
-    planted_rows = [((c * u).tolist(),) for _ in range(m_planted)]
-    planted = local_df(spark, planted_rows, "embedding array<double>")
 
     def build():
+        # corpus energy Σ‖x‖² (one cheap agg) sizes the planted spike so it
+        # dominates the spectrum by ≥100× at any corpus size
+        energy = emb.select(
+            F.sum(F.aggregate(
+                F.transform("embedding", lambda x: x * x),
+                F.lit(0.0),
+                lambda a, x: a + x,
+            )).alias("e")
+        ).collect()[0].e
+        c = float(np.sqrt(100.0 * energy / m_planted))
+        planted_rows = [((c * u).tolist(),) for _ in range(m_planted)]
+        planted = local_df(spark, planted_rows, "embedding array<double>")
         df = memo_pin(
             emb.select(F.col("embedding").cast("array<double>"))
             .unionAll(planted)

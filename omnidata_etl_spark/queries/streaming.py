@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from omnidata_etl_spark.catalog import parquet_schema, read_parquet
 from omnidata_etl_spark.registry import query
 
 
@@ -125,7 +126,7 @@ def _event_stream(
     throttles to one file per batch so the copies arrive sequentially.
     """
     src_file = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(src_file).schema
+    raw_schema = parquet_schema(spark, src_file)
     stream_dir = tempfile.mkdtemp(prefix="omnidata_stream_src_")
     _STREAM_DIRS.append(stream_dir)
     for i in range(n_copies):
@@ -246,7 +247,7 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    raw = _normalize_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
+    raw = _normalize_ts(read_parquet(spark, f"{sf_dir}/events.parquet"))
 
     base = tempfile.mkdtemp(prefix="omnidata_febatch_")
     src_dir, tgt_base = f"{base}/src", f"{base}/tgt"
@@ -524,7 +525,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exactly-once claim is visible in the driver's own artifact.
     Pinned behaviorally in tests/test_streaming.py."""
     src_file = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(src_file).schema
+    raw_schema = parquet_schema(spark, src_file)
     base = tempfile.mkdtemp(prefix="omnidata_ckpt_rec_")
     src_dir, sink_dir, ckpt = f"{base}/src", f"{base}/sink", f"{base}/ckpt"
     os.makedirs(src_dir)
@@ -557,7 +558,7 @@ def stream_checkpoint_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.symlink(src_file, f"{src_dir}/events_{i}.parquet")
         run_until_drained("phase2")  # NEW query object, SAME checkpoint
 
-        n_source = spark.read.parquet(src_file).count()
+        n_source = read_parquet(spark, src_file).count()
         sink = spark.read.parquet(sink_dir)
         n_sink = sink.count()
         n_wrong = (

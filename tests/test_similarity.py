@@ -396,6 +396,23 @@ def test_power_iteration_three_legs(spark, sf_dir):
     assert row.n_vectors > 32
 
 
+def test_power_iteration_memo_hit_runs_only_the_gemv_rounds(spark, sf_dir):
+    """A repeat build reuses the memoized augmented corpus, so the corpus
+    energy aggregate and the planted rows behind it are not rebuilt: its job
+    group holds only the five GEMV rounds, and all three legs still hold."""
+    fn = all_specs()["embedding_power_iteration"].fn
+    fn(spark, sf_dir)
+    sc, group = spark.sparkContext, "test-power-iteration-memo-hit"
+    sc.setJobGroup(group, "second embedding_power_iteration build")
+    try:
+        row = fn(spark, sf_dir).collect()[0]
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is async
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert row.converged_ok and row.residual_ok and row.planted_recovery_ok
+
+
 def test_power_iteration_batch_invariant(spark, sf_dir):
     """Each GEMV pass reduces per Arrow batch and sums the partials on the
     driver: 7-row batches split every partition's rows over several
