@@ -289,16 +289,6 @@ def crevsum(price: str | Column = "l_extendedprice",
     return F.sum(rev_units(price, disc)) / F.lit(10000.0)
 
 
-def davg(expr: Column, count: Column | None = None) -> Column:
-    """Deterministic average of a money expression (see module doc).
-
-    Unrounded: exact decimal SUM → double ÷ COUNT is bit-identical across
-    engines, while ROUND(double, n) is not (Spark rounds the shortest decimal
-    repr, DuckDB the exact binary)."""
-    n = count if count is not None else F.count(expr)
-    return F.sum(expr.cast(DEC)).cast("double") / n
-
-
 def memo_pin(df: DataFrame) -> DataFrame:
     """Materialize a small derived frame once, OUTSIDE the SQL cache manager.
 

@@ -9,9 +9,20 @@ it is bandwidth-bound, which is exactly what brute-force ANN should be.
 Scale path: random-hyperplane LSH bucketing (dedup-style banding for vectors)
 — signature bits from deterministic pseudo-random planes, candidates from an
 equi-join on bucket id, exact re-rank within buckets only.
+
+Every dense kernel the ANN family repeats (squared-L2 argmin, Lloyd's
+k-means, PQ encoding, the ADC table, the probe-cell choice, the sign-bit LSH
+hash) is written once at module level, next to `_sq_dists`, and runs in
+numpy: on the driver for training, inside `_series_udf` batches for the
+corpus. The r10 crossover that kept a SQL-lambda LSH path below 8k vectors
+(PLANS.md, "dedup_embedding_cosine settled under the driver protocol") no
+longer holds with the engine's Python daemon: the numpy hash is ahead at
+every test scale (ROADMAP item 9).
 """
 
 from __future__ import annotations
+
+import numbers
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,21 +34,6 @@ from omnidata_etl_spark.session import default_parallelism, session_memo
 
 EMBED_DIM = 64
 LSH_PLANES = 8  # 2^8 = 256 buckets
-# Corpus size above which banded LSH hashing switches from the SQL
-# expression path to the Arrow/BLAS matmul path (see banded_lsh_buckets).
-# Pinned by the r10 crossover sweep (PLANS.md, "dedup_embedding_cosine
-# settled under the driver protocol"; the sweep script is in
-# `git show 86b1f03:scripts/`) — full dedup_embedding_cosine, driver regime: fresh QueryExecution per
-# run, cold cache, min-of-N interleaved): SQL wins at 2k (1.17 vs 1.82 s
-# min), the two tie at 8k (2.89 vs 2.48 min / 3.32 vs 3.80 med), numpy
-# wins 1.5× at 32k (5.33 vs 3.46) and 3.2× at 128k (21.3 vs 6.6) — the
-# interpreted-lambda hashing grows super-linearly in wall terms once the
-# B·r·dim work dwarfs the Python-worker round-trip. The r9 gate move to
-# the 2k bench corpus was measured under a loaded local session and did
-# NOT transfer to the driver artifact (BENCH_r09 1.34→1.67 s regression,
-# root-caused r10); the driver-regime A/B (same PLANS.md section)
-# reads SQL min 1.17 / med 1.32 vs numpy min 1.82 / med 2.06 at 2k.
-NUMPY_LSH_MIN_N = 8_192
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -159,125 +155,14 @@ def ann_multi_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def hyperplane(plane_id: int, dim: int = EMBED_DIM) -> list[float]:
-    """Deterministic pseudo-random unit-free hyperplane component list.
-
-    Components derive from a splitmix64-style integer mix of (plane_id, d) —
-    reproducible across sessions with no RNG state (scripts can't call
-    random()); only the *sign structure* matters for LSH.
-    """
-    comps = []
-    for d in range(dim):
-        x = (plane_id * 1_000_003 + d * 40_009 + 12_345) & 0xFFFFFFFFFFFFFFFF
-        x ^= x >> 30
-        x = (x * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
-        x ^= x >> 27
-        x = (x * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
-        x ^= x >> 31
-        comps.append((x % 2_000_001 - 1_000_000) / 1_000_000.0)
-    return comps
-
-
-def lsh_bucket(col_name: str = "embedding") -> Column:
-    """Random-hyperplane LSH bucket id: one sign bit per plane.
-
-    Emitted as ONE parsed SQL expression: the Column-object form (8 planes ×
-    64 F.lit components + fold) was ~500 py4j round trips ≈ 0.5s of driver
-    latency per query build (profiled r3); the plane components inline as
-    SQL array literals and parse JVM-side in a single trip.
-    """
-    terms = []
-    for p in range(LSH_PLANES):
-        plane = "array({})".format(
-            ", ".join(repr(c) for c in hyperplane(p))
-        )
-        d = (
-            f"aggregate(zip_with({col_name}, {plane}, "
-            "(x, y) -> cast(x AS DOUBLE) * y), 0.0d, (acc, x) -> acc + x)"
-        )
-        bit = f"(CASE WHEN {d} >= 0 THEN 1 ELSE 0 END)"
-        shift = LSH_PLANES - 1 - p
-        terms.append(f"({bit} * {1 << shift})" if shift else bit)
-    return F.expr(" + ".join(terms))
-
-
-@query("ann_lsh_topk", tags=("similarity", "lsh"))
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k via random-hyperplane LSH: rank only vectors sharing
-    the query's bucket (falls back to exact ranking within the bucket).
-    Rows-only: bucket membership is hash-family-specific.
-
-    At scale the bucketed corpus would be written
-    ``partitionBy(bucket)`` so a query touches one partition — an IVF-style
-    index expressed as Spark partitioning.
-
-    Self-evidencing (VERDICT r2 #8 pattern): every row carries
-    ``in_brute_topk`` — whether this candidate also appears in the exact
-    brute-force top-10 over the full corpus — so the driver's rows-only
-    artifact records the sketch's recall directly (sum of the flags / 10;
-    tests/test_similarity.py asserts the same recall ≥ 0.5 bound the
-    hyperplane family guarantees at these dimensions).
-    """
-    # persisted, never unpersisted: session-scoped cache discipline (see
-    # dedup.py module docstring) — the bucketed corpus is consumed by both
-    # the query-row filter and the candidate join.
-    emb = spread(table(spark, sf_dir, "embeddings")).withColumn(
-        "bucket", lsh_bucket("embedding")
-    ).persist()
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qe"),
-        norm(F.col("embedding")).alias("qn"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    cand = emb.crossJoin(F.broadcast(q)).filter(
-        (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != 0)
-    )
-    cos = F.round(
-        dot(F.col("embedding"), F.col("qe"))
-        / (norm(F.col("embedding")) * F.col("qn")),
-        4,
-    )
-    approx = (
-        cand.select("vec_id", cos.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-    )
-    # unrounded, matching similarity_cosine_topk's ranking exactly (the
-    # 4dp display rounding above could flip ties at the top-k boundary)
-    brute = (
-        spread(table(spark, sf_dir, "embeddings"))
-        .crossJoin(F.broadcast(q.select("qe", "qn")))
-        .filter(F.col("vec_id") != 0)
-        .select(
-            "vec_id",
-            (
-                dot(F.col("embedding"), F.col("qe"))
-                / (norm(F.col("embedding")) * F.col("qn"))
-            ).alias("b_cos"),
-        )
-        .orderBy(F.desc("b_cos"), F.asc("vec_id"))
-        .limit(10)
-        .select(F.col("vec_id").alias("b_vec_id"))
-    )
-    return (
-        approx.join(
-            brute, approx.vec_id == F.col("b_vec_id"), "left"
-        )
-        .select(
-            "vec_id",
-            "cosine",
-            F.col("b_vec_id").isNotNull().alias("in_brute_topk"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-    )
-
-
 IVF_CLUSTERS = 16
 IVF_NPROBE = 4
 IVF_ITERS = 2
-
-
 IVF_TRAIN_SAMPLE = 4096  # quantizer-training sample rows (driver-side)
+PQ_SUBSPACES = 8  # 64-dim → 8 sub-vectors of 8 dims
+PQ_CODEWORDS = 16  # 4-bit codes: a vector compresses to 8 nibbles
+PQ_ITERS = 10
+LSH_BANDS = 8  # near-dup banding width (recall = 1 - (1 - p^r)^B)
 
 
 def _sq_dists(x, c):
@@ -301,6 +186,222 @@ def _sq_dists(x, c):
         - 2.0 * (x @ c.T)
         + (c * c).sum(axis=1)[None, :]
     )
+
+
+def _nearest(x, c):
+    """Index of the nearest row of ``c`` for every row of ``x``; ties break
+    to the lowest index (argmin keeps the first minimum)."""
+    return _sq_dists(x, c).argmin(axis=1)
+
+
+def _lloyd(x, k: int, iters: int):
+    """K-means on the driver: init from the first min(k, n) rows, ``iters``
+    Lloyd steps, a cell that loses all its members keeps its centroid. A
+    sample with fewer than k rows keeps n centroids (every row its own
+    cell) instead of training on rows it does not have."""
+    cents = x[:k].copy()
+    for _ in range(iters if len(cents) else 0):
+        assign = _nearest(x, cents)
+        for j in range(len(cents)):
+            members = x[assign == j]
+            if len(members):
+                cents[j] = members.mean(axis=0)
+    return cents
+
+
+def _pq_encode(x, books):
+    """PQ codes (n × M int32): per subspace m, the nearest codeword of
+    ``books[m]`` to that slice of each row."""
+    import numpy as np
+
+    sub = x.reshape(len(x), len(books), x.shape[1] // len(books))
+    return np.stack(
+        [_nearest(sub[:, m, :], book) for m, book in enumerate(books)], axis=1
+    ).astype(np.int32)
+
+
+def _adc_table(q, books):
+    """ADC lookup table of one query vector:
+    adt[m][c] = ||q_m − books[m][c]||²."""
+    import numpy as np
+
+    qsub = np.asarray(q, dtype=np.float64).reshape(len(books), -1)
+    return ((qsub[:, None, :] - books) ** 2).sum(axis=2)
+
+
+def _probe(cents, q) -> list[int]:
+    """The IVF_NPROBE cells nearest ``q``, nearest first (stable: equal
+    distances keep the lower cid first)."""
+    import numpy as np
+
+    return np.argsort(((cents - q) ** 2).sum(axis=1), kind="stable")[
+        :IVF_NPROBE
+    ].tolist()
+
+
+def hyperplane(plane_id: int, dim: int = EMBED_DIM) -> list[float]:
+    """Deterministic pseudo-random unit-free hyperplane component list.
+
+    Components derive from a splitmix64-style integer mix of (plane_id, d) —
+    reproducible across sessions with no RNG state (scripts can't call
+    random()); only the *sign structure* matters for LSH.
+    """
+    comps = []
+    for d in range(dim):
+        x = (plane_id * 1_000_003 + d * 40_009 + 12_345) & 0xFFFFFFFFFFFFFFFF
+        x ^= x >> 30
+        x = (x * 0xBF58476D1CE4E5B9) & 0xFFFFFFFFFFFFFFFF
+        x ^= x >> 27
+        x = (x * 0x94D049BB133111EB) & 0xFFFFFFFFFFFFFFFF
+        x ^= x >> 31
+        comps.append((x % 2_000_001 - 1_000_000) / 1_000_000.0)
+    return comps
+
+
+def _band_buckets(x, planes, r: int):
+    """Random-hyperplane LSH (n × bands int64): bit p is the sign of
+    x·plane_p (≥ 0 → 1), and band b packs bits [b·r, b·r + r) with the
+    first plane most significant. ``planes`` is dim × (bands·r)."""
+    import numpy as np
+
+    bits = ((x @ planes) >= 0).astype(np.int64)
+    return bits.reshape(len(x), -1, r) @ (1 << np.arange(r - 1, -1, -1))
+
+
+def _series_udf(return_type: str, kernel):
+    """The module's one Series→Series pandas_udf form: each Arrow batch of
+    embeddings enters ``kernel`` as a B×dim float64 array, and its B
+    results (a vector, or a B×k matrix for an array column) leave as the
+    batch's Series."""
+    import numpy as np
+    import pandas as pd
+
+    def batch(s):
+        out = kernel(np.asarray(s.tolist(), dtype=np.float64))
+        return pd.Series(list(out) if out.ndim > 1 else out)
+
+    # real objects: `from __future__ import annotations` would leave strings
+    # that Spark resolves in this module's globals, where pandas is absent
+    batch.__annotations__ = {"s": pd.Series, "return": pd.Series}
+    return F.pandas_udf(batch, return_type)
+
+
+def _lsh_udf(planes_per_band: int, bands: int):
+    """pandas_udf: embedding → its ``bands`` LSH bucket ids (array<long>),
+    one BLAS matmul per Arrow batch; the dim × bands·r planes ride the
+    closure (57 KB for sf0.1's 112 planes)."""
+    import numpy as np
+
+    planes = np.array(
+        [hyperplane(p) for p in range(bands * planes_per_band)],
+        dtype=np.float64,
+    ).T
+    return _series_udf(
+        "array<long>", lambda x: _band_buckets(x, planes, planes_per_band)
+    )
+
+
+def _sql_array(v) -> str:
+    """Numbers (a vector, or nested lists of them) as ONE parsed SQL
+    ``array(...)`` literal. The Column form (F.array of F.lit) costs a py4j
+    round trip per element at build time (~500 trips ≈ 0.5 s for 8 planes,
+    profiled r3), and the ANN builders train and rebuild per run."""
+    if isinstance(v, numbers.Number):
+        if isinstance(v, numbers.Integral):
+            return str(int(v))
+        return repr(float(v))
+    return "array({})".format(", ".join(_sql_array(e) for e in v))
+
+
+def _sq_l2_to(q) -> Column:
+    """Exact squared L2 distance of ``embedding`` to the vector ``q``: a
+    double fold in array order."""
+    return F.expr(
+        "aggregate(zip_with(cast(embedding AS array<double>), "
+        f"{_sql_array(q)}, (x, q) -> (x - q) * (x - q)), 0.0d, "
+        "(acc, x) -> acc + x)"
+    )
+
+
+def _adc_d2(codes: str, adt: str) -> Column:
+    """ADC distance of a row: M 1-based lookups of its PQ ``codes`` into the
+    M×K literal table ``adt``, summed (transform's index supplies m)."""
+    return F.expr(
+        f"aggregate(transform({codes}, (c, m) -> element_at(element_at("
+        f"{adt}, m + 1), cast(c AS INT) + 1)), 0.0d, (acc, x) -> acc + x)"
+    )
+
+
+def _top10(df: DataFrame, rank: Column) -> DataFrame:
+    """The 10 first rows in ``rank`` order, vec_id tiebreak."""
+    return df.orderBy(rank, F.asc("vec_id")).limit(10)
+
+
+def _flag_hits(
+    approx: DataFrame, exact: DataFrame, rank: Column, flag: str
+) -> DataFrame:
+    """The ANN queries' self-evidence: ``approx``'s rows, each flagged
+    ``flag`` when its vec_id is also in the exact top-10 ``exact``, in
+    ``rank`` order (vec_id tiebreak)."""
+    hits = exact.select(F.col("vec_id").alias("b_vec_id"))
+    return (
+        approx.join(hits, approx.vec_id == F.col("b_vec_id"), "left")
+        .select(*approx.columns, F.col("b_vec_id").isNotNull().alias(flag))
+        .orderBy(rank, F.asc("vec_id"))
+    )
+
+
+@query("ann_lsh_topk", tags=("similarity", "lsh"))
+def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Approximate top-k via random-hyperplane LSH: rank only vectors sharing
+    the query's bucket (falls back to exact ranking within the bucket).
+    Rows-only: bucket membership is hash-family-specific.
+
+    The bucket is band 0 of the banded-LSH kernel at r = LSH_PLANES (the
+    same planes and bit order as dedup_embedding_cosine's hash). At scale
+    the bucketed corpus would be written ``partitionBy(bucket)`` so a query
+    touches one partition — an IVF-style index expressed as Spark
+    partitioning.
+
+    Self-evidencing (VERDICT r2 #8 pattern): every row carries
+    ``in_brute_topk`` — whether this candidate also appears in the exact
+    brute-force top-10 over the full corpus — so the driver's rows-only
+    artifact records the sketch's recall directly (sum of the flags / 10;
+    tests/test_similarity.py asserts the same recall ≥ 0.5 bound the
+    hyperplane family guarantees at these dimensions).
+    """
+    # persisted, never unpersisted: session-scoped cache discipline (see
+    # dedup.py module docstring) — the bucketed corpus is consumed by both
+    # the query-row filter and the candidate join, and a rebuild's frame
+    # matches this one, so later builds read the cache.
+    emb = spread(table(spark, sf_dir, "embeddings")).withColumn(
+        "bucket", _lsh_udf(LSH_PLANES, 1)("embedding")[0]
+    ).persist()
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.col("embedding").alias("qe"),
+        norm(F.col("embedding")).alias("qn"),
+        F.col("bucket").alias("q_bucket"),
+    )
+    cand = emb.crossJoin(F.broadcast(q)).filter(
+        (F.col("bucket") == F.col("q_bucket")) & (F.col("vec_id") != 0)
+    )
+    cos = dot(F.col("embedding"), F.col("qe")) / (
+        norm(F.col("embedding")) * F.col("qn")
+    )
+    approx = _top10(
+        cand.select("vec_id", F.round(cos, 4).alias("cosine")),
+        F.desc("cosine"),
+    )
+    # unrounded, matching similarity_cosine_topk's ranking exactly (the
+    # 4dp display rounding above could flip ties at the top-k boundary)
+    brute = _top10(
+        spread(table(spark, sf_dir, "embeddings"))
+        .crossJoin(F.broadcast(q.select("qe", "qn")))
+        .filter(F.col("vec_id") != 0)
+        .select("vec_id", cos.alias("b_cos")),
+        F.desc("b_cos"),
+    )
+    return _flag_hits(approx, brute, F.desc("cosine"), "in_brute_topk")
 
 
 def _train_sample(emb: "DataFrame"):
@@ -341,9 +442,21 @@ def _train_sample(emb: "DataFrame"):
             .select(*cols)
             .toPandas()
         )
+    if rows.empty:  # still a 2-D sample: the kernels read its dim
+        return np.empty((0, EMBED_DIM)), {}
     rows = rows.sort_values("vec_id", ignore_index=True)
     x = np.asarray(rows["embedding"].tolist(), dtype=np.float64)
     return x, dict(zip(rows["vec_id"].tolist(), x))
+
+
+def _query_vector(by_id: dict):
+    """The ANN queries' query vector, vec_id 0, read from the sample."""
+    if 0 not in by_id:
+        raise ValueError(
+            "embeddings holds no query vector: the ANN queries search "
+            "around vec_id 0, and no row has that id"
+        )
+    return by_id[0]
 
 
 def ivf_centroids(emb: "DataFrame", sample=None):
@@ -356,7 +469,8 @@ def ivf_centroids(emb: "DataFrame", sample=None):
     participates in training — only the one bounded collect does — while
     cell *assignment* of the full corpus stays distributed in the caller.
     Deterministic init (first K sample rows), IVF_ITERS Lloyd steps; ties
-    in assignment break to the lowest cid (argmin keeps the first minimum).
+    in assignment break to the lowest cid (argmin keeps the first minimum);
+    a sample of n < K rows gives n cells (_lloyd).
     Returns (K×dim centroid array, {vec_id: sample row} dict) — callers
     that also need specific low-vec_id vectors (e.g. the query vector) read
     them from the sample instead of issuing a second collect job.
@@ -364,14 +478,7 @@ def ivf_centroids(emb: "DataFrame", sample=None):
     trains coarse + PQ quantizers from ONE collect).
     """
     x, by_id = sample if sample is not None else _train_sample(emb)
-    cents = x[:IVF_CLUSTERS].copy()
-    for _ in range(IVF_ITERS):
-        assign = _sq_dists(x, cents).argmin(axis=1)
-        for k in range(IVF_CLUSTERS):
-            members = x[assign == k]
-            if len(members):
-                cents[k] = members.mean(axis=0)
-    return cents, by_id
+    return _lloyd(x, IVF_CLUSTERS, IVF_ITERS), by_id
 
 
 @query("ann_ivf_topk", tags=("similarity", "ivf"))
@@ -401,14 +508,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     asymptotics — pair generation); training stays bounded either way
     (sample ≈ 100×nlist, capped).
     """
-    import numpy as np
-
     emb = table(spark, sf_dir, "embeddings")
-    cents_np, sample = ivf_centroids(emb)
-    qv = sample[0]  # vec_id 0 — first row of the vec_id-ordered sample
-    probe = np.argsort(
-        ((cents_np - qv) ** 2).sum(axis=1), kind="stable"
-    )[:IVF_NPROBE].tolist()
+    cents, by_id = ivf_centroids(emb)
+    qv = _query_vector(by_id)
+    probe = _probe(cents, qv)
 
     # Cell assignment as a vectorized Arrow UDF: nearest-centroid argmin is
     # dense K×D linear algebra, which numpy does in one BLAS-shaped batch
@@ -419,50 +522,26 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the UDF form is map-only: no shuffle, centroids ride the closure).
     # Ties break to the lowest cid (np.argmin keeps the first minimum),
     # matching the min_by(struct(d, cid)) form it replaces.
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("int")
-    def nearest_cid(s):
-        import pandas as pd
-
-        x = np.asarray(s.tolist(), dtype=np.float64)  # B×D Arrow batch
-        return pd.Series(_sq_dists(x, cents_np).argmin(axis=1))
-
+    nearest_cid = _series_udf("int", lambda x: _nearest(x, cents))
     assigned = spread(emb).withColumn("cid", nearest_cid(F.col("embedding")))
     qe = F.array(*[F.lit(float(v)) for v in qv])
-    cos = F.round(cosine(F.col("embedding"), qe), 4)
-    approx = (
+    cos = cosine(F.col("embedding"), qe)
+    approx = _top10(
         assigned.filter(F.col("cid").isin(probe) & (F.col("vec_id") != 0))
-        .select("vec_id", cos.alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
+        .select("vec_id", F.round(cos, 4).alias("cosine")),
+        F.desc("cosine"),
     )
     # Self-evidencing, same device as ann_lsh_topk: flag which approximate
     # hits also sit in the exact brute-force top-10 (unrounded score,
     # vec_id tiebreak), so the driver's rows-only artifact carries the
     # per-row recall of the probed-cells search itself.
-    brute = (
+    brute = _top10(
         spread(emb)
         .filter(F.col("vec_id") != 0)
-        .select("vec_id", cosine(F.col("embedding"), qe).alias("b_cos"))
-        .orderBy(F.desc("b_cos"), F.asc("vec_id"))
-        .limit(10)
-        .select(F.col("vec_id").alias("b_vec_id"))
+        .select("vec_id", cos.alias("b_cos")),
+        F.desc("b_cos"),
     )
-    return (
-        approx.join(brute, approx.vec_id == F.col("b_vec_id"), "left")
-        .select(
-            "vec_id",
-            "cosine",
-            F.col("b_vec_id").isNotNull().alias("in_brute_topk"),
-        )
-        .orderBy(F.desc("cosine"), F.asc("vec_id"))
-    )
-
-
-PQ_SUBSPACES = 8  # 64-dim → 8 sub-vectors of 8 dims
-PQ_CODEWORDS = 16  # 4-bit codes: a vector compresses to 8 nibbles
-PQ_ITERS = 10
+    return _flag_hits(approx, brute, F.desc("cosine"), "in_brute_topk")
 
 
 def pq_codebooks(emb: "DataFrame", sample=None, train_x=None):
@@ -471,7 +550,8 @@ def pq_codebooks(emb: "DataFrame", sample=None, train_x=None):
     (first IVF_TRAIN_SAMPLE vectors by vec_id, driver-side numpy — the
     100 TB corpus never participates in training). Deterministic init
     (first PQ_CODEWORDS sample rows per subspace), PQ_ITERS Lloyd steps,
-    argmin ties to the lowest code. Returns (M×K×ds codebook array,
+    argmin ties to the lowest code; a sample of n < K rows gives n codewords
+    per subspace (_lloyd). Returns (M×K×ds codebook array,
     {vec_id: sample row} dict). ``sample``: precollected _train_sample
     tuple; ``train_x``: train on THESE vectors instead of the sample rows
     themselves (ann_ivf_pq_topk passes cell RESIDUALS — codebooks must
@@ -481,19 +561,13 @@ def pq_codebooks(emb: "DataFrame", sample=None, train_x=None):
     x, by_id = sample if sample is not None else _train_sample(emb)
     if train_x is not None:
         x = np.asarray(train_x, dtype=np.float64)
-    ds = x.shape[1] // PQ_SUBSPACES
-    sub = x.reshape(len(x), PQ_SUBSPACES, ds)
-    books = np.empty((PQ_SUBSPACES, PQ_CODEWORDS, ds))
-    for m in range(PQ_SUBSPACES):
-        xm = sub[:, m, :]
-        c = xm[:PQ_CODEWORDS].copy()
-        for _ in range(PQ_ITERS):
-            assign = _sq_dists(xm, c).argmin(axis=1)
-            for k in range(PQ_CODEWORDS):
-                members = xm[assign == k]
-                if len(members):
-                    c[k] = members.mean(axis=0)
-        books[m] = c
+    sub = x.reshape(len(x), PQ_SUBSPACES, x.shape[1] // PQ_SUBSPACES)
+    books = np.stack(
+        [
+            _lloyd(sub[:, m, :], PQ_CODEWORDS, PQ_ITERS)
+            for m in range(PQ_SUBSPACES)
+        ]
+    )
     return books, by_id
 
 
@@ -526,41 +600,10 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the honest expectation; tests/test_similarity.py pins exact-ranking
     recovery on separated clustered data and a planted duplicate of the
     query ranking first, which is the property PQ actually promises.)"""
-    import numpy as np
-    import pandas as pd
-
     emb = table(spark, sf_dir, "embeddings")
-    books, sample = pq_codebooks(emb)
-    qv = sample[0]  # vec_id 0 — first row of the vec_id-ordered sample
-    ds = len(qv) // PQ_SUBSPACES
-    qsub = np.asarray(qv, dtype=np.float64).reshape(PQ_SUBSPACES, ds)
-    # ADC lookup table: adt[m][c] = ||q_m − books[m][c]||²
-    adt = ((qsub[:, None, :] - books) ** 2).sum(axis=2)
-
-    def _code(s):
-        x = np.asarray(s.tolist(), dtype=np.float64).reshape(
-            -1, PQ_SUBSPACES, ds
-        )
-        codes = np.empty((len(x), PQ_SUBSPACES), dtype=np.int32)
-        for m in range(PQ_SUBSPACES):
-            codes[:, m] = _sq_dists(x[:, m, :], books[m]).argmin(axis=1)
-        return pd.Series(list(codes))
-
-    _code.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    pq_code = F.pandas_udf(_code, "array<int>")
-
-    # Both literal arrays enter as ONE parsed SQL string each: the
-    # Column-object form (F.array of 128 + 64 F.lits) costs a py4j round
-    # trip per element at BUILD time — the r3 lsh_bucket finding — and
-    # this builder rebuilds per run (NO_PREPARE, training at build).
-    adt_sql = "array({})".format(
-        ", ".join(
-            "array({})".format(
-                ", ".join(repr(float(v)) for v in adt[m])
-            )
-            for m in range(PQ_SUBSPACES)
-        )
-    )
+    books, by_id = pq_codebooks(emb)
+    qv = _query_vector(by_id)
+    pq_code = _series_udf("array<int>", lambda x: _pq_encode(x, books))
     # No spread() before the encode UDF: at scale the corpus arrives
     # pre-split (spread is a no-op by its own size guard) and locally the
     # fan-out exchange costs more than the single-split numpy encode it
@@ -569,41 +612,20 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = emb.select(
         "vec_id", "embedding", pq_code(F.col("embedding")).alias("code")
     )
-    # ADC distance: M 1-based lookups into the literal table, summed —
-    # transform's (element, index) lambda supplies the subspace index m.
-    approx_d2 = F.expr(
-        f"aggregate(transform(code, (c, m) -> "
-        f"element_at(element_at({adt_sql}, m + 1), cast(c AS INT) + 1)), "
-        "0.0d, (acc, x) -> acc + x)"
+    approx_d2 = _adc_d2("code", _sql_array(_adc_table(qv, books)))
+    approx = _top10(
+        coded.filter(F.col("vec_id") != 0).select(
+            "vec_id", F.round(approx_d2, 4).alias("approx_d2")
+        ),
+        F.asc("approx_d2"),
     )
-    approx = (
-        coded.filter(F.col("vec_id") != 0)
-        .select("vec_id", F.round(approx_d2, 4).alias("approx_d2"))
-        .orderBy(F.asc("approx_d2"), F.asc("vec_id"))
-        .limit(10)
-    )
-    qe_sql = "array({})".format(", ".join(repr(float(v)) for v in qv))
-    exact_d2 = F.expr(
-        f"aggregate(zip_with(cast(embedding AS array<double>), {qe_sql}, "
-        "(x, q) -> (x - q) * (x - q)), 0.0d, (acc, x) -> acc + x)"
-    )
-    brute = (
+    brute = _top10(
         spread(emb)
         .filter(F.col("vec_id") != 0)
-        .select("vec_id", exact_d2.alias("b_d2"))
-        .orderBy(F.asc("b_d2"), F.asc("vec_id"))
-        .limit(10)
-        .select(F.col("vec_id").alias("b_vec_id"))
+        .select("vec_id", _sq_l2_to(qv).alias("b_d2")),
+        F.asc("b_d2"),
     )
-    return (
-        approx.join(brute, approx.vec_id == F.col("b_vec_id"), "left")
-        .select(
-            "vec_id",
-            "approx_d2",
-            F.col("b_vec_id").isNotNull().alias("in_brute_topk"),
-        )
-        .orderBy(F.asc("approx_d2"), F.asc("vec_id"))
-    )
+    return _flag_hits(approx, brute, F.asc("approx_d2"), "in_brute_topk")
 
 
 @query("ann_ivf_pq_topk", tags=("similarity", "ivf", "pq"))
@@ -655,60 +677,31 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     work and TakeOrdered). At 100 TB the same trade holds per branch:
     the exchange moves only the probed fraction at ~20 bytes/row."""
     import numpy as np
-    import pandas as pd
 
     emb = table(spark, sf_dir, "embeddings")
     sample = _train_sample(emb)
     cents, by_id = ivf_centroids(emb, sample=sample)
+    qv = _query_vector(by_id)
     xs = sample[0]
-    assign = _sq_dists(xs, cents).argmin(axis=1)
-    residuals = xs - cents[assign]
+    residuals = xs - cents[_nearest(xs, cents)]
     books, _ = pq_codebooks(emb, sample=sample, train_x=residuals)
-    qv = by_id[0]
-    ds = len(qv) // PQ_SUBSPACES
-    probe = np.argsort(((cents - qv) ** 2).sum(axis=1), kind="stable")[
-        :IVF_NPROBE
-    ].tolist()
+    probe = _probe(cents, qv)
     # per-probed-cell ADC tables from the query's RESIDUAL in that cell
-    adts = []
-    for cid in probe:
-        qr = (qv - cents[cid]).reshape(PQ_SUBSPACES, ds)
-        adts.append(((qr[:, None, :] - books) ** 2).sum(axis=2))
+    adts = [_adc_table(qv - cents[cid], books) for cid in probe]
 
-    def _enc(s):
-        x = np.asarray(s.tolist(), dtype=np.float64)
-        cid = _sq_dists(x, cents).argmin(axis=1)
-        r = (x - cents[cid]).reshape(-1, PQ_SUBSPACES, ds)
-        out = np.empty((len(x), 1 + PQ_SUBSPACES), dtype=np.int32)
-        out[:, 0] = cid
-        for m in range(PQ_SUBSPACES):
-            out[:, m + 1] = _sq_dists(r[:, m, :], books[m]).argmin(axis=1)
-        return pd.Series(list(out))
+    def enc(x):
+        cid = _nearest(x, cents)
+        codes = _pq_encode(x - cents[cid], books)
+        return np.column_stack([cid, codes]).astype(np.int32)
 
-    _enc.__annotations__ = {"s": pd.Series, "return": pd.Series}
     # asNondeterministic is an optimizer FENCE, not a semantics claim (the
     # encode is deterministic): without it the pos>0 filter is pushed below
-    # the ADC projection and _enc evaluates TWICE in the approx branch —
-    # once under the filter over the full corpus, once above it for the
-    # projection (guide §4.4). One evaluation halves the encode map stage
-    # at scale; locally ±0.01 s (the corpus is small). The lost vec_id!=0
-    # scan pushdown is one row.
-    ivfpq_enc = F.pandas_udf(_enc, "array<int>").asNondeterministic()
-
-    adt_sql = "array({})".format(
-        ", ".join(
-            "array({})".format(
-                ", ".join(
-                    "array({})".format(
-                        ", ".join(repr(float(v)) for v in adt[m])
-                    )
-                    for m in range(PQ_SUBSPACES)
-                )
-            )
-            for adt in adts
-        )
-    )
-    probe_sql = "array({})".format(", ".join(str(c) for c in probe))
+    # the ADC projection and the encode evaluates TWICE in the approx
+    # branch — once under the filter over the full corpus, once above it
+    # for the projection (guide §4.4). One evaluation halves the encode map
+    # stage at scale; locally ±0.01 s (the corpus is small). The lost
+    # vec_id!=0 scan pushdown is one row.
+    ivfpq_enc = _series_udf("array<int>", enc).asNondeterministic()
     # No spread() before the encode UDF (same reasoning as the served-index
     # cell UDF and ann_pq_topk's encode): the scored frame repartitions
     # right below, so the fan-out exchange was redundant — at scale spread
@@ -717,11 +710,6 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     coded = emb.select(
         "vec_id", "embedding", ivfpq_enc(F.col("embedding")).alias("cc")
     )
-    qe_sql = "array({})".format(", ".join(repr(float(v)) for v in qv))
-    exact_d2 = F.expr(
-        f"aggregate(zip_with(cast(embedding AS array<double>), {qe_sql}, "
-        "(x, q) -> (x - q) * (x - q)), 0.0d, (acc, x) -> acc + x)"
-    )
     # pos = 1-based index of this row's cell in the probe list (NULL →
     # unprobed cell, filtered before any distance work — BOTH the ADC
     # lookups and the exact fold run only on probed rows). The broadcast
@@ -729,45 +717,26 @@ def ann_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the repartition runs once per branch: it fans each branch's probed
     # rows out for the distance work and TakeOrdered, not to share one
     # exchange.
+    approx_d2 = _adc_d2(
+        f"slice(cc, 2, {PQ_SUBSPACES})",
+        f"element_at({_sql_array(adts)}, cast(pos AS INT))",
+    )
     scored = (
         coded.withColumn(
-            "pos", F.expr(f"array_position({probe_sql}, cc[0])")
+            "pos", F.expr(f"array_position({_sql_array(probe)}, cc[0])")
         )
         .filter((F.col("pos") > 0) & (F.col("vec_id") != 0))
         .select(
             "vec_id",
-            F.round(
-                F.expr(
-                    "aggregate(transform(slice(cc, 2, "
-                    f"{PQ_SUBSPACES}), (c, m) -> element_at(element_at("
-                    f"element_at({adt_sql}, cast(pos AS INT)), m + 1), "
-                    "cast(c AS INT) + 1)), 0.0d, (acc, x) -> acc + x)"
-                ),
-                4,
-            ).alias("approx_d2"),
-            exact_d2.alias("exact_d2"),
+            F.round(approx_d2, 4).alias("approx_d2"),
+            _sq_l2_to(qv).alias("exact_d2"),
         )
         .repartition(default_parallelism())
     )
-    approx = (
-        scored.select("vec_id", "approx_d2")
-        .orderBy(F.asc("approx_d2"), F.asc("vec_id"))
-        .limit(10)
-    )
-    brute = (
-        scored.select("vec_id", F.col("exact_d2").alias("b_d2"))
-        .orderBy(F.asc("b_d2"), F.asc("vec_id"))
-        .limit(10)
-        .select(F.col("vec_id").alias("b_vec_id"))
-    )
-    return (
-        approx.join(brute, approx.vec_id == F.col("b_vec_id"), "left")
-        .select(
-            "vec_id",
-            "approx_d2",
-            F.col("b_vec_id").isNotNull().alias("in_probed_exact_topk"),
-        )
-        .orderBy(F.asc("approx_d2"), F.asc("vec_id"))
+    approx = _top10(scored.select("vec_id", "approx_d2"), F.asc("approx_d2"))
+    brute = _top10(scored.select("vec_id", "exact_d2"), F.asc("exact_d2"))
+    return _flag_hits(
+        approx, brute, F.asc("approx_d2"), "in_probed_exact_topk"
     )
 
 
@@ -806,23 +775,11 @@ def ann_ivf_served_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
 
-    import numpy as np
-    import pandas as pd
-
     emb = table(spark, sf_dir, "embeddings")
-    sample = _train_sample(emb)
-    cents, by_id = ivf_centroids(emb, sample=sample)
-    qv = by_id[0]
-    probe = np.argsort(((cents - qv) ** 2).sum(axis=1), kind="stable")[
-        :IVF_NPROBE
-    ].tolist()
-
-    def _cell(s):
-        x = np.asarray(s.tolist(), dtype=np.float64)
-        return pd.Series(_sq_dists(x, cents).argmin(axis=1).astype(np.int32))
-
-    _cell.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    ivf_cell = F.pandas_udf(_cell, "int")
+    cents, by_id = ivf_centroids(emb)
+    qv = _query_vector(by_id)
+    probe = _probe(cents, qv)
+    ivf_cell = _series_udf("int", lambda x: _nearest(x, cents))
 
     sf_tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
     index_dir = os.path.join(_ivf_index_root(), sf_tag)
@@ -861,16 +818,11 @@ def ann_ivf_served_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     served = spark.read.parquet(index_dir).filter(
         F.col("cid").isin([int(c) for c in probe]) & (F.col("vec_id") != 0)
     )
-    qe_sql = "array({})".format(", ".join(repr(float(v)) for v in qv))
-    exact_d2 = F.expr(
-        f"aggregate(zip_with(cast(embedding AS array<double>), {qe_sql}, "
-        "(x, q) -> (x - q) * (x - q)), 0.0d, (acc, x) -> acc + x)"
-    )
     return (
-        served.select("vec_id", F.round(exact_d2, 4).alias("d2"))
-        .orderBy(F.asc("d2"), F.asc("vec_id"))
-        .limit(10)
-        .select(
+        _top10(
+            served.select("vec_id", F.round(_sq_l2_to(qv), 4).alias("d2")),
+            F.asc("d2"),
+        ).select(
             "vec_id",
             "d2",
             F.lit(len(probe)).alias("n_cells_probed"),
@@ -879,90 +831,28 @@ def ann_ivf_served_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-LSH_BANDS = 8  # near-dup banding width (recall = 1 - (1 - p^r)^B)
-
-
 def banded_lsh_buckets(
-    vectors: DataFrame,
-    planes_per_band: int,
-    col: str = "embedding",
-    use_numpy: bool = False,
+    vectors: DataFrame, planes_per_band: int, col: str = "embedding"
 ) -> DataFrame:
     """Explode a (…, embedding) frame to one row per (band, bucket): band b's
-    bucket id packs the sign bits of planes [b·r, b·r+r). All B·r plane dot
-    products evaluate in ONE projected bit-array column (single parsed SQL
-    expression — the Column-object form costs ~500 py4j trips per build,
-    the r3 lsh_bucket finding), and the per-band pack is a slice+fold over
-    those bits, so the plane work is done once per vector, not per band.
+    bucket id packs the sign bits of planes [b·r, b·r+r), first plane most
+    significant (_band_buckets). All B·r plane dot products are ONE BLAS
+    matmul per Arrow batch, so the plane work is done once per vector, not
+    per band.
 
-    ``use_numpy`` (r7): the SQL higher-order functions (zip_with/aggregate
-    lambdas) run INTERPRETED — they never enter whole-stage codegen — so
-    the hashing costs ~30 ns per multiply and grows with n·B·r·dim. The
-    Arrow pandas_udf path computes the same sign bits as ONE BLAS matmul
-    per batch (bucket parity with the SQL path verified exactly: 0
-    mismatches over a full corpus at r=18). At small n the Python-worker
-    round-trip dominates (r10 driver-regime sweep: SQL ahead at 2 000
-    vectors, 1.17 vs 1.82 s min full-query; tied at 8k; numpy 1.5× ahead
-    at 32k, 3× at 128k), so callers gate it on corpus size — see
-    blocked_cosine_pairs' NUMPY_LSH_MIN_N. Same output schema either way;
-    bucket parity is verified empirically (0 mismatches over a full corpus
-    at r=18) but not guaranteed bit-for-bit — the matmul and the SQL
-    left-fold sum in different orders, so a plane dot product within a few
-    ULPs of zero could flip a sign bit and bucket differently
-    (recall-neutral: candidate verification recomputes exact cosine)."""
-    r, total = planes_per_band, LSH_BANDS * planes_per_band
-    if use_numpy:
-        import numpy as np
-        import pandas as pd
-
-        planes = np.array(
-            [hyperplane(p) for p in range(total)], dtype=np.float64
-        ).T  # dim × total, ~80 KB in the closure
-        pw = (1 << np.arange(r - 1, -1, -1)).astype(np.int64)
-
-        def _bb(emb):
-            X = np.stack(emb.to_numpy()).astype(np.float64)
-            bits = (X @ planes) >= 0
-            out = np.empty((len(X), LSH_BANDS), dtype=np.int64)
-            for b in range(LSH_BANDS):
-                out[:, b] = bits[:, b * r : (b + 1) * r].astype(np.int64) @ pw
-            return pd.Series(list(out))
-
-        # annotations set as real objects: the module's `from __future__
-        # import annotations` would stringify inline hints, and pandas is
-        # imported locally, so Spark's hint eval could not resolve them
-        _bb.__annotations__ = {"emb": pd.Series, "return": pd.Series}
-        _band_buckets = F.pandas_udf(_bb, "array<long>")
-
-        return (
-            vectors.withColumn("_bks", _band_buckets(col))
-            .select("*", F.posexplode("_bks").alias("band", "bucket"))
-            .drop("_bks")
-        )
-    planes_sql = "array({})".format(
-        ", ".join(
-            "array({})".format(", ".join(repr(c) for c in hyperplane(p)))
-            for p in range(total)
-        )
-    )
-    bits_sql = (
-        f"transform({planes_sql}, pl -> CASE WHEN "
-        f"aggregate(zip_with(cast({col} AS array<double>), pl, "
-        "(x, y) -> x * y), 0.0d, (acc, x) -> acc + x) >= 0 "
-        "THEN 1L ELSE 0L END)"
-    )
-    bands_sql = (
-        f"transform(sequence(0, {LSH_BANDS - 1}), b -> struct("
-        f"cast(b AS INT) AS band, "
-        f"aggregate(slice(_lsh_bits, b * {r} + 1, {r}), 0L, "
-        "(acc, x) -> acc * 2 + x) AS bucket))"
-    )
+    The hash runs in numpy at every corpus size. A SQL zip_with/aggregate
+    form ran until the r10 sweep's 8k-vector crossover went stale: with the
+    engine's Python daemon the numpy path is ahead 9/9 reps at sf0.001,
+    sf0.01 and sf0.1 with identical pair sets (ROADMAP item 9). Bucket
+    parity with a sequential left-fold sum (that form's order) is pinned
+    by tests/test_similarity.py at r=18: the smallest |dot| over the test
+    corpora is ~5e-6, far above the rounding the two orders can differ by
+    (a dot within a few ULPs of zero could flip a bit, which is
+    recall-neutral: candidate verification recomputes the exact cosine)."""
     return (
-        vectors.withColumn("_lsh_bits", F.expr(bits_sql))
-        .select("*", F.explode(F.expr(bands_sql)).alias("_bb"))
-        .withColumn("band", F.col("_bb.band"))
-        .withColumn("bucket", F.col("_bb.bucket"))
-        .drop("_lsh_bits", "_bb")
+        vectors.withColumn("_bks", _lsh_udf(planes_per_band, LSH_BANDS)(col))
+        .select("*", F.posexplode("_bks").alias("band", "bucket"))
+        .drop("_bks")
     )
 
 
@@ -991,25 +881,18 @@ def blocked_cosine_pairs(
     one 64-dim dot).
 
     ``n_vectors`` is REQUIRED (r7, ADVICE): the caller passes the corpus
-    count that pins the adaptive r. An eager ``vectors.count()`` fallback
-    here broke the lazy plan-build convention — building (not executing)
-    a caller's plan triggered a Spark job, surprising EXPLAIN-only paths
-    and skewing build timings. Callers memoize the count per (session,
-    sf_dir) — see ``_corpus_count``."""
+    count that pins the adaptive r, memoized per (session, sf_dir) — see
+    ``_corpus_count`` — instead of a ``vectors.count()`` job here.
+
+    Eager: returns the pair frame pinned (memo_pin). The LSH frame both
+    sides of the self-join read is persisted for the pin's one pass and
+    released after it, so only the survivor set stays materialized, not
+    the O(corpus) embeddings and bucket rows."""
     import math
 
-    n = n_vectors
-    r = max(8, math.ceil(math.log2(max(n, 2))) + 3)
-    # persisted, never unpersisted: session-scoped cache discipline (see
-    # dedup.py module docstring) — both sides of the blocked self-join
-    # read this frame. Above NUMPY_LSH_MIN_N vectors the plane dots
-    # switch to the Arrow/BLAS path (banded_lsh_buckets docstring): at
-    # 100k+ vectors the interpreted-lambda hashing is the dominant cost
-    # and the matmul amortizes its Python-worker round-trip.
+    r = max(8, math.ceil(math.log2(max(n_vectors, 2))) + 3)
     emb = banded_lsh_buckets(
-        vectors.withColumn("_norm", norm(F.col("embedding"))),
-        r,
-        use_numpy=n >= NUMPY_LSH_MIN_N,
+        vectors.withColumn("_norm", norm(F.col("embedding"))), r
     ).persist()
     a = emb.select(
         F.col("vec_id").alias("vec_a"),
@@ -1036,11 +919,13 @@ def blocked_cosine_pairs(
         / (F.col("norm_a") * F.col("norm_b")),
         4,
     )
-    return (
+    pinned = memo_pin(
         pairs.select("vec_a", "vec_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .dropDuplicates(["vec_a", "vec_b"])
     )
+    emb.unpersist()
+    return pinned
 
 
 def _corpus_count(
@@ -1104,9 +989,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors can't reach cosine 0.95 with a copy, so the filter is exact),
     which also makes the measurement strictly end-to-end: the copies are
     hashed, bucketed, and verified inside the deployed corpus run itself.
-    The pair frame is persisted (session cache discipline): its three
-    consumers (main split, recall row, sentinel) read the tiny survivor
-    set, not three re-joins. The corpus count that pins the adaptive r is
+    The pair frame is pinned in the session memo: its three consumers
+    (main split, recall row, sentinel) read the tiny survivor set, not three re-joins. The corpus count that pins the adaptive r is
     memoized per (session, sf_dir) — see _corpus_count."""
     _POFF = 10_000_000  # sentinel id offset, far above any real vec_id
     raw = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1149,15 +1033,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # r is pinned by the MAIN corpus size: the probe copies ride along at
-    # exactly the granularity deployed for this corpus. One persisted pair
-    # frame (and one inner LSH persist) per (session, sf_dir): repeated
-    # builds reuse instead of stacking cache entries (r9 ADVICE #3 class)
+    # exactly the granularity deployed for this corpus. One pinned pair
+    # frame per (session, sf_dir): repeated builds reuse it, and its inner
+    # LSH persist is released once it is pinned (blocked_cosine_pairs)
     all_pairs = session_memo(
         spark,
         ("emb_cosine_pairs", sf_dir),
-        lambda: memo_pin(
-            blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main)
-        ),
+        lambda: blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main),
         source=parquet_path(sf_dir, "embeddings"),
     )
     main = all_pairs.filter(

@@ -30,7 +30,9 @@ import tempfile
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+# the engine of THIS checkout, wherever it lives (as scripts/ab.py does)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("VERIFY_SF_DIR", "/root/testdata/sf0.01")
 

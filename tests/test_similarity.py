@@ -145,22 +145,85 @@ def test_banded_lsh_adapts_granularity_and_keeps_known_pairs(spark):
     assert all(3 not in p for p in got)
 
 
-def test_banded_lsh_numpy_path_bucket_parity(spark, sf_dir):
-    """The Arrow/BLAS matmul LSH path (deployed when the corpus exceeds
-    NUMPY_LSH_MIN_N) must assign exactly the same (vec_id, band, bucket)
-    as the SQL expression path — same hyperplanes, same sign convention,
-    same per-band bit packing. Exact-equality check over the full corpus
-    at a deployed-scale granularity (r=18)."""
+def test_banded_lsh_buckets_match_a_sequential_fold(spark, sf_dir):
+    """The BLAS-matmul LSH kernel must assign exactly the (vec_id, band,
+    bucket) rows a plain sequential left fold gives: the same hyperplanes,
+    sign convention (dot ≥ 0 → 1) and per-band packing (first plane most
+    significant), with each dot summed in array order in double, as a SQL
+    aggregate over zip_with would. Exact equality over the whole corpus at
+    a deployed-scale granularity (r=18)."""
     from omnidata_etl_spark.catalog import table
-    from omnidata_etl_spark.queries.similarity import banded_lsh_buckets
+    from omnidata_etl_spark.queries.similarity import (
+        LSH_BANDS,
+        banded_lsh_buckets,
+        hyperplane,
+    )
+
+    r = 18
+    planes = [hyperplane(p) for p in range(LSH_BANDS * r)]
+
+    def folded_buckets(vec):
+        bits = []
+        for plane in planes:
+            acc = 0.0
+            for x, y in zip(vec, plane):
+                acc += float(x) * y
+            bits.append(1 if acc >= 0 else 0)
+        out = []
+        for b in range(LSH_BANDS):
+            bucket = 0
+            for bit in bits[b * r : (b + 1) * r]:
+                bucket = bucket * 2 + bit
+            out.append(bucket)
+        return out
 
     emb = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    sql_b = banded_lsh_buckets(emb, 18).select("vec_id", "band", "bucket")
-    np_b = banded_lsh_buckets(emb, 18, use_numpy=True).select(
-        "vec_id", "band", "bucket"
+    want = sorted(
+        (row.vec_id, band, bucket)
+        for row in emb.collect()
+        for band, bucket in enumerate(folded_buckets(row.embedding))
     )
-    assert sql_b.exceptAll(np_b).count() == 0
-    assert np_b.exceptAll(sql_b).count() == 0
+    got = sorted(
+        tuple(row)
+        for row in banded_lsh_buckets(emb, r)
+        .select("vec_id", "band", "bucket")
+        .collect()
+    )
+    assert len(want) == LSH_BANDS * emb.count()
+    assert got == want
+
+
+def test_ann_lsh_topk_rebuild_reads_its_persisted_buckets(spark, sf_dir):
+    """ann_lsh_topk persists its bucketed corpus; a rebuild holds a fresh
+    bucket UDF over the same kernel and must still match that cache entry,
+    so the second build adds no entry and its plan reads the cached frame."""
+    fn = _SPECS["ann_lsh_topk"].fn
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    first = fn(spark, sf_dir).collect()
+    n_cached = cache.numCachedEntries()
+    again = fn(spark, sf_dir)
+    assert cache.numCachedEntries() == n_cached
+    plan = again._jdf.queryExecution().withCachedData().toString()
+    assert "InMemoryRelation" in plan
+    assert again.collect() == first
+
+
+def test_dedup_embedding_cosine_leaves_no_sql_cache_entry(spark, sf_dir):
+    """Once the pair frame is pinned, nothing reads blocked_cosine_pairs'
+    LSH frame again (it holds every embedding), so a first build leaves the
+    SQL cache empty. The cache is cleared first: an entry an earlier build
+    left behind would absorb this build's persist and hide a new one."""
+    fn = _SPECS["dedup_embedding_cosine"].fn
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    saved = getattr(spark, "_omnidata_memo", None)
+    spark._omnidata_memo = {}  # an empty memo: the pairs are built, not hit
+    try:
+        spark.catalog.clearCache()
+        rows = fn(spark, sf_dir).collect()
+        assert cache.numCachedEntries() == 0
+    finally:
+        spark._omnidata_memo = saved
+    assert any(r["vec_a"] == -1 for r in rows)
 
 
 def test_pq_codebooks_recover_clusters_and_rank_planted_duplicate(spark):
@@ -439,3 +502,82 @@ def test_power_iteration_batch_invariant(spark, sf_dir):
     assert tiny.eigenvalue == pytest.approx(full.eigenvalue, rel=1e-9)
     for name in ("converge_cos", "residual_ratio", "planted_recovery_cos"):
         assert tiny[name] == pytest.approx(full[name], rel=0, abs=1e-9), name
+
+
+def test_quantizer_training_keeps_what_a_tiny_sample_has():
+    """The Lloyd kernel behind both quantizers keeps min(k, n) centroids: on
+    0, 1 and 5 training rows the IVF centroids and PQ codebooks come back
+    with n rows per quantizer (each distinct row its own cell), and encoding
+    and ADC work on them. No Spark: the sample is passed in."""
+    import numpy as np
+
+    from omnidata_etl_spark.queries.similarity import (
+        IVF_CLUSTERS,
+        PQ_SUBSPACES,
+        _adc_table,
+        _pq_encode,
+        _probe,
+        ivf_centroids,
+        pq_codebooks,
+    )
+
+    rng = np.random.default_rng(5)
+    for n in (0, 1, 5):
+        x = rng.normal(size=(n, 64))
+        cents, _ = ivf_centroids(None, sample=(x, {}))
+        books, _ = pq_codebooks(None, sample=(x, {}))
+        assert cents.shape == (min(n, IVF_CLUSTERS), 64)
+        assert books.shape == (PQ_SUBSPACES, n, 64 // PQ_SUBSPACES)
+        np.testing.assert_array_equal(cents, x)
+        if n:
+            codes = _pq_encode(x, books)
+            assert codes.tolist() == [[i] * PQ_SUBSPACES for i in range(n)]
+            assert _adc_table(x[0], books).shape == (PQ_SUBSPACES, n)
+            assert _probe(cents, x[0])[0] == 0
+
+
+def _write_embeddings(tmp_path, sf_dir, ids):
+    """An sf directory holding only embeddings.parquet: the test corpus's
+    rows with these vec_ids, written with pyarrow."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    t = t.filter(pc.is_in(t["vec_id"], pa.array(ids, pa.int64())))
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+    return str(tmp_path)
+
+
+def test_ann_builders_on_a_five_row_corpus(spark, sf_dir, tmp_path):
+    """Five vectors are too few to train 16 cells or 16 codewords: the
+    builders train on what there is, probe IVF_NPROBE of the five cells,
+    and return every reachable neighbour with its exact-search flag set."""
+    from omnidata_etl_spark.queries.similarity import IVF_NPROBE
+
+    sf = _write_embeddings(tmp_path, sf_dir, [0, 1, 2, 3, 4])
+    for name, flag, n_rows in (
+        ("ann_ivf_topk", "in_brute_topk", IVF_NPROBE - 1),
+        ("ann_pq_topk", "in_brute_topk", 4),
+        ("ann_ivf_pq_topk", "in_probed_exact_topk", IVF_NPROBE - 1),
+    ):
+        rows = _SPECS[name].fn(spark, sf).collect()
+        assert len(rows) == n_rows, name
+        assert {r.vec_id for r in rows} <= {1, 2, 3, 4}, name
+        assert all(r[flag] for r in rows), name
+
+
+def test_ann_builders_name_a_missing_query_vector(spark, sf_dir, tmp_path):
+    """A corpus without vec_id 0 (or with no rows at all) has no query
+    vector: the quantizer builders raise a ValueError naming it."""
+    import pytest
+
+    for rows, sub in (([1, 2, 3, 4, 5], "no_query"), ([], "empty")):
+        (tmp_path / sub).mkdir()
+        sf = _write_embeddings(tmp_path / sub, sf_dir, rows)
+        for name in (
+            "ann_ivf_topk", "ann_pq_topk", "ann_ivf_pq_topk",
+            "ann_ivf_served_index",
+        ):
+            with pytest.raises(ValueError, match="vec_id 0"):
+                _SPECS[name].fn(spark, sf)
