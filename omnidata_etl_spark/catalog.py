@@ -281,6 +281,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
+def table_memo(spark: SparkSession, sf_dir: str, name: str, key, build):
+    """``session_memo`` for a value derived from catalog table ``name``:
+    keyed by ``(key, sf_dir)``, rebuilt once the table's parquet changes."""
+    return session_memo(spark, (key, sf_dir), build, source=parquet_path(sf_dir, name))
+
+
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path, n_splits = _splittable_path(sf_dir, name)
     df = read_parquet(spark, path)

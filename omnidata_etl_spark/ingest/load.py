@@ -38,6 +38,7 @@ from omnidata_etl_spark.queries._util import (
     range_numbered,
     rank_offset,
 )
+from omnidata_etl_spark.session import release_cached_reads
 
 
 class TableExistsError(RuntimeError):
@@ -117,8 +118,8 @@ def add_surrogate_key(
         ).drop("_sk_pid", "_sk_rn")
     # two consumers below; ReusedExchange cannot dedupe a broadcast-side
     # subtree, so without the cache the offsets branch would re-run the
-    # range shuffle. load() unpersists after its sink write; other callers
-    # inherit the session-scoped cache lifetime.
+    # range shuffle. The consumer that materializes the rows releases it:
+    # load() after its sink write, memo_pin after its checkpoint.
     numbered = numbered.persist()
     offsets = numbered.groupBy("_sk_pid").agg(
         F.count(F.lit(1)).alias("cnt")
@@ -128,7 +129,6 @@ def add_surrogate_key(
         .withColumn("id", _guarded_id("_sk_rn + _sk_off", as_long))
         .drop("_sk_pid", "_sk_rn", "_sk_off")
     )
-    out._sk_cache = numbered  # handle for load()'s post-write unpersist
     return out
 
 
@@ -165,10 +165,8 @@ def load(
     staging = os.path.join(warehouse, f".{name}.staging-{uuid.uuid4().hex}")
     try:
         out.write.mode("overwrite").parquet(staging)  # executes the plan
-    finally:
-        cache = getattr(out, "_sk_cache", None)
-        if cache is not None:  # surrogate-key scratch frame: one-shot here
-            cache.unpersist()
+    finally:  # the surrogate key's scratch cache, never the caller's own
+        release_cached_reads(out, keep=df)
     if os.path.exists(target):
         if mode == "error":  # re-check: lost race
             shutil.rmtree(staging, ignore_errors=True)

@@ -17,11 +17,11 @@ near_minhash, cluster_canonical and cluster_sizes read; the planted-recall
 probes; the simhash frame; the n-gram pairs) is built once per session while
 documents.parquet is unchanged, through `session.session_memo` keyed per
 sf_dir, and memo_pin'd, so bench.py's between-pass clearCache() cannot evict
-it. The tiny intermediates a build persist()s (shingle sets) are never
-unpersisted: they live as long as the session, and a rewritten
-documents.parquet leaves the superseded ones behind, since the memo releases
-only the frame it holds. A long-lived serving deployment would swap this for
-explicit view lifecycle management.
+it. The one persisted intermediate that later builds read, the n=5 shingle
+sets of `_main_pairs_n5` and `dedup_incremental_delta`, is a memo value of
+its own; the pin releases every other frame its build persisted (banded
+signatures, probe sets, n=3 shingle sets), and a rewritten
+documents.parquet makes the memo unpersist the superseded shingle sets.
 """
 
 from __future__ import annotations
@@ -29,10 +29,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.catalog import table, table_memo
 from omnidata_etl_spark.queries._util import memo_pin
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import default_parallelism, session_memo
+from omnidata_etl_spark.session import default_parallelism
 
 # MinHash-LSH geometry: 32 hashes = 8 bands × 4 rows ⇒ candidate threshold
 # s where collision prob 1-(1-s^4)^8 ≈ 0.5 at s ≈ 0.56.
@@ -40,6 +40,7 @@ NUM_HASHES = 32
 BANDS = 8
 ROWS_PER_BAND = NUM_HASHES // BANDS
 JACCARD_THRESHOLD = 0.6
+_OFF = 10_000_000_000  # probe-copy id offset, far above any real doc_id
 
 
 def _token_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -69,6 +70,16 @@ def _shingle_sets(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     and ~5× corpus bytes of overlapping shingle strings.
     """
     return _shingle_sets_of(table(spark, sf_dir, "documents"), n)
+
+
+def _main_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The main corpus's n=5 shingle sets, persisted once per session while
+    documents.parquet is unchanged: `_main_pairs_n5` and
+    `dedup_incremental_delta` both read them, so the memo owns the entry."""
+    return table_memo(
+        spark, sf_dir, "documents", ("shingles", 5),
+        lambda: _shingle_sets(spark, sf_dir, n=5).persist(),
+    )
 
 
 def rolling_shingle_hashes(
@@ -252,7 +263,8 @@ def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
     never fires and BOTH sides would recompute the full minhash
     aggregation from the corpus scan (measured: candidates cost ≈ 2× the
     minhash agg). Materialized, the frame is BANDS rows of 3 longs per
-    document — ~1 MB per million docs, trivially cacheable at any scale."""
+    document — ~1 MB per million docs, trivially cacheable at any scale.
+    The caller's memo_pin releases it once the verified pairs are pinned."""
     banded = _banded(signatures).persist()
     left = banded.alias("a")
     right = banded.alias("b")
@@ -305,6 +317,14 @@ def exact_jaccard(pairs: DataFrame, token_sets: DataFrame) -> DataFrame:
 
 
 
+def _verified_pairs(token_sets: DataFrame) -> DataFrame:
+    """The LSH candidate pairs of ``token_sets`` whose exact Jaccard is at
+    least JACCARD_THRESHOLD."""
+    return exact_jaccard(
+        lsh_candidate_pairs(minhash_signatures(token_sets)), token_sets
+    ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+
+
 def _main_pairs_n5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pairs (n=5 shingles, jaccard ≥ threshold) over the
     MAIN corpus — the shared expensive subplan of dedup_near_minhash,
@@ -317,19 +337,9 @@ def _main_pairs_n5(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation)."""
 
     def build() -> DataFrame:
-        shingle_sets = _shingle_sets(spark, sf_dir, n=5).persist()
-        sigs = minhash_signatures(shingle_sets)
-        cands = lsh_candidate_pairs(sigs)
-        return memo_pin(
-            exact_jaccard(cands, shingle_sets).filter(
-                F.col("jaccard") >= JACCARD_THRESHOLD
-            )
-        )
+        return memo_pin(_verified_pairs(_main_shingle_sets(spark, sf_dir)))
 
-    return session_memo(
-        spark, ("main_pairs_n5", sf_dir), build,
-        source=parquet_path(sf_dir, "documents"),
-    )
+    return table_memo(spark, sf_dir, "documents", "main_pairs_n5", build)
 
 
 @query(
@@ -354,9 +364,10 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only rationale is retired: LSH only prunes, verification is exact
     set Jaccard, and the hash oracle re-proves recall 1.0 every run).
 
-    The shingle-hash sets are persist()ed: the plan consumes them three times
-    (minhash branch + both sides of the verification join) and Spark
-    recomputes common subplans per branch. Materialized they are ~1× corpus
+    The shingle-hash sets are persisted (`_main_shingle_sets`, a memo
+    value shared with dedup_incremental_delta): the plan consumes them
+    three times (minhash branch + both sides of the verification join) and
+    Spark recomputes common subplans per branch. Materialized they are ~1× corpus
     bytes of longs (MEMORY_AND_DISK — spills, never OOMs at cluster scale);
     recomputing means re-running the shingling transform three times over
     every document.
@@ -379,12 +390,11 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _probe_corpus(spark: SparkSession, sf_dir: str):
-    """(originals, originals ∪ perturbed copies, id offset) — the shared
+    """(originals, originals ∪ perturbed copies at id + _OFF) — the shared
     40-doc planted-pair probe corpus (copies drop the leading token). The
     tiny frame is stamped as already-wide so spread() inside shared paths
     doesn't insert a 32-way repartition whose per-stage task overhead
     dwarfs the probe's compute."""
-    _OFF = 10_000_000_000  # sentinel id offset, far above any real doc_id
     # Pushed-down range predicate, not orderBy().limit(20): the TakeOrdered
     # form heap-sorts the FULL corpus with document text in the heap (the
     # similarity._train_sample r9 finding — linear cost hiding in a
@@ -403,7 +413,7 @@ def _probe_corpus(spark: SparkSession, sf_dir: str):
         )
     )
     probe_corpus._omnidata_splits = default_parallelism()
-    return originals, probe_corpus, _OFF
+    return originals, probe_corpus
 
 
 def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
@@ -415,17 +425,13 @@ def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     leading token dropped, NOT on the full corpus: an LSH band collision
     for a pair depends only on that pair's own signatures, so planted-pair
     recall is IDENTICAL either way, and the mini-corpus keeps the main
-    pipeline's shingle-set plan byte-identical across the dedup family —
-    they share one cached intermediate in a warm session (planting into
+    pipeline's shingle sets shared across the dedup family (planting into
     the corpus forked the plan and cost ~2s/run at sf0.1)."""
     _assert_probe_nonempty(spark, sf_dir)
 
     def build() -> DataFrame:
-        originals, probe_corpus, _OFF = _probe_corpus(spark, sf_dir)
-        probe_sets = _shingle_sets_of(probe_corpus, n=n).persist()
-        probe_pairs = exact_jaccard(
-            lsh_candidate_pairs(minhash_signatures(probe_sets)), probe_sets
-        ).filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        originals, probe_corpus = _probe_corpus(spark, sf_dir)
+        probe_pairs = _verified_pairs(_shingle_sets_of(probe_corpus, n=n).persist())
         return memo_pin(
             probe_pairs.filter(F.col("doc_b") == F.col("doc_a") + _OFF)
             .agg(F.count(F.lit(1)).alias("n_found"))
@@ -441,13 +447,9 @@ def _planted_recall(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
             # showed up as +0.2s/run on the ngram bench entry).
         )
 
-    # one probe frame (and one probe_sets persist) per (session, sf_dir,
-    # n): repeated builds reuse it instead of stacking cache entries
-    # (r9 ADVICE #3)
-    return session_memo(
-        spark, ("planted_recall", sf_dir, n), build,
-        source=parquet_path(sf_dir, "documents"),
-    )
+    # one pinned probe frame per (session, sf_dir, n): repeated builds
+    # reuse it, and the pin releases probe_sets
+    return table_memo(spark, sf_dir, "documents", ("planted_recall", n), build)
 
 
 def _assert_probe_nonempty(spark: SparkSession, sf_dir: str) -> None:
@@ -502,25 +504,21 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (decomposed r9: corpus frame 0.4-0.5 s vs 1.8-3.3 s full query in
     # the same session). The fork-the-shared-plan concern recorded in
     # _planted_recall's docstring does not apply here: no other query
-    # consumes a cached _simhash_frame(docs) plan. The unioned frame is
-    # persisted — 16 bytes/row — for its three consumers (output, probe
-    # a-side, probe b-side).
+    # consumes a _simhash_frame(docs) plan. The unioned frame is pinned —
+    # 16 bytes/row — for its three consumers (output, probe a-side, probe
+    # b-side).
     _assert_probe_nonempty(spark, sf_dir)
-    _OFF = 10_000_000_000  # sentinel id offset, far above any real doc_id
     copies = docs.select(
         (F.col("doc_id") + _OFF).alias("doc_id"),
         F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
     ).filter(F.col("doc_id") < _OFF + 20)
-    # one persisted corpus+probe fingerprint frame per (session, sf_dir):
-    # repeated builds previously stacked a fresh O(corpus) cache entry
-    # each (r9 ADVICE #3) — the memo reuses it until the parquet changes
-    frame = session_memo(
-        spark,
-        ("simhash_frame", sf_dir),
+    # one pinned corpus+probe fingerprint frame per (session, sf_dir): the
+    # memo reuses it until the parquet changes
+    frame = table_memo(
+        spark, sf_dir, "documents", "simhash_frame",
         lambda: memo_pin(
             _simhash_frame(docs.select("doc_id", "text").unionByName(copies))
         ),
-        source=parquet_path(sf_dir, "documents"),
     )
     fps = frame.filter(F.col("doc_id") < _OFF)
     a = frame.filter(F.col("doc_id") < 20).select(
@@ -1009,7 +1007,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Corpus-pair output is value-identical: copy-involving candidates are
     filtered after the (tiny) extra verify work, and corpus docs' band
     hashes are unchanged by the 20 riders."""
-    _OFF = 10_000_000_000  # sentinel id offset, far above any real doc_id
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     copies = docs.filter(F.col("doc_id") < 20).select(
         (F.col("doc_id") + _OFF).alias("doc_id"),
@@ -1017,24 +1014,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def build() -> DataFrame:
-        shingle_sets = _shingle_sets_of(
-            docs.unionByName(copies), n=3
-        ).persist()
-        sigs = minhash_signatures(shingle_sets)
-        cands = lsh_candidate_pairs(sigs)
-        return memo_pin(
-            exact_jaccard(cands, shingle_sets).filter(
-                F.col("jaccard") >= JACCARD_THRESHOLD
-            )
-        )
+        sets = _shingle_sets_of(docs.unionByName(copies), n=3).persist()
+        return memo_pin(_verified_pairs(sets))
 
-    # one persisted (shingle-set, verified-pair) pipeline per (session,
-    # sf_dir): repeated builds reuse instead of stacking entries (r9
-    # ADVICE #3 — the dedup_simhash leak, same class here)
-    all_pairs = session_memo(
-        spark, ("ngram_pairs", sf_dir), build,
-        source=parquet_path(sf_dir, "documents"),
-    )
+    # one pinned pair frame per (session, sf_dir): repeated builds reuse
+    # it, and the pin releases the n=3 shingle sets
+    all_pairs = table_memo(spark, sf_dir, "documents", "ngram_pairs", build)
     main = all_pairs.filter(
         (F.col("doc_a") < _OFF) & (F.col("doc_b") < _OFF)
     )
@@ -1111,7 +1096,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``planted_recall`` — the fraction of 20 planted (original,
     leading-token-dropped copy) pairs the SAME shingle(5)→minhash→band→
     verify stack recovers on the shared 40-doc probe corpus
-    (_planted_recall, persisted once per session) — so the rows-only
+    (_planted_recall, pinned once per session) — so the rows-only
     artifact proves the screening stack live in its own output, the
     near_minhash pattern."""
     docs = table(spark, sf_dir, "documents")
@@ -1132,7 +1117,7 @@ def dedup_incremental_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degenerate hot band would also concentrate into one join partition
     # in the old form, so the skew class is unchanged.
     new_ids = docs.where(is_new).select("doc_id", F.lit(True).alias("_new"))
-    shingle_sets = _shingle_sets(spark, sf_dir, n=5).persist()
+    shingle_sets = _main_shingle_sets(spark, sf_dir)
     sigs = minhash_signatures(shingle_sets)
     banded = _banded(sigs).join(F.broadcast(new_ids), "doc_id", "left")
     bucket = banded.groupBy("band_id", "band_hash").agg(

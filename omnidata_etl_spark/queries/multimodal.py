@@ -25,9 +25,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.catalog import table, table_memo
 from omnidata_etl_spark.queries._util import map_rows, memo_pin, spread
-from omnidata_etl_spark.session import ensure_tuned, session_memo
+from omnidata_etl_spark.session import ensure_tuned
 
 # Real codecs for the container-expressible formats: PPM/BMP/PNG/GIF/JPEG
 # images decode to numpy with zero dependencies (PNG via stdlib zlib + a
@@ -891,13 +891,11 @@ def multimodal_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache entries, and all four summaries below are subtrees of ONE
     # action over the pinned frame (a fresh count-per-summary paid ~0.25 s
     # of local job floor each — 1.49 s → this form)
-    lm = session_memo(
-        spark,
-        ("audio_lm", sf_dir),
+    lm = table_memo(
+        spark, sf_dir, "documents", "audio_lm",
         lambda: memo_pin(
             map_rows(docs, row, "doc_id long, variant string, landmark long")
         ),
-        source=parquet_path(sf_dir, "documents"),
     )
 
     orig = lm.where(F.col("variant") == "orig").select("doc_id", "landmark")

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.catalog import table, table_memo
 from omnidata_etl_spark.queries._util import (
     dec2,
     local_df,
@@ -25,7 +25,6 @@ from omnidata_etl_spark.queries._util import (
 )
 from omnidata_etl_spark.queries.text import _STOPWORDS_SQL
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import session_memo
 
 
 @query(
@@ -761,14 +760,12 @@ def etl_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     total and the oracle differential is exact (md5 hex parity between
     Spark and DuckDB is itself part of the check).
 
-    On the large path add_surrogate_key persists its ranged frame for the
-    two-consumer build; repeated builds in one long-lived session would
-    accrete one persisted O(corpus) frame each (the r9 ADVICE #3 leak
-    class), so the whole result rides `session.session_memo`: one shared
-    frame per sf_dir while documents.parquet is unchanged. The frame is
-    memo_pin'd, so repeat builds serve the numbered rows instead of
-    re-sorting the corpus (same-session A/B at sf0.1, 4 cores, 11 reps:
-    rebuild plus toPandas 0.045 s median pinned vs 0.084 s lazy, 11/11)."""
+    The result rides `session.session_memo`, one frame per sf_dir while
+    documents.parquet is unchanged, and is memo_pin'd, so repeat builds
+    serve the numbered rows instead of re-sorting the corpus (same-session
+    A/B at sf0.1, 4 cores, 11 reps: rebuild plus toPandas 0.045 s median
+    pinned vs 0.084 s lazy, 11/11). The pin releases the ranged frame
+    add_surrogate_key persists on the large path."""
     from omnidata_etl_spark.ingest.load import add_surrogate_key
 
     def build():
@@ -778,10 +775,7 @@ def etl_global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
             as_long=True,
         ).withColumnRenamed("id", "pos"))
 
-    return session_memo(
-        spark, ("global_shuffle", sf_dir), build,
-        source=parquet_path(sf_dir, "documents"),
-    )
+    return table_memo(spark, sf_dir, "documents", "global_shuffle", build)
 
 
 @query(

@@ -27,10 +27,10 @@ import numbers
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.catalog import table, table_memo
 from omnidata_etl_spark.queries._util import memo_pin, spread
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import default_parallelism, session_memo
+from omnidata_etl_spark.session import default_parallelism
 
 EMBED_DIM = 64
 LSH_PLANES = 8  # 2^8 = 256 buckets
@@ -370,13 +370,15 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py asserts the same recall ≥ 0.5 bound the
     hyperplane family guarantees at these dimensions).
     """
-    # persisted, never unpersisted: session-scoped cache discipline (see
-    # dedup.py module docstring) — the bucketed corpus is consumed by both
-    # the query-row filter and the candidate join, and a rebuild's frame
-    # matches this one, so later builds read the cache.
-    emb = spread(table(spark, sf_dir, "embeddings")).withColumn(
-        "bucket", _lsh_udf(LSH_PLANES, 1)("embedding")[0]
-    ).persist()
+    # the bucketed corpus feeds both the query-row filter and the
+    # candidate join, and later builds read it: one persisted frame per
+    # (session, sf_dir), owned by the memo
+    emb = table_memo(
+        spark, sf_dir, "embeddings", "lsh_buckets",
+        lambda: spread(table(spark, sf_dir, "embeddings")).withColumn(
+            "bucket", _lsh_udf(LSH_PLANES, 1)("embedding")[0]
+        ).persist(),
+    )
     q = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"),
         norm(F.col("embedding")).alias("qn"),
@@ -885,8 +887,8 @@ def blocked_cosine_pairs(
     ``_corpus_count`` — instead of a ``vectors.count()`` job here.
 
     Eager: returns the pair frame pinned (memo_pin). The LSH frame both
-    sides of the self-join read is persisted for the pin's one pass and
-    released after it, so only the survivor set stays materialized, not
+    sides of the self-join read is persisted for the pin's one pass, and
+    the pin releases it, so only the survivor set stays materialized, not
     the O(corpus) embeddings and bucket rows."""
     import math
 
@@ -919,13 +921,11 @@ def blocked_cosine_pairs(
         / (F.col("norm_a") * F.col("norm_b")),
         4,
     )
-    pinned = memo_pin(
+    return memo_pin(
         pairs.select("vec_a", "vec_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
         .dropDuplicates(["vec_a", "vec_b"])
     )
-    emb.unpersist()
-    return pinned
 
 
 def _corpus_count(
@@ -952,10 +952,7 @@ def _corpus_count(
             df = df.filter(F.col(id_col) < id_below)
         return df.count()
 
-    return session_memo(
-        spark, ("count", sf_dir, name, id_below), build,
-        source=parquet_path(sf_dir, name),
-    )
+    return table_memo(spark, sf_dir, name, ("count", name, id_below), build)
 
 
 @query("dedup_embedding_cosine", tags=("similarity", "dedup"))
@@ -1034,13 +1031,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r is pinned by the MAIN corpus size: the probe copies ride along at
     # exactly the granularity deployed for this corpus. One pinned pair
-    # frame per (session, sf_dir): repeated builds reuse it, and its inner
-    # LSH persist is released once it is pinned (blocked_cosine_pairs)
-    all_pairs = session_memo(
-        spark,
-        ("emb_cosine_pairs", sf_dir),
+    # frame per (session, sf_dir): repeated builds reuse it
+    all_pairs = table_memo(
+        spark, sf_dir, "embeddings", "emb_cosine_pairs",
         lambda: blocked_cosine_pairs(corpus, 0.95, n_vectors=n_main),
-        source=parquet_path(sf_dir, "embeddings"),
     )
     main = all_pairs.filter(
         (F.col("vec_a") < _POFF) & (F.col("vec_b") < _POFF)
@@ -1322,10 +1316,7 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return df, df.count()
 
-    data, n_vec = session_memo(
-        spark, ("power_iter_aug", sf_dir), build,
-        source=parquet_path(sf_dir, "embeddings"),
-    )
+    data, n_vec = table_memo(spark, sf_dir, "embeddings", "power_iter_aug", build)
 
     def gemv_pass(v: "np.ndarray") -> "np.ndarray":
         def op(batches):

@@ -11,10 +11,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from omnidata_etl_spark.catalog import parquet_path, table
+from omnidata_etl_spark.catalog import table, table_memo
 from omnidata_etl_spark.queries._util import memo_pin, spread
 from omnidata_etl_spark.registry import query
-from omnidata_etl_spark.session import session_memo
 
 FINGERPRINT_SHINGLE = 5
 
@@ -25,8 +24,8 @@ FINGERPRINT_SHINGLE = 5
 # cache materialization + an extra agg hop inside its own measured time,
 # regressing all three consumers (bm25 0.16→0.36s). Each query now builds
 # the narrowest private frame its own plan needs (bm25 skips the (doc,tok)
-# hop entirely), and cross-query sharing is left to CacheManager plan-
-# canonicalization where plans genuinely coincide.
+# hop entirely); a frame that later builds read is held by the session
+# memo (session.session_memo).
 
 # Tiny embedded stopword list for quality scoring / language heuristics.
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -716,12 +715,14 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # row; without it the broadcast consumer re-runs the whole
     # tokenize→explode→agg pipeline (ReusedExchange never covers broadcast
     # consumers — the r3 finding). One row per doc (dl + 3 tfs), so the
-    # materialization scales with |docs|, not |tokens|. Session-scoped
-    # cache discipline as in dedup.py: identical plans share the entry,
-    # spark.catalog.clearCache() reclaims.
-    per_doc = tok.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("dl"), *tf_cols
-    ).persist()
+    # materialization scales with |docs|, not |tokens|. Later builds read
+    # it too, so the memo owns it.
+    per_doc = table_memo(
+        spark, sf_dir, "documents", "bm25_per_doc",
+        lambda: tok.groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("dl"), *tf_cols
+        ).persist(),
+    )
     stat_cols = [F.count(F.lit(1)).alias("n_docs"),
                  F.avg(F.col("dl").cast("double")).alias("avgdl")]
     stat_cols += [
@@ -801,7 +802,6 @@ def text_perplexity_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchanges (the r3 ReusedExchange finding), so it is persisted or the
     # tokenize/explode prefix would run twice. `source` rides along (it is
     # functionally dependent on doc_id), saving the documents re-join.
-    # Session-scoped cache discipline as in dedup.py.
     tok_counts = _doc_token_counts(spark, sf_dir)
     # total as an unpartitioned window over the (tiny) vocab instead of a
     # separate agg + crossJoin(broadcast): one consumer of the cache on
@@ -864,10 +864,7 @@ def _doc_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return memo_pin(tc)
 
-    return session_memo(
-        spark, ("doc_tok_counts", sf_dir), build,
-        source=parquet_path(sf_dir, "documents"),
-    )
+    return table_memo(spark, sf_dir, "documents", "doc_tok_counts", build)
 
 
 @query(
@@ -910,12 +907,12 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster naming in a curation pipeline).
 
     One tokenize pass collapsed to (doc, tok) counts (map-side partial
-    agg), persisted for its two consumers (document frequencies and the
-    scoring join — broadcast consumers get no ReusedExchange; session
-    cache discipline per dedup.py). The corpus doc count is a LAZY
-    one-row aggregate crossJoined onto the tiny per-token df table
-    (r7 — replaces an eager docs.count() at build time, the only
-    declared query that ran a job before its returned DataFrame did;
+    agg), pinned for its two consumers (document frequencies and the
+    scoring join — broadcast consumers get no ReusedExchange; see
+    _doc_token_counts). The corpus doc count is a LAZY one-row aggregate
+    crossJoined onto the tiny per-token df table (r7 — replaces an eager
+    docs.count() at build time, the only declared query that ran a job
+    before its returned DataFrame did;
     the count scans only the pruned doc_id column and rides the df_t
     broadcast, so execution cost is unchanged and a stale count can no
     longer outlive the session). Determinism: scores are rounded to 9dp

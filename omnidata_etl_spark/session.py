@@ -144,6 +144,11 @@ def session_memo(spark: SparkSession, key: tuple, build, source: str | None = No
     alias a recycled address to a dead session's values.) Without a
     ``source`` the value lives as long as the session.
 
+    The memo is the one owner of every SQL-cache entry that outlives a
+    build: a frame a later build reads is persisted inside ``build`` and
+    held here, and everything else a build persists is released within
+    the build (``release_cached_reads``, which ``memo_pin`` calls).
+
     The identity is taken before ``build`` runs, so a write racing the
     build leaves an entry that is already stale and the next call
     rebuilds. On a changed identity a superseded DataFrame that was in the
@@ -151,10 +156,12 @@ def session_memo(spark: SparkSession, key: tuple, build, source: str | None = No
     pick up the old cached rows through a same-plan cache match.
 
     ``level`` is the frame's SQL-cache storage level when stored, else
-    None. A hit re-persists and counts a frame only when it was cached when
-    stored and has since been evicted (a long-lived session's
-    ``spark.catalog.clearCache()``): a frame the build left lazy stays lazy,
-    and a ``memo_pin``'d checkpoint lives outside the SQL cache."""
+    None. A hit re-persists a frame only when it was cached when stored
+    and has since been evicted (a long-lived session's
+    ``spark.catalog.clearCache()``); the next action refills the cache,
+    as the build's own ``persist()`` did. A frame the build left lazy
+    stays lazy, and a ``memo_pin``'d checkpoint lives outside the SQL
+    cache."""
     memo = getattr(spark, "_omnidata_memo", None)
     if memo is None:
         memo = spark._omnidata_memo = {}
@@ -165,13 +172,58 @@ def session_memo(spark: SparkSession, key: tuple, build, source: str | None = No
         if old_ident == ident:
             if level is not None and _sql_cache_level(value) is None:
                 value.persist(level)
-                value.count()
             return value
         if level is not None:
             value.unpersist()
     value = build()
     memo[key] = (ident, value, _sql_cache_level(value))
     return value
+
+
+def _cache_entries(df: DataFrame) -> dict:
+    """The SQL-cache entries ``df``'s plan reads, in read order, keyed by
+    the identity of the entry's cache builder (every plan that reads an
+    entry holds a copy of its InMemoryRelation around that one builder):
+    the InMemoryRelation leaves of the cache-substituted plan and, in
+    turn, those of each entry's own plan."""
+    spark = df.sparkSession
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    found, plans = {}, [df._jdf.queryExecution().withCachedData()]
+    while plans:
+        leaves = plans.pop().collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.length())):
+            if leaf.nodeName() != "InMemoryRelation":
+                continue
+            key = spark._jvm.System.identityHashCode(leaf.cacheBuilder())
+            if key not in found:
+                found[key] = leaf
+                kids = leaf.cacheBuilder().logicalPlan().children()
+                plans += [
+                    cm.useCachedData(kids.apply(i)) for i in range(kids.length())
+                ]
+    return found
+
+
+def release_cached_reads(df: DataFrame, keep: DataFrame | None = None) -> None:
+    """Uncache the SQL-cache entries ``df`` read, for a caller that has
+    materialized ``df`` and will not run its plan again: every entry
+    ``_cache_entries`` finds, except ``df``'s own, one a ``session_memo``
+    value resolves to, and one ``keep`` reads (a caller's input, whose
+    cache is not the engine's to drop). Each entry goes alone
+    (``uncacheQuery`` without cascade), so its siblings stay cached."""
+    spark = df.sparkSession
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    skip = set() if keep is None else set(_cache_entries(keep))
+    memo = getattr(spark, "_omnidata_memo", {}).values()
+    for frame in [df] + [value for _, value, level in memo if level is not None]:
+        entry = cm.lookupCachedData(frame._jdf)
+        if entry.isDefined():
+            builder = entry.get().cachedRepresentation().cacheBuilder()
+            skip.add(spark._jvm.System.identityHashCode(builder))
+    for key, relation in _cache_entries(df).items():
+        if key not in skip:
+            plan = relation.cacheBuilder().logicalPlan()
+            cm.uncacheQuery(spark._jsparkSession, plan, False, False)
 
 
 def ensure_tuned(spark: SparkSession) -> SparkSession:

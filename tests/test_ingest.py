@@ -25,6 +25,7 @@ from omnidata_etl_spark.ingest.fixtures import (
     PEOPLE_HEADERS,
     fixture_path,
 )
+from omnidata_etl_spark.session import release_cached_reads
 
 
 def test_sniff_precedence():
@@ -132,12 +133,15 @@ def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
     fixture through the two-phase range path; both must give the same
     (row, id) set with dense ids 1..N and keep the INT_MAX guard, for the
     default order (all columns, which is also file order here) and for a
-    `full_name` order that differs from file order."""
+    `full_name` order that differs from file order. Once the rows are
+    read, `release_cached_reads` leaves the SQL cache as it found it."""
     import importlib
 
     load_mod = importlib.import_module("omnidata_etl_spark.ingest.load")
     util = importlib.import_module("omnidata_etl_spark.queries._util")
     df = read_any(spark, fixture_path("people_noid.csv"))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
 
     def keyed(order_by):
         out = load_mod.add_surrogate_key(df, order_by)
@@ -148,9 +152,8 @@ def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
                 for r in out.collect()
             }
         finally:
-            cache = getattr(out, "_sk_cache", None)
-            if cache is not None:
-                cache.unpersist()
+            release_cached_reads(out)
+        assert cache.numCachedEntries() == n_cached
         return plan, rows
 
     orders = (None, ["full_name"])
@@ -173,9 +176,11 @@ def test_surrogate_key_small_and_large_paths_agree(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("force_range", [False, True], ids=["one_task", "range"])
-def test_surrogate_key_degenerate_inputs(spark, monkeypatch, force_range):
+def test_surrogate_key_degenerate_inputs(spark, monkeypatch, tmp_path, force_range):
     """On both paths of the size rule, a 0-row frame numbers to 0 rows and
-    keeps its declared schema plus `id`, and a 1-row frame gets id 1."""
+    keeps its declared schema plus `id`, and a 1-row frame gets id 1. Only
+    the range path plans a range exchange, and neither `load()` nor
+    `release_cached_reads` after a direct call leaves a SQL-cache entry."""
     from omnidata_etl_spark.ingest.load import add_surrogate_key
     from omnidata_etl_spark.queries import _util
 
@@ -190,18 +195,24 @@ def test_surrogate_key_degenerate_inputs(spark, monkeypatch, force_range):
     assert _util.range_numbered(empty, ["name"]).collect() == []
     assert [r["_sk_rn"] for r in _util.range_numbered(one, ["name"]).collect()] == [1]
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
     for df, want in ((empty, []), (one, [("x", 7, 1)])):
         out = add_surrogate_key(df)
+        plan = out._jdf.queryExecution().executedPlan().toString().lower()
         try:
             assert out.schema.simpleString() == (
                 "struct<name:string,n:int,id:int>"
             )
             assert [tuple(r) for r in out.collect()] == want
         finally:
-            cache = getattr(out, "_sk_cache", None)
-            if cache is not None:
-                cache.unpersist()
-        assert hasattr(out, "_sk_cache") == force_range
+            release_cached_reads(out)
+        assert ("rangepartitioning" in plan) == force_range
+        assert cache.numCachedEntries() == n_cached
+
+    target = load(one, "one", warehouse=str(tmp_path))
+    assert cache.numCachedEntries() == n_cached
+    assert [tuple(r) for r in spark.read.parquet(target).collect()] == [("x", 7, 1)]
 
 
 def test_errorifexists(spark):

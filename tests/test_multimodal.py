@@ -327,7 +327,7 @@ def test_multimodal_op_plans_one_arrow_map(spark, sf_dir, monkeypatch, name):
 
     monkeypatch.setattr(multimodal, "map_rows", recording)
     # build the audio landmark frame afresh instead of taking the memo's
-    monkeypatch.setattr(multimodal, "session_memo", lambda s, k, build, source=None: build())
+    monkeypatch.setattr(multimodal, "table_memo", lambda s, sf, t, k, build: build())
     df = all_specs()[name].fn(spark, sf_dir)
     assert len(built) == 1
     assert _python_maps(built[0]) == (1, 0)

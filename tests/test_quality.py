@@ -290,17 +290,22 @@ def test_etl_global_shuffle_plan_scale_shape(spark, sf_dir, two_phase_key):
     single-partition global-sort anti-pattern). The test corpus is under
     the bound, so the two_phase_key fixture forces the large path;
     add_surrogate_key is called on the op's own sort input because
-    etl_global_shuffle's result is memoized per session."""
+    etl_global_shuffle's result is memoized per session. Pinned as the op
+    pins it, the frame leaves no SQL-cache entry behind."""
     from omnidata_etl_spark.ingest.load import add_surrogate_key
+    from omnidata_etl_spark.queries._util import memo_pin
     from omnidata_etl_spark.queries.quality import global_shuffle_keys
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
     df = add_surrogate_key(
         global_shuffle_keys(spark, sf_dir),
         order_by=["skey", "doc_id"],
         as_long=True,
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    df._sk_cache.unpersist()
+    memo_pin(df)
+    assert cache.numCachedEntries() == n_cached
     assert "rangepartitioning" in plan.lower()
     # the Window's child aggregates to one row per partition id
     assert "_sk_pid" in plan
@@ -454,11 +459,12 @@ def test_gini_bounds_and_rank_path(spark, sf_dir, two_phase_key):
     collision or gap from the two-phase offsets would break it). The
     grouped frame is under ONE_TASK_MAX_BYTES, so the two_phase_key fixture
     forces add_surrogate_key's two-phase path on this multi-partition
-    aggregate input."""
+    aggregate input. Pinned, the ranked frame leaves no SQL-cache entry
+    behind."""
     from pyspark.sql import functions as F
 
     from omnidata_etl_spark.ingest.load import add_surrogate_key
-    from omnidata_etl_spark.queries._util import dec2
+    from omnidata_etl_spark.queries._util import dec2, memo_pin
 
     r = all_specs()["agg_gini_concentration"].fn(spark, sf_dir).collect()[0]
     assert 0.0 < r["gini"] < 1.0
@@ -468,14 +474,17 @@ def test_gini_bounds_and_rank_path(spark, sf_dir, two_phase_key):
     rev = o.groupBy("o_custkey").agg(
         (F.sum(dec2("o_totalprice")) * 100).cast("long").alias("xc")
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
     ranked = add_surrogate_key(rev, order_by=["xc", "o_custkey"], as_long=True)
-    try:
-        assert "_sk_pid" in ranked._jdf.queryExecution().optimizedPlan().toString()
-        agg = ranked.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
-        ).collect()[0]
-    finally:
-        ranked._sk_cache.unpersist()
+    qe = ranked._jdf.queryExecution()
+    assert "_sk_pid" in qe.optimizedPlan().toString()
+    assert "rangepartitioning" in qe.executedPlan().toString().lower()
+    pinned = memo_pin(ranked)
+    assert cache.numCachedEntries() == n_cached
+    agg = pinned.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("id").alias("s")
+    ).collect()[0]
     assert agg["s"] == agg["n"] * (agg["n"] + 1) // 2
 
 

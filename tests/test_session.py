@@ -1,6 +1,7 @@
 """The engine's Python worker daemon (omnidata_etl_spark.pydaemon), the
 worker path conf that get_session sets for it, and the per-session memo
-(session.session_memo)."""
+(session.session_memo), which owns every SQL-cache entry that outlives a
+build."""
 
 from __future__ import annotations
 
@@ -15,10 +16,11 @@ import zipimport
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from omnidata_etl_spark import pydaemon
-from omnidata_etl_spark.session import session_memo
+from omnidata_etl_spark.session import release_cached_reads, session_memo
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -233,3 +235,81 @@ def test_second_global_shuffle_build_runs_no_job(spark, sf_dir, monkeypatch):
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store is async
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_release_cached_reads_spares_memo_values_and_the_callers_input(
+    spark, monkeypatch
+):
+    """The helper uncaches what a frame read, nested entries included
+    (``base`` is read only through ``outer``'s cached plan), and spares a
+    memo value, the ``keep`` frame's entry and an unrelated entry."""
+    monkeypatch.setattr(spark, "_omnidata_memo", {}, raising=False)
+    base = spark.range(50).withColumn("x", F.col("id") * 2).persist()
+    outer = (
+        base.groupBy((F.col("id") % 3).alias("k")).agg(F.sum("x").alias("s"))
+    ).persist()
+    owned = session_memo(spark, ("test-owned",), lambda: spark.range(7).persist())
+    mine = spark.range(11).withColumn("y", F.lit(1)).persist()
+    sibling = spark.range(13).persist()
+    frame = outer.crossJoin(owned).crossJoin(mine)
+    assert frame.count() == 3 * 7 * 11
+    try:
+        release_cached_reads(frame, keep=mine)
+        assert not _cached(outer) and not _cached(base)
+        assert _cached(owned) and _cached(mine) and _cached(sibling)
+    finally:
+        for df in (base, outer, owned, mine, sibling):
+            df.unpersist()
+
+
+def _memo_cache_entries(spark) -> set:
+    """Identities of the SQL-cache entries the memo's DataFrame values
+    resolve to."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    held = set()
+    for _, value, _ in spark._omnidata_memo.values():
+        if isinstance(value, DataFrame):
+            entry = cm.lookupCachedData(value._jdf)
+            if entry.isDefined():
+                builder = entry.get().cachedRepresentation().cacheBuilder()
+                held.add(spark._jvm.System.identityHashCode(builder))
+    return held
+
+
+def test_registry_sweep_leaves_only_memo_owned_cache_entries(
+    spark, sf_dir, monkeypatch, two_phase_key
+):
+    """Every SQL-cache entry that outlives a build is a memo value: after
+    building every benched registry query in one session, from a cleared
+    cache and an empty memo, the cache holds exactly the entries behind
+    the memo's values (the n=5 shingle sets, q11's per-part values, q15's
+    revenue0, bm25's per-doc frame and ann_lsh_topk's buckets). The
+    two_phase_key fixture sends the surrogate key down its range path,
+    whose persist the pin must release. The count is checked after every
+    build, so a failure names the builder. Reverse registry order builds
+    dedup_incremental_delta before the n=5 pair family, so a reader that
+    persisted the shared shingle sets itself, not through the memo, would
+    leave an entry that no memo value holds."""
+    import bench
+    from omnidata_etl_spark.registry import all_specs
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    monkeypatch.setattr(spark, "_omnidata_memo", {}, raising=False)
+    spark.catalog.clearCache()
+    stray, checked, unheld = [], 0, 0
+    try:
+        for name, spec in reversed(list(all_specs().items())):
+            if name in bench.SKIP:
+                continue
+            spec.fn(spark, sf_dir)
+            n = cm.numCachedEntries()
+            if n != checked:  # the memo walk only when the count moved
+                now = n - len(_memo_cache_entries(spark))
+                if now > unheld:
+                    stray.append(f"{name}: +{now - unheld} entries")
+                checked, unheld = n, now
+        n, held = cm.numCachedEntries(), _memo_cache_entries(spark)
+    finally:
+        spark.catalog.clearCache()
+    assert not stray, stray
+    assert n == len(held) == 5
